@@ -63,7 +63,7 @@ def _time_queries(names: list[str] | None, sf_dir: str) -> dict[str, float]:
     The returned dict carries one reserved key, ``_calib`` — the host
     sentinel (:func:`_calibrate`) timed in this same JVM."""
     from pybabe_spark.session import get_spark
-    from pybabe_spark.queries import all_queries
+    from pybabe_spark.queries import all_queries, memo_groups
 
     spark = get_spark("pybabe_spark-bench")
     spark.sparkContext.setLogLevel("WARN")
@@ -71,6 +71,7 @@ def _time_queries(names: list[str] | None, sf_dir: str) -> dict[str, float]:
     qs = all_queries()
     if names is not None:
         qs = {n: qs[n] for n in names}
+    owners = {group[0] for group in memo_groups()}
     timings: dict[str, float] = {}
 
     # Warm pass at the smallest SF: triggers whole-stage codegen JIT and
@@ -119,41 +120,16 @@ def _time_queries(names: list[str] | None, sf_dir: str) -> dict[str, float]:
         # reports its steady state (min-of-N, like every other key) and
         # the fill cost is its OWN additive line, "_memo_fill_<owner>"
         # (first − best, floored at 0) — same suite total, the two
-        # components separately visible. The memo-REUSING twin
-        # (golden_record) keeps min: reuse IS its steady state.
+        # components separately visible. The memo-REUSING keys (the
+        # rest of each session_memo group) keep min: reuse IS their
+        # steady state.
         timings[name] = round(best, 4)
-        if name in _FIRST_RUN_KEYS:
+        if name in owners:
             timings[f"_memo_fill_{name}"] = round(
                 max(first - best, 0.0), 4
             )
     spark.stop()
     return timings
-
-
-#: queries whose first timed run computes a session-memoized stage that
-#: every later run (and sibling key) reuses
-_FIRST_RUN_KEYS = {
-    "entity_resolution_customers",
-    "kruskal_wallis_lineitem",
-    "jaccard_links_suppliers",
-    "dup_clusters_docs",
-    "item_neighbors_parts",
-}
-
-#: (owner, reuser) pairs that share an in-process memoized stage: the
-#: reuser is pulled adjacent to its owner so both land in the same
-#: chunk/JVM — split across chunks the sharing never happens
-_MEMO_PAIRS = [
-    ("entity_resolution_customers", "golden_record_customers"),
-    ("kruskal_wallis_lineitem", "dunn_test_lineitem"),
-    ("jaccard_links_suppliers", "adamic_adar_suppliers"),
-    # 3-gram minhash candidate stage shared three ways (r13)
-    ("dup_clusters_docs", "near_dedup_best_docs"),
-    ("dup_clusters_docs", "minhash_lsh_shingle3"),
-    # support-2 basket pair core shared three ways (r13)
-    ("item_neighbors_parts", "association_rules_lineitem"),
-    ("item_neighbors_parts", "frequent_pairs_lineitem"),
-]
 
 
 def _run_chunk(out_path: str, names_csv: str) -> None:
@@ -209,16 +185,14 @@ def _gate_and_write_detail(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from pybabe_spark.queries import all_queries
+    from pybabe_spark.queries import all_queries, memo_groups
 
-    all_names = list(all_queries())
-    # keys that share an in-process memoized stage must land in the SAME
-    # chunk/JVM or the sharing never happens: pull each memo-reusing key
-    # next to its memo-owning sibling (ER blocking+CC stage, KW rank core)
-    for owner, reuser in _MEMO_PAIRS:
-        if owner in all_names and reuser in all_names:
-            all_names.remove(reuser)
-            all_names.insert(all_names.index(owner) + 1, reuser)
+    # keys that share a session memo must land in the SAME chunk/JVM or
+    # the sharing never happens: each memo group runs back to back at
+    # its owner's place, owner first, and no chunk ends inside a group
+    groups = {group[0]: group for group in memo_groups()}
+    reusers = {k for group in groups.values() for k in group[1:]}
+    units = [groups.get(n, (n,)) for n in all_queries() if n not in reusers]
 
     # JVM isolation (r5 bench-integrity finding): the ~120-query suite in
     # ONE shared JVM drifted +13% on unchanged queries across rounds —
@@ -234,23 +208,12 @@ def main() -> None:
         import subprocess
         import tempfile
 
-        chunks = [
-            all_names[lo:lo + chunk_size]
-            for lo in range(0, len(all_names), chunk_size)
-        ]
-        # a memo pair straddling a chunk boundary still loses the
-        # sharing — snap the reuser into the owner's chunk
-        for owner, reuser in _MEMO_PAIRS:
-            for ch in chunks:
-                if owner in ch and reuser not in ch:
-                    for other in chunks:
-                        if reuser in other:
-                            other.remove(reuser)
-                            ch.insert(ch.index(owner) + 1, reuser)
-                            break
+        chunks = [[]]
+        for unit in units:
+            if len(chunks[-1]) >= chunk_size:
+                chunks.append([])
+            chunks[-1].extend(unit)
         for lo, chunk in enumerate(chunks):
-            if not chunk:
-                continue
             with tempfile.NamedTemporaryFile(
                 suffix=".json", delete=False
             ) as tf:
@@ -276,7 +239,7 @@ def main() -> None:
                 if os.path.exists(out_path):
                     os.unlink(out_path)
     else:
-        timings = _time_queries(None, sf_dir)
+        timings = _time_queries([n for unit in units for n in unit], sf_dir)
     # peel the reserved per-chunk host sentinels out of the query map:
     # in fork mode every chunk's partial carried "_calib" and update()
     # kept only the last, so chunk runners rename theirs (below) before

@@ -210,6 +210,7 @@ def funnel(
     # caches the source lineage re-derives per consumer (measured 7×
     # on 3 steps)
     events = events.select(user_col, type_col, ts_col).persist()
+    cached = [events]
     frontier = None
     prev_t = None
     counts = []
@@ -227,9 +228,13 @@ def funnel(
         frontier = f.groupBy(user_col).agg(
             F.min(ts_col).alias(prev_t)
         ).persist()
+        cached.append(frontier)
         # bounded action: a 1-row count of the persisted frontier (the
         # fill is work the next step's join needed anyway)
         counts.append(frontier.count())
+    # the result is a VALUES literal: nothing reads these caches again
+    for df in cached:
+        df.unpersist()
     u0 = counts[0]
     rows = [
         (

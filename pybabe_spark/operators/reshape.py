@@ -132,15 +132,15 @@ def transpose(df: DataFrame, row_limit: int = 10_000) -> DataFrame:
     collect: NULLs stay NULL (not the text 'None'/'nan'), and integers
     never pick up pandas' NaN-induced float repr ('1.0' for 1).
     """
-    n = df.limit(row_limit + 1).count()
-    if n > row_limit:
-        raise ValueError(f"transpose is driver-side; refusing > {row_limit} rows")
     sel = [
         F.col(c).cast("string").alias(c) for c in df.columns if c != INGEST_ID
     ]
     if INGEST_ID in df.columns:
         sel.append(F.col(INGEST_ID))
-    pdf = df.select(*sel).toPandas()
+    # one job: collect limit+1 rows and check the overflow sentinel
+    pdf = df.select(*sel).limit(row_limit + 1).toPandas()
+    if len(pdf) > row_limit:
+        raise ValueError(f"transpose is driver-side; refusing > {row_limit} rows")
     if INGEST_ID in pdf.columns:
         pdf = pdf.sort_values(INGEST_ID).drop(columns=[INGEST_ID])
     key_col = pdf.columns[0]

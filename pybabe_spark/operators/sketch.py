@@ -1089,31 +1089,32 @@ def weighted_quantiles(
     p_ppms = [int(round(float(p) * 1_000_000)) for p in probs]
     if any(p < 0 or p > 1_000_000 for p in p_ppms):
         raise ValueError("weighted_quantiles: probs must be in [0, 1]")
-    from pybabe_spark.operators._util import attach_scalars, lazy_persist
+    from pybabe_spark.operators._util import attach_scalars
 
     keys = [by] if by else []
     cv = (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
     cw = (F.col(weight_col).cast("decimal(18,6)") * 1_000_000).cast(
         "bigint"
     )
-    base = lazy_persist(
-        # feeds the range agg AND the bucketed path — persist keeps the
-        # source scan + agg single-execution (lazy, no job); tracked so
-        # unpersist_tracked() can release it in a long session
-        df.filter(F.col(col).isNotNull() & (F.col(weight_col) > 0))
-        .select(*keys, cv.alias("__v"), cw.alias("__w"))
-        .groupBy(*keys, "__v")
-        .agg(F.sum(F.col("__w").cast("decimal(38,0)")).alias("__w"))
+    rows = df.filter(F.col(col).isNotNull() & (F.col(weight_col) > 0)).select(
+        *keys, cv.alias("__v"), cw.alias("__w")
+    )
+    # the (group, value) grain is read once, by the target-cell dig
+    # below; the range and the cell totals come from the rows. Nothing
+    # is persisted past the caller's action, and an uncached grain read
+    # twice in one plan would run twice: the dig's join infers an
+    # isnotnull(__b) filter, so Spark cannot reuse the grain's exchange
+    base = rows.groupBy(*keys, "__v").agg(
+        F.sum(F.col("__w").cast("decimal(38,0)")).alias("__w")
     )
     # r13: the 1-row global range collects driver-side and re-enters
     # as exact bigint literals — removes the BroadcastNestedLoopJoin
-    # attach and the duplicated grain subtree under the range branch
-    # (one bounded action; the cache fill it triggers was paid by the
-    # first action anyway). A FULL bounded-collect of the target/pick
-    # tables was A/B-tested and rejected: the in-plan broadcast builds
-    # execute concurrently under AQE, so serializing them into
-    # driver actions was a wash at best (1.32 → 1.50 s measured).
-    rng_row = base.agg(
+    # attach and the duplicated grain subtree under the range branch.
+    # A FULL bounded-collect of the target/pick tables was A/B-tested
+    # and rejected: the in-plan broadcast builds execute concurrently
+    # under AQE, so serializing them into driver actions was a wash at
+    # best (1.32 → 1.50 s measured).
+    rng_row = rows.agg(
         F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
     ).collect()[0]
     lo, hi = rng_row["__lo"], rng_row["__hi"]
@@ -1132,16 +1133,16 @@ def weighted_quantiles(
         )
     # equal-width cell of the GLOBAL range, in [0, buckets-1];
     # decimal math — (v - lo) * buckets can overflow bigint cents
-    j = base.withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
-            f" * {buckets} div (CAST({hi} AS BIGINT)"
-            f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
-        ),
+    cell = F.expr(
+        f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
+        f" * {buckets} div (CAST({hi} AS BIGINT)"
+        f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
     )
-    btot = j.groupBy(*keys, "__b").agg(
-        F.sum("__w").cast("decimal(38,0)").alias("__bt")
+    j = base.withColumn("__b", cell)
+    btot = rows.groupBy(*keys, cell.alias("__b")).agg(
+        F.sum(F.col("__w").cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("__bt")
     )
     zero = F.lit(0).cast("decimal(38,0)")
     if keys:
@@ -3651,6 +3652,7 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
     ).collect()[0]
     lo, hi = rng["__lo"], rng["__hi"]
     if lo is None:
+        cnt.unpersist()
         return []
     b_expr = F.expr(
         f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
@@ -3683,7 +3685,7 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
         n_v.alias("__nv"),
     )
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    return enriched.groupBy("__g").agg(
+    rows = enriched.groupBy("__g").agg(
         F.sum("__c").alias("__ng"),
         F.sum(d(F.col("__c")) * F.col("__r2"))
         .cast("decimal(38,0)")
@@ -3698,6 +3700,8 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
         .cast("decimal(38,0)")
         .alias("__ties"),
     ).collect()
+    cnt.unpersist()
+    return rows
 
 
 def _kw_tie_sum(vtot: DataFrame) -> DataFrame:
@@ -7328,6 +7332,7 @@ def gesd_outliers(
         .unionByName(grain.orderBy(F.col("__v").asc()).limit(k))
         .collect()
     )
+    grain.unpersist()  # the rounds run driver-side from here on
     cand = {int(r["__v"]): int(r["__c"]) for r in ext}
     rows: list[tuple] = []
     if tot["__n"] is not None:
@@ -8271,8 +8276,9 @@ def jarque_bera_sql(
 
 #: bounded-collect caps for the jonckheere driver-side finish: the
 #: (group, value) grain collects when it fits these (limit-proved
-#: action); a bigger grain keeps the in-plan path, whose cache the
-#: probe collect already filled
+#: action); a bigger grain keeps the in-plan path over the cached
+#: grain, which the probe filled only partly (CollectLimit stops at
+#: the partitions it needed)
 _JT_MAX_CELLS = 16384
 _JT_MAX_GROUPS = 256
 
@@ -8426,13 +8432,16 @@ def jonckheere_terpstra(
     # says DISCRETE/bucketed values), ONE limit-proved bounded collect
     # replaces the 18-local-job in-plan assembly (grid + window + grain
     # join + five side aggregates) with exact driver arithmetic and a
-    # VALUES-literal 1-row result. A bigger grain — or a pathological
-    # one (NULL group/value from a failed cast) — keeps the in-plan
-    # path below, whose cache the probe collect has already filled.
+    # VALUES-literal 1-row result, and the grain cache is released. A
+    # bigger grain — or a pathological one (NULL group/value from a
+    # failed cast) — keeps the in-plan path below over the cache. The
+    # probe filled only the partitions CollectLimit scanned, usually
+    # not all of them on this path, so the first action fills the rest.
     probe = cnts.limit(_JT_MAX_CELLS + 1).collect()
     if len(probe) <= _JT_MAX_CELLS and all(
         r["__g"] is not None and r["__v"] is not None for r in probe
     ) and len({r["__g"] for r in probe}) <= _JT_MAX_GROUPS:
+        cnts.unpersist()
         return _jt_finish_local(df.sparkSession, probe, z_crit)
     groups = cnts.groupBy("__g").agg(
         F.sum(d(F.col("__c"))).cast("decimal(38,0)").alias("__u")

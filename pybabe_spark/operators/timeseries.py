@@ -1209,7 +1209,9 @@ def seasonal_backtest(
     evaluation window — the standard MASE comparability rule). Row
     seasonality assumes a regular series: compose with
     :func:`gap_fill` first for time-based seasons. Keys with no
-    evaluation rows or a zero naive denominator report NULL mase.
+    evaluation rows or a zero naive denominator report NULL mase and
+    ``seasonal_better`` FALSE: the flag is never NULL, because a NULL
+    boolean reaches pandas as None from Spark but as NaN from DuckDB.
     NULL values are excluded before ordering.
 
     Scale shape: one key-partitioned window pass carrying both lags +
@@ -1257,7 +1259,7 @@ def seasonal_backtest(
         (F.col("__sn").cast("double") / 100).alias("sae_naive"),
         ppm.alias("mase_ppm"),
         (ppm.cast("double") / 1e6).alias("mase"),
-        (ppm < 1_000_000).alias("seasonal_better"),
+        F.coalesce(ppm < 1_000_000, F.lit(False)).alias("seasonal_better"),
     )
 
 
@@ -1299,9 +1301,9 @@ def seasonal_backtest_sql(
            CASE WHEN n_eval > 0 AND sn <> 0 THEN
              CAST((1000000::HUGEINT * ss) // sn AS BIGINT) / 1e6
            END AS mase,
-           CASE WHEN n_eval > 0 AND sn <> 0 THEN
+           COALESCE(CASE WHEN n_eval > 0 AND sn <> 0 THEN
              CAST((1000000::HUGEINT * ss) // sn AS BIGINT) < 1000000
-           END AS seasonal_better
+           END, FALSE) AS seasonal_better
     FROM agg
     """
 

@@ -16,6 +16,8 @@ Each entry exercises one operator from SURVEY §2 on the shared testdata
 
 from __future__ import annotations
 
+import functools
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +63,51 @@ def register(name: str, sql: str | None):
         REGISTRY[name] = (fn, sql)
         return fn
     return deco
+
+
+#: memoized builder -> registry keys that share it, owner first
+SESSION_MEMOS: dict[Callable, tuple[str, ...]] = {}
+
+
+def session_memo(users: tuple[str, ...]):
+    """Share one builder ``f(spark, sf_dir)`` across a session's queries.
+
+    The result is computed once per session and data directory and
+    reused by every key in ``users`` (owner first: the key whose first
+    run pays the fill). Plan fingerprints can't see file CONTENT, so the
+    cache is scoped to one session, where the dataset is immutable. It
+    is keyed by the SESSION OBJECT through weak references, not by
+    id()/app.id strings: an id() can be reused after its session is
+    collected, which could hand a stale pinned plan to a NEW session,
+    while a weak key's entries vanish with the session. ``sf_dir`` is
+    keyed exactly as passed, never resolved, so a fresh link to the
+    same data is a miss. Session doubles that cannot be weak-referenced
+    build on every call. Each builder still chooses how its result is
+    stored (lazy checkpoint, lazy persist, VALUES literals)."""
+
+    def deco(build):
+        memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+        @functools.wraps(build)
+        def cached(spark, sf_dir):
+            try:
+                per_session = memo.setdefault(spark, {})
+            except TypeError:
+                return build(spark, sf_dir)
+            if sf_dir not in per_session:
+                per_session[sf_dir] = build(spark, sf_dir)
+            return per_session[sf_dir]
+
+        cached.memo = memo
+        SESSION_MEMOS[cached] = tuple(users)
+        return cached
+    return deco
+
+
+def memo_groups() -> list[tuple[str, ...]]:
+    """Every session memo's ``users`` tuple, owner first."""
+    _load_extensions()
+    return list(SESSION_MEMOS.values())
 
 
 def _dec(col, scale: int = 6):

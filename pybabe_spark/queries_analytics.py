@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pybabe_spark.queries import register
+from pybabe_spark.queries import register, session_memo
 from pybabe_spark.sources.io import read_table
 
 
@@ -1234,38 +1234,17 @@ def q_entity_resolution(spark, sf_dir):
     return _er_clusters(spark, sf_dir)
 
 
-#: session → {sf_dir: localCheckpoint-pinned cluster table};
 #: entity_resolution_customers and golden_record_customers run the
 #: IDENTICAL fuzzy-blocking + connected-components stage — the two most
 #: expensive bench queries — so it is computed once per session+dataset
-#: and reused (the engine's memoize idiom, in-process flavor: plan
-#: fingerprints can't see file CONTENT, so the cache is scoped to one
-#: session where the dataset is immutable). Keyed by a
-#: WeakKeyDictionary on the SESSION OBJECT, not id()/app.id strings:
-#: id() values can be reused after the original session is GC'd, which
-#: could hand a stale checkpoint-pinned plan to a NEW session — weak
-#: keys make a dead session's entries vanish with the session.
-import weakref as _weakref
-
-_ER_CLUSTERS_MEMO: "_weakref.WeakKeyDictionary" = (
-    _weakref.WeakKeyDictionary()
+#: and pinned by a lazy localCheckpoint.
+@session_memo(
+    users=("entity_resolution_customers", "golden_record_customers")
 )
-
-
 def _er_clusters(spark, sf_dir):
     from pybabe_spark.operators.fuzzy import fuzzy_connectivity_pairs
     from pybabe_spark.operators.graph import dup_clusters
 
-    try:
-        per_session = _ER_CLUSTERS_MEMO.get(spark)
-        if per_session is None:
-            per_session = {}
-            _ER_CLUSTERS_MEMO[spark] = per_session
-    except TypeError:  # non-weakref-able session double in tests
-        per_session = {}
-    hit = per_session.get(sf_dir)
-    if hit is not None:
-        return hit
     cust = read_table(spark, sf_dir, "customer")
     # star-reduced edge set: provably identical components to the full
     # fuzzy_pairs graph (positional buckets are cliques — see
@@ -1277,7 +1256,6 @@ def _er_clusters(spark, sf_dir):
         cust, pairs, id_col="c_custkey", src="id1", dst="id2"
     ).localCheckpoint(eager=False)  # lazy: construction stays job-free,
     # the first action pins the result for every later consumer
-    per_session[sf_dir] = clusters
     return clusters
 
 
@@ -1596,39 +1574,20 @@ def _supplier_edges(spark, sf_dir, mod: int = 7):
     )
 
 
-#: session → {(sf_dir, mod): localCheckpoint-pinned canonical edge
-#: table} for the sampled supplier co-occurrence graph —
+#: Canonical supplier co-occurrence edges of the sampled graph —
 #: jaccard_links_suppliers and adamic_adar_suppliers are sibling link
 #: predictors over the IDENTICAL mod-63 edge set, and the lineitem
 #: order-basket self-join that builds it is the dominant shared stage
 #: (~3 s at sf0.1 vs sub-second wedge work on the ~19k edges that come
-#: out). The _er_clusters idiom: weak session keys, lazy checkpoint —
-#: construction stays job-free, the first consumer's action pins the
-#: blocks, every later consumer reads them for free.
-_SUPPLIER_EDGE_MEMO: "_weakref.WeakKeyDictionary" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _supplier_canonical_edges(spark, sf_dir, mod: int = 63):
-    """Canonical (id_a < id_b, distinct) supplier co-occurrence edges,
-    pinned per session+dataset+sample. Canonicalization here matches
-    the operators' own (least/greatest + distinct) rule, which is
-    idempotent — the operators re-apply it to the pinned table at
-    ~19k-row cost, so semantics are bit-identical to the unshared
-    path."""
-    try:
-        per_session = _SUPPLIER_EDGE_MEMO.get(spark)
-        if per_session is None:
-            per_session = {}
-            _SUPPLIER_EDGE_MEMO[spark] = per_session
-    except TypeError:  # non-weakref-able session double in tests
-        per_session = {}
-    key = (sf_dir, mod)
-    hit = per_session.get(key)
-    if hit is not None:
-        return hit
-    raw = _supplier_edges(spark, sf_dir, mod=mod)
+#: out).
+@session_memo(users=("jaccard_links_suppliers", "adamic_adar_suppliers"))
+def _supplier_canonical_edges(spark, sf_dir):
+    """Canonical (id_a < id_b, distinct) supplier co-occurrence edges
+    of the mod-63 sample. Canonicalization here matches the operators'
+    own (least/greatest + distinct) rule, which is idempotent — the
+    operators re-apply it to the cached table at ~19k-row cost, so
+    semantics are bit-identical to the unshared path."""
+    raw = _supplier_edges(spark, sf_dir, mod=63)
     e = (
         raw.select(
             F.least(F.col("id_a"), F.col("id_b")).alias("id_a"),
@@ -1650,40 +1609,25 @@ def _supplier_canonical_edges(spark, sf_dir, mod: int = 63):
     # stages 1-task until their own shuffles.
     from pybabe_spark.operators._util import lazy_persist
 
-    e = lazy_persist(e.coalesce(1))
-    per_session[key] = e
-    return e
+    return lazy_persist(e.coalesce(1))
 
 
-#: session → {sf_dir: (pairs, items, baskets) localCheckpoint-pinned
-#: basket-pair core at (l_orderkey, l_partkey, min_support=2)} —
-#: frequent_pairs_lineitem, association_rules_lineitem and
-#: item_neighbors_parts all aggregate the IDENTICAL support-pruned
-#: within-order pair table; the _er_clusters idiom computes it once
-#: per session+dataset.
-_BASKET_CORE_MEMO: "_weakref.WeakKeyDictionary" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+#: (pairs, items, baskets) basket-pair core at (l_orderkey, l_partkey,
+#: min_support=2) — frequent_pairs_lineitem, association_rules_lineitem
+#: and item_neighbors_parts all aggregate the IDENTICAL support-pruned
+#: within-order pair table.
+@session_memo(users=(
+    "item_neighbors_parts", "frequent_pairs_lineitem",
+    "association_rules_lineitem",
+))
 def _basket_core(spark, sf_dir):
     from pybabe_spark.operators.collocations import basket_pair_core
 
-    try:
-        per_session = _BASKET_CORE_MEMO.get(spark)
-        if per_session is None:
-            per_session = {}
-            _BASKET_CORE_MEMO[spark] = per_session
-    except TypeError:  # non-weakref-able session double in tests
-        per_session = {}
-    hit = per_session.get(sf_dir)
-    if hit is not None:
-        return hit
     li = read_table(spark, sf_dir, "lineitem")
     pairs, items, baskets = basket_pair_core(
         li, "l_orderkey", "l_partkey", 2
     )
-    core = (
+    return (
         pairs.localCheckpoint(eager=False),
         items.localCheckpoint(eager=False),
         # NOT checkpointed: a checkpoint would erase the grouping-key-
@@ -1692,8 +1636,6 @@ def _basket_core(spark, sf_dir):
         # cheap pass over the persisted (b, i) projection
         baskets,
     )
-    per_session[sf_dir] = core
-    return core
 
 
 def _adamic_adar_sql():
@@ -1725,7 +1667,7 @@ def q_adamic_adar(spark, sf_dir):
     the identical graph)."""
     from pybabe_spark.operators.graph import adamic_adar
 
-    edges = _supplier_canonical_edges(spark, sf_dir, mod=63)
+    edges = _supplier_canonical_edges(spark, sf_dir)
     return adamic_adar(edges, max_degree=256, top_n=100)
 
 
@@ -1751,7 +1693,7 @@ def q_jaccard_links(spark, sf_dir):
     (the lineitem basket self-join is the dominant shared stage)."""
     from pybabe_spark.operators.graph import jaccard_link_prediction
 
-    edges = _supplier_canonical_edges(spark, sf_dir, mod=63)
+    edges = _supplier_canonical_edges(spark, sf_dir)
     return jaccard_link_prediction(edges, max_degree=256, top_n=100)
 
 
@@ -3904,32 +3846,15 @@ def q_kruskal(spark, sf_dir):
     )
 
 
-#: session → {sf_dir: localCheckpoint-pinned (per_g, vtot) pair} for
-#: the l_returnflag/l_extendedprice doubled-midrank grain —
-#: kruskal_wallis_lineitem and dunn_test_lineitem are the omnibus test
-#: and its post-hoc on the IDENTICAL rank machinery (sketch.py::
-#: _kw_rank_sums), so the rank stage is computed once per
-#: session+dataset and reused, the _er_clusters idiom (weak session
-#: keys: dead sessions drop their pinned plans with themselves).
-_KW_CORE_MEMO: "_weakref.WeakKeyDictionary" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+#: (per_g, ties) rank core for the l_returnflag/l_extendedprice
+#: doubled-midrank grain — kruskal_wallis_lineitem and
+#: dunn_test_lineitem are the omnibus test and its post-hoc on the
+#: IDENTICAL rank machinery (sketch.py::_kw_rank_sums).
+@session_memo(users=("kruskal_wallis_lineitem", "dunn_test_lineitem"))
 def _kw_core(spark, sf_dir):
     from pybabe_spark.operators._util import local_rows_df
     from pybabe_spark.operators.sketch import _kw_core_rows
 
-    try:
-        per_session = _KW_CORE_MEMO.get(spark)
-        if per_session is None:
-            per_session = {}
-            _KW_CORE_MEMO[spark] = per_session
-    except TypeError:  # non-weakref-able session double in tests
-        per_session = {}
-    hit = per_session.get(sf_dir)
-    if hit is not None:
-        return hit
     li = read_table(spark, sf_dir, "lineitem")
     # THREE bounded driver actions (1-row range, ≤1024-cell totals, ≤k
     # group rows — sketch.py::_kw_core_rows): the r13 optimization pass
@@ -3956,9 +3881,7 @@ def _kw_core(spark, sf_dir):
         spark, pg_rows, "__g string, __ng bigint, __rs2 decimal(38,0)"
     )
     ties_local = local_rows_df(spark, ties_rows, "__ties decimal(38,0)")
-    core = (pg_local, ties_local)
-    per_session[sf_dir] = core
-    return core
+    return (pg_local, ties_local)
 
 
 _TREND_SCORES = {

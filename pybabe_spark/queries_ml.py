@@ -29,7 +29,7 @@ from pybabe_spark.operators.similarity import (
     ann_lsh,
     embedding_neardup_pairs,
 )
-from pybabe_spark.queries import register
+from pybabe_spark.queries import register, session_memo
 from pybabe_spark.sources.io import read_table
 
 # ---------------------------------------------------------------------------
@@ -202,37 +202,19 @@ ELSE [text] END
 """
 
 
-#: session → {sf_dir: localCheckpoint-pinned 3-gram MinHash candidate
-#: pairs (num_hashes=16, bands=4)} — minhash_lsh_shingle3,
-#: dup_clusters_docs and near_dedup_best_docs all build the IDENTICAL
-#: candidate stage (shingle → minhash → band buckets → pair join →
-#: verify) over the same corpus; the _er_clusters idiom computes it
-#: once per session+dataset.
-import weakref as _weakref
-
-_MINHASH3_PAIRS_MEMO: "_weakref.WeakKeyDictionary" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
+#: 3-gram MinHash candidate pairs (num_hashes=16, bands=4) —
+#: minhash_lsh_shingle3, dup_clusters_docs and near_dedup_best_docs all
+#: build the IDENTICAL candidate stage (shingle → minhash → band buckets
+#: → pair join → verify) over the same corpus.
+@session_memo(users=(
+    "dup_clusters_docs", "minhash_lsh_shingle3", "near_dedup_best_docs",
+))
 def _minhash3_pairs(spark, sf_dir):
-    try:
-        per_session = _MINHASH3_PAIRS_MEMO.get(spark)
-        if per_session is None:
-            per_session = {}
-            _MINHASH3_PAIRS_MEMO[spark] = per_session
-    except TypeError:  # non-weakref-able session double in tests
-        per_session = {}
-    hit = per_session.get(sf_dir)
-    if hit is not None:
-        return hit
     docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
+    return minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=16, bands=4, shingle_n=3
     ).localCheckpoint(eager=False)  # lazy: construction stays
     # job-free, the first consumer's action pins the pair table
-    per_session[sf_dir] = pairs
-    return pairs
 
 
 @register("minhash_lsh_shingle3", _minhash_shingle3_sql(16, 4))

@@ -959,10 +959,10 @@ def _push_driver_side(df: DataFrame, filename: str, fmt: str, row_limit: int = 1
     pybabe/format_xlsx.py:16-31. Guarded by a row limit because these
     are driver-local by nature (SURVEY §7.3).
     """
-    n = df.limit(row_limit + 1).count()
-    if n > row_limit:
+    # one job: collect limit+1 rows and check the overflow sentinel
+    pdf = df.limit(row_limit + 1).toPandas()
+    if len(pdf) > row_limit:
         raise ValueError(f"{fmt} push is driver-side; refusing > {row_limit} rows")
-    pdf = df.toPandas()
     if fmt == "html":
         pdf.to_html(filename, index=False)
     else:

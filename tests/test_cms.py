@@ -539,23 +539,20 @@ def test_mutual_information_hand_checked(spark):
     assert r4["n"] == 0 and r4["mi"] is None and r4["nmi"] is None
 
 
-def test_weighted_quantiles_persist_is_tracked_and_releasable(spark):
-    """The lazy persist inside weighted_quantiles registers with the
-    shared tracker so long sessions have a release path (r9 advisory:
-    cached blocks accumulated with no unpersist)."""
+def test_lazy_persist_is_tracked_and_releasable(spark):
+    """An operator's lazy persist registers with the shared tracker so
+    long sessions have a release path (r9 advisory: cached blocks
+    accumulated with no unpersist)."""
     from pybabe_spark.operators._util import (
         _TRACKED_PERSISTS,
+        lazy_persist,
         unpersist_tracked,
     )
-    from pybabe_spark.operators.sketch import weighted_quantiles
 
     unpersist_tracked()  # drain anything earlier tests left behind
     before = len(_TRACKED_PERSISTS)
-    df = spark.createDataFrame(
-        [(float(i), 1.0) for i in range(1, 11)], "v double, w double"
-    )
-    out = weighted_quantiles(df, "v", "w", probs=[0.5])
-    assert out.count() == 1
+    out = lazy_persist(spark.range(10))
+    assert out.count() == 10
     assert len(_TRACKED_PERSISTS) > before
     assert unpersist_tracked() >= 1
     assert len(_TRACKED_PERSISTS) == 0

@@ -609,6 +609,33 @@ def test_transpose_all_null_row(spark):
     assert (row["r1"], row["r2"]) == (None, "5")
 
 
+def test_transpose_refuses_one_row_over_the_limit(spark):
+    from pybabe_spark.operators.reshape import transpose
+
+    df = spark.createDataFrame(
+        [("r1", "1"), ("r2", "2"), ("r3", "3")], "key string, n string"
+    )
+    with pytest.raises(
+        ValueError, match=r"^transpose is driver-side; refusing > 2 rows$"
+    ):
+        transpose(df, row_limit=2)
+    assert transpose(df, row_limit=3).columns == ["field", "r1", "r2", "r3"]
+
+
+def test_driver_side_push_refuses_one_row_over_the_limit(spark, tmp_path):
+    from pybabe_spark.sources.io import _push_driver_side
+
+    df = spark.createDataFrame([(1,), (2,), (3,)], "n bigint")
+    target = tmp_path / "out.html"
+    with pytest.raises(
+        ValueError, match=r"^html push is driver-side; refusing > 2 rows$"
+    ):
+        _push_driver_side(df, str(target), "html", row_limit=2)
+    assert not target.exists()
+    _push_driver_side(df, str(target), "html", row_limit=3)
+    assert target.read_text().count("<tr") == 4  # header + 3 rows
+
+
 @pytest.mark.deep
 def test_normalize_text_golden(spark):
     """Casing, punctuation, and whitespace runs collapse to the

@@ -409,6 +409,33 @@ def test_seasonal_backtest_short_and_constant(spark):
     assert got[2][0] is None and got[2][1] == 1
 
 
+def test_seasonal_backtest_events_one_event_matches_oracle(spark, tmp_path):
+    """The smallest input with no evaluation row: one event. mase is
+    NULL and seasonal_better FALSE on both engines — a NULL flag would
+    reach pandas as None from Spark but as NaN from DuckDB."""
+    import duckdb
+
+    from pybabe_spark.queries import REGISTRY, all_queries
+    from tests.compare import assert_frames_match
+
+    all_queries()
+    fn, sql = REGISTRY["seasonal_backtest_events"]
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT 1::BIGINT AS event_id,"
+        " TIMESTAMP '2024-01-06 16:13:43' AS ts, 12::BIGINT AS user_id,"
+        " 'signup' AS event_type, 0.4::DOUBLE AS value, '{}' AS props)"
+        f" TO '{tmp_path / 'events.parquet'}' (FORMAT PARQUET)"
+    )
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    out = fn(spark, str(tmp_path))
+    assert out.collect()[0]["seasonal_better"] is False
+    assert_frames_match(out, con.sql(sql), "seasonal_backtest_events")
+
+
 # -- active_intervals (operators/timeseries.py) -------------------------------
 
 
