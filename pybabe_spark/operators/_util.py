@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from collections.abc import Iterable
+from contextlib import contextmanager
 
 
 def gen_col(columns: Iterable[str], base: str) -> str:
@@ -173,10 +174,35 @@ def lazy_persist(df):
     strong reference is required because the operator-local DataFrame
     dies at function return and a weakref would never survive to the
     cleanup call.
+
+    The rule: use this only for a cache that the RETURNED lazy plan
+    reads. An eager finish — bounded actions at construction, then a
+    VALUES-literal result — caches through :func:`pinned` instead,
+    which releases on return.
     """
     out = df.persist()
     _TRACKED_PERSISTS.append(out)
     return out
+
+
+@contextmanager
+def pinned():
+    """Cache scope of an eager finish: ``with pinned() as pin: g =
+    pin(df)`` persists ``df`` and returns it; every pinned frame is
+    unpersisted when the block exits — on return and on exceptions
+    alike. Nothing is registered in the :func:`lazy_persist` tracker,
+    so no handle outlives the block."""
+    held = []
+
+    def pin(df):
+        held.append(df.persist())
+        return held[-1]
+
+    try:
+        yield pin
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def unpersist_tracked() -> int:

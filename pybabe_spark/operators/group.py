@@ -202,39 +202,35 @@ def funnel(
     """
     if not steps:
         raise ValueError("funnel: steps must be non-empty")
-    from pybabe_spark.operators._util import local_rows_df
+    from pybabe_spark.operators._util import local_rows_df, pinned
 
-    # lazy persists (no construction job until the step counts below):
+    frontier = None
+    prev_t = None
+    counts = []
     # the event projection is filtered once per step, and each frontier
     # feeds BOTH the next step's join and its own count — without the
     # caches the source lineage re-derives per consumer (measured 7×
     # on 3 steps)
-    events = events.select(user_col, type_col, ts_col).persist()
-    cached = [events]
-    frontier = None
-    prev_t = None
-    counts = []
-    for i, s in enumerate(steps):
-        f = events.filter(F.col(type_col) == s)
-        if frontier is not None:
-            cond = F.col(ts_col) > F.col(prev_t)
-            if within is not None:
-                cond = cond & (
-                    F.col(ts_col)
-                    <= F.col(prev_t) + F.expr(f"INTERVAL {int(within)} SECOND")
-                )
-            f = f.join(frontier, user_col).filter(cond)
-        prev_t = f"__t{i}"
-        frontier = f.groupBy(user_col).agg(
-            F.min(ts_col).alias(prev_t)
-        ).persist()
-        cached.append(frontier)
-        # bounded action: a 1-row count of the persisted frontier (the
-        # fill is work the next step's join needed anyway)
-        counts.append(frontier.count())
-    # the result is a VALUES literal: nothing reads these caches again
-    for df in cached:
-        df.unpersist()
+    with pinned() as pin:
+        events = pin(events.select(user_col, type_col, ts_col))
+        for i, s in enumerate(steps):
+            f = events.filter(F.col(type_col) == s)
+            if frontier is not None:
+                cond = F.col(ts_col) > F.col(prev_t)
+                if within is not None:
+                    cond = cond & (
+                        F.col(ts_col)
+                        <= F.col(prev_t)
+                        + F.expr(f"INTERVAL {int(within)} SECOND")
+                    )
+                f = f.join(frontier, user_col).filter(cond)
+            prev_t = f"__t{i}"
+            frontier = pin(
+                f.groupBy(user_col).agg(F.min(ts_col).alias(prev_t))
+            )
+            # bounded action: a 1-row count of the persisted frontier
+            # (the fill is work the next step's join needed anyway)
+            counts.append(frontier.count())
     u0 = counts[0]
     rows = [
         (

@@ -1039,6 +1039,51 @@ def ab_test_sql(
     """
 
 
+def _cell_offsets(btot: DataFrame, keys: "list[str]", buckets: int):
+    """Per-(group, cell) prefix offsets and group totals from a cell-
+    totals table ``(*keys, __b, __bt)``: returns ``(*keys, __b, __off,
+    __bt, __tot)`` with ``__off`` the exclusive prefix of ``__bt``.
+    ≤ ``buckets`` rows per group, so keyed groups use bounded
+    key-partitioned windows over the cell-TOTALS table, never over the
+    data; the global form is a ``limit``-proved prefix self-join plus
+    a 1-row total attach (the ``active_intervals`` bucket-prefix
+    idiom)."""
+    from pybabe_spark.operators._util import attach_scalars
+
+    zero = F.lit(0).cast("decimal(38,0)")
+    if keys:
+        wb = Window.partitionBy(*keys).orderBy(F.col("__b").asc())
+        return btot.select(
+            *keys,
+            "__b",
+            F.coalesce(
+                F.sum("__bt").over(
+                    wb.rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                zero,
+            ).alias("__off"),
+            "__bt",
+            F.sum("__bt")
+            .over(
+                wb.rowsBetween(
+                    Window.unboundedPreceding, Window.unboundedFollowing
+                )
+            )
+            .alias("__tot"),
+        )
+    bounded = btot.limit(buckets)  # boundedness proof for the linter;
+    # the cell id is < buckets by construction, so the limit can never
+    # truncate
+    a, b = bounded.alias("a"), bounded.alias("b")
+    return attach_scalars(
+        a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
+        .groupBy(F.col("a.__b").alias("__b"), F.col("a.__bt").alias("__bt"))
+        .agg(F.coalesce(F.sum("b.__bt"), zero).alias("__off"))
+        .select("__b", "__off", "__bt"),
+        bounded.agg(F.sum("__bt").alias("__tot")),
+    )
+
+
 def weighted_quantiles(
     df: DataFrame,
     col: str,
@@ -1089,8 +1134,6 @@ def weighted_quantiles(
     p_ppms = [int(round(float(p) * 1_000_000)) for p in probs]
     if any(p < 0 or p > 1_000_000 for p in p_ppms):
         raise ValueError("weighted_quantiles: probs must be in [0, 1]")
-    from pybabe_spark.operators._util import attach_scalars
-
     keys = [by] if by else []
     cv = (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
     cw = (F.col(weight_col).cast("decimal(18,6)") * 1_000_000).cast(
@@ -1144,44 +1187,7 @@ def weighted_quantiles(
         .cast("decimal(38,0)")
         .alias("__bt")
     )
-    zero = F.lit(0).cast("decimal(38,0)")
-    if keys:
-        # ≤ buckets rows per group: the exclusive prefix and the group
-        # total are bounded key-partitioned windows over the
-        # cell-TOTALS table, never over the data
-        wb = Window.partitionBy(*keys).orderBy(F.col("__b").asc())
-        offs = btot.select(
-            *keys,
-            "__b",
-            F.coalesce(
-                F.sum("__bt").over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                zero,
-            ).alias("__off"),
-            "__bt",
-            F.sum("__bt")
-            .over(
-                wb.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("__tot"),
-        )
-    else:
-        bounded = btot.limit(buckets)  # boundedness proof for the
-        # linter; the cell id is < buckets by construction, so the
-        # limit can never truncate
-        a, b = bounded.alias("a"), bounded.alias("b")
-        offs = attach_scalars(
-            a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-            .groupBy(
-                F.col("a.__b").alias("__b"), F.col("a.__bt").alias("__bt")
-            )
-            .agg(F.coalesce(F.sum("b.__bt"), zero).alias("__off"))
-            .select("__b", "__off", "__bt"),
-            bounded.agg(F.sum("__bt").alias("__tot")),
-        )
+    offs = _cell_offsets(btot, keys, buckets)
     # TARGET CELL per (group, prob), resolved on the tiny table: the
     # first cell whose inclusive cumulative reaches p·tot — the cell
     # that contains the answer (all earlier cells sit strictly below
@@ -3627,7 +3633,7 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
     BOUNDED by construction (1 row; ≤1024 cells), so they collect
     driver-side and re-enter the plan as exact integer literals /
     a VALUES-literal LocalRelation (``local_rows_df``): action 1 fills
-    the lazy-persisted (value, group) count grain and returns (lo,
+    the pinned (value, group) count grain and returns (lo,
     hi); action 2 reads the pinned grain for the ≤1024 cell totals
     (the Python prefix sum over sorted cells is the same exact integer
     arithmetic as the in-plan bucket-prefix self-join); action 3 runs
@@ -3638,70 +3644,69 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
     rows are value-identical to the rolled core's.
     """
     buckets = 1024
-    from pybabe_spark.operators._util import lazy_persist, local_rows_df
+    from pybabe_spark.operators._util import local_rows_df, pinned
 
     ok = F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     x = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
-    cnt = lazy_persist(
-        df.filter(ok)
-        .groupBy(x.alias("__v"), F.col(group_col).alias("__g"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    rng = cnt.agg(
-        F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
-    ).collect()[0]
-    lo, hi = rng["__lo"], rng["__hi"]
-    if lo is None:
-        cnt.unpersist()
-        return []
-    b_expr = F.expr(
-        f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
-        f" * {buckets} div (CAST({hi} AS BIGINT)"
-        f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
-    )
-    cells = cnt.groupBy(b_expr.alias("__b")).agg(
-        F.sum("__c").alias("__bnv")
-    ).collect()  # ≤ buckets rows: __b < buckets by construction
-    cells.sort(key=lambda r: r["__b"])
-    offs_rows, acc = [], 0
-    for r in cells:
-        offs_rows.append((r["__b"], acc))
-        acc += r["__bnv"]
-    offs = local_rows_df(
-        df.sparkSession, offs_rows, "__b bigint, __off bigint"
-    )
-    j = cnt.withColumn("__b", b_expr).join(F.broadcast(offs), ["__b"])
-    wv = Window.partitionBy("__b").orderBy(F.col("__v").asc())
-    cum_lt = F.coalesce(
-        F.sum("__c").over(wv.rangeBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
-    )
-    n_v = F.sum("__c").over(wv.rangeBetween(0, 0))
-    enriched = j.select(
-        "__v",
-        "__g",
-        "__c",
-        (2 * (F.col("__off") + cum_lt) + n_v + 1).alias("__r2"),
-        n_v.alias("__nv"),
-    )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    rows = enriched.groupBy("__g").agg(
-        F.sum("__c").alias("__ng"),
-        F.sum(d(F.col("__c")) * F.col("__r2"))
-        .cast("decimal(38,0)")
-        .alias("__rs2"),
-        F.coalesce(
-            F.sum(
-                d(F.col("__c"))
-                * (d(F.col("__nv")) * F.col("__nv") - F.lit(1))
-            ),
+    with pinned() as pin:
+        cnt = pin(
+            df.filter(ok)
+            .groupBy(x.alias("__v"), F.col(group_col).alias("__g"))
+            .agg(F.count(F.lit(1)).alias("__c"))
+        )
+        rng = cnt.agg(
+            F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
+        ).collect()[0]
+        lo, hi = rng["__lo"], rng["__hi"]
+        if lo is None:
+            return []
+        b_expr = F.expr(
+            f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
+            f" * {buckets} div (CAST({hi} AS BIGINT)"
+            f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
+        )
+        cells = cnt.groupBy(b_expr.alias("__b")).agg(
+            F.sum("__c").alias("__bnv")
+        ).collect()  # ≤ buckets rows: __b < buckets by construction
+        cells.sort(key=lambda r: r["__b"])
+        offs_rows, acc = [], 0
+        for r in cells:
+            offs_rows.append((r["__b"], acc))
+            acc += r["__bnv"]
+        offs = local_rows_df(
+            df.sparkSession, offs_rows, "__b bigint, __off bigint"
+        )
+        j = cnt.withColumn("__b", b_expr).join(F.broadcast(offs), ["__b"])
+        wv = Window.partitionBy("__b").orderBy(F.col("__v").asc())
+        cum_lt = F.coalesce(
+            F.sum("__c").over(wv.rangeBetween(Window.unboundedPreceding, -1)),
             F.lit(0),
         )
-        .cast("decimal(38,0)")
-        .alias("__ties"),
-    ).collect()
-    cnt.unpersist()
-    return rows
+        n_v = F.sum("__c").over(wv.rangeBetween(0, 0))
+        enriched = j.select(
+            "__v",
+            "__g",
+            "__c",
+            (2 * (F.col("__off") + cum_lt) + n_v + 1).alias("__r2"),
+            n_v.alias("__nv"),
+        )
+        d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+        rows = enriched.groupBy("__g").agg(
+            F.sum("__c").alias("__ng"),
+            F.sum(d(F.col("__c")) * F.col("__r2"))
+            .cast("decimal(38,0)")
+            .alias("__rs2"),
+            F.coalesce(
+                F.sum(
+                    d(F.col("__c"))
+                    * (d(F.col("__nv")) * F.col("__nv") - F.lit(1))
+                ),
+                F.lit(0),
+            )
+            .cast("decimal(38,0)")
+            .alias("__ties"),
+        ).collect()
+        return rows
 
 
 def _kw_tie_sum(vtot: DataFrame) -> DataFrame:
@@ -6734,94 +6739,95 @@ def wasserstein_1d(
         .groupBy("__v")
         .agg(F.sum("__ca").alias("__ca"), F.sum("__cb").alias("__cb"))
     )
-    from pybabe_spark.operators._util import lazy_persist, local_rows_df
+    from pybabe_spark.operators._util import local_rows_df, pinned
 
-    # the distinct-value grain feeds the head collect, cell totals and
-    # the within-cell walk
-    base = lazy_persist(base)
     spark = df.sparkSession
     out_schema = "n_a bigint, n_b bigint, w1_ppm bigint, w1 double"
-    head = base.agg(
-        F.min("__v").alias("__lo"),
-        F.max("__v").alias("__hi"),
-        F.coalesce(F.sum("__ca"), F.lit(0)).cast("bigint").alias("__na"),
-        F.coalesce(F.sum("__cb"), F.lit(0)).cast("bigint").alias("__nb"),
-    ).collect()[0]
-    na, nb = int(head["__na"]), int(head["__nb"])
-    if head["__lo"] is None:  # empty input: the old 1-row NULL shape
-        return local_rows_df(spark, [(0, 0, None, None)], out_schema)
-    lo, hi = int(head["__lo"]), int(head["__hi"])
-    j = base.withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - {lo}) * {buckets}"
-            f" div (CAST({hi} AS DECIMAL(38,0)) - {lo} + 1) AS BIGINT)"
-        ),
-    )
-    btot = (
-        j.groupBy("__b")
-        .agg(
-            F.sum("__ca").alias("__bca"),
-            F.sum("__cb").alias("__bcb"),
-            F.min("__v").alias("__minv"),
-            F.max("__v").alias("__maxv"),
+    with pinned() as pin:
+        # the distinct-value grain feeds the head collect, cell totals and
+        # the within-cell walk
+        base = pin(base)
+        head = base.agg(
+            F.min("__v").alias("__lo"),
+            F.max("__v").alias("__hi"),
+            F.coalesce(F.sum("__ca"), F.lit(0)).cast("bigint").alias("__na"),
+            F.coalesce(F.sum("__cb"), F.lit(0)).cast("bigint").alias("__nb"),
+        ).collect()[0]
+        na, nb = int(head["__na"]), int(head["__nb"])
+        if head["__lo"] is None:  # empty input: the old 1-row NULL shape
+            return local_rows_df(spark, [(0, 0, None, None)], out_schema)
+        lo, hi = int(head["__lo"]), int(head["__hi"])
+        j = base.withColumn(
+            "__b",
+            F.expr(
+                f"CAST((CAST(__v AS DECIMAL(38,0)) - {lo}) * {buckets}"
+                f" div (CAST({hi} AS DECIMAL(38,0)) - {lo} + 1) AS BIGINT)"
+            ),
         )
-        .limit(buckets)  # __b < buckets by construction — the
-        # collect's boundedness proof, it cannot truncate
-        .collect()
-    )
-    cells = sorted(
-        (int(r["__b"]), int(r["__bca"]), int(r["__bcb"]),
-         int(r["__minv"]), int(r["__maxv"]))
-        for r in btot
-    )
-    # prefix offsets + boundary gap terms: exact Python integers over
-    # the ≤1024 occupied cells
-    offs_rows = []
-    bnum = 0
-    offa = offb = 0
-    prevmax = None
-    for b_, bca, bcb, minv, maxv in cells:
-        offs_rows.append((b_, offa, offb))
-        if prevmax is not None:
-            bnum += abs(offa * nb - offb * na) * (minv - prevmax)
-        offa += bca
-        offb += bcb
-        prevmax = maxv
-    offs = F.broadcast(
-        local_rows_df(
-            spark, offs_rows, "__b bigint, __offa bigint, __offb bigint"
+        btot = (
+            j.groupBy("__b")
+            .agg(
+                F.sum("__ca").alias("__bca"),
+                F.sum("__cb").alias("__bcb"),
+                F.min("__v").alias("__minv"),
+                F.max("__v").alias("__maxv"),
+            )
+            .limit(buckets)  # __b < buckets by construction — the
+            # collect's boundedness proof, it cannot truncate
+            .collect()
         )
-    )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    w = Window.partitionBy("__b").orderBy(F.col("__v").asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    lw = Window.partitionBy("__b").orderBy(F.col("__v").asc())
-    rows = j.join(offs, ["__b"]).select(
-        "__v",
-        (F.col("__offa") + F.sum("__ca").over(w) - F.col("__ca"))
-        .alias("__cpa"),  # cumulative A at the PREVIOUS value
-        (F.col("__offb") + F.sum("__cb").over(w) - F.col("__cb"))
-        .alias("__cpb"),
-        F.lag("__v").over(lw).alias("__pv"),
-    )
-    within_term = F.sum(
-        F.abs(
-            d(F.col("__cpa")) * F.lit(nb) - d(F.col("__cpb")) * F.lit(na)
+        cells = sorted(
+            (int(r["__b"]), int(r["__bca"]), int(r["__bcb"]),
+             int(r["__minv"]), int(r["__maxv"]))
+            for r in btot
         )
-        * (F.col("__v") - F.col("__pv"))
-    ).cast("decimal(38,0)")
-    wrow = (
-        rows.filter(F.col("__pv").isNotNull())
-        .agg(
-            F.coalesce(within_term, F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("__w")
+        # prefix offsets + boundary gap terms: exact Python integers over
+        # the ≤1024 occupied cells
+        offs_rows = []
+        bnum = 0
+        offa = offb = 0
+        prevmax = None
+        for b_, bca, bcb, minv, maxv in cells:
+            offs_rows.append((b_, offa, offb))
+            if prevmax is not None:
+                bnum += abs(offa * nb - offb * na) * (minv - prevmax)
+            offa += bca
+            offb += bcb
+            prevmax = maxv
+        offs = F.broadcast(
+            local_rows_df(
+                spark, offs_rows, "__b bigint, __offa bigint, __offb bigint"
+            )
         )
-        .collect()[0]
-    )
-    num = int(wrow["__w"]) + bnum
+        d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+        w = Window.partitionBy("__b").orderBy(F.col("__v").asc()).rowsBetween(
+            Window.unboundedPreceding, 0
+        )
+        lw = Window.partitionBy("__b").orderBy(F.col("__v").asc())
+        rows = j.join(offs, ["__b"]).select(
+            "__v",
+            (F.col("__offa") + F.sum("__ca").over(w) - F.col("__ca"))
+            .alias("__cpa"),  # cumulative A at the PREVIOUS value
+            (F.col("__offb") + F.sum("__cb").over(w) - F.col("__cb"))
+            .alias("__cpb"),
+            F.lag("__v").over(lw).alias("__pv"),
+        )
+        within_term = F.sum(
+            F.abs(
+                d(F.col("__cpa")) * F.lit(nb) - d(F.col("__cpb")) * F.lit(na)
+            )
+            * (F.col("__v") - F.col("__pv"))
+        ).cast("decimal(38,0)")
+        wrow = (
+            rows.filter(F.col("__pv").isNotNull())
+            .agg(
+                F.coalesce(within_term, F.lit(0))
+                .cast("decimal(38,0)")
+                .alias("__w")
+            )
+            .collect()[0]
+        )
+        num = int(wrow["__w"]) + bnum
     ppm = (10000 * num) // (na * nb) if na > 0 and nb > 0 else None
     w1 = float(ppm) / 1e6 if ppm is not None else None
     return local_rows_df(spark, [(na, nb, ppm, w1)], out_schema)
@@ -6883,153 +6889,6 @@ def wasserstein_1d_sql(
     """
 
 
-def _conformal_collected_finish(base, keys, by, by_typ, cov_ppm, buckets):
-    """Bounded-collect execution of :func:`conformal_threshold` — the
-    weighted_quantiles bounded-collect discipline applied to the count-
-    weighted rank dig: three bounded driver actions, exact literal
-    re-entry, identical integer arithmetic."""
-    from pybabe_spark.operators._util import attach_scalars, local_rows_df
-
-    spark = base.sparkSession
-    zero = F.lit(0).cast("decimal(38,0)")
-    esc = (by or "").replace("`", "``")
-    out_schema = (
-        (f"`{esc}` {by_typ}, " if by else "")
-        + "n bigint, k bigint, threshold double"
-    )
-    rng = base.agg(
-        F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
-    ).collect()[0]
-    lo, hi = rng["__lo"], rng["__hi"]
-    if lo is None:
-        if by:
-            return local_rows_df(spark, [], out_schema)
-        # unkeyed empty input: targets still aggregates the empty offs
-        # table to one all-NULL row in the in-plan shape — reproduce it
-        return local_rows_df(spark, [(None, None, None)], out_schema)
-    j = base.withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
-            f" * {buckets} div (CAST({hi} AS BIGINT)"
-            f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
-        ),
-    )
-    btot = j.groupBy(*keys, "__b").agg(
-        F.sum("__c").cast("decimal(38,0)").alias("__bt")
-    )
-    if keys:
-        wb = Window.partitionBy(*keys).orderBy(F.col("__b").asc())
-        offs = btot.select(
-            *keys,
-            "__b",
-            F.coalesce(
-                F.sum("__bt").over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                zero,
-            ).alias("__off"),
-            "__bt",
-            F.sum("__bt")
-            .over(
-                wb.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("__tot"),
-        )
-    else:
-        bounded = btot.limit(buckets)  # __b < buckets by construction
-        a, b = bounded.alias("a"), bounded.alias("b")
-        offs = attach_scalars(
-            a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-            .groupBy(
-                F.col("a.__b").alias("__b"), F.col("a.__bt").alias("__bt")
-            )
-            .agg(F.coalesce(F.sum("b.__bt"), zero).alias("__off"))
-            .select("__b", "__off", "__bt"),
-            bounded.agg(F.sum("__bt").alias("__tot")),
-        )
-    k_expr = F.expr(
-        f"CAST(((__tot + 1) * {cov_ppm} + 999999) div 1000000"
-        " AS DECIMAL(38,0))"
-    )
-    targets = (
-        offs.withColumn("__k", k_expr)
-        .groupBy(*keys)
-        .agg(
-            F.max("__tot").cast("decimal(38,0)").alias("__tot"),
-            F.max("__k").alias("__k"),
-            F.min(
-                F.when(
-                    F.col("__off") + F.col("__bt") >= F.col("__k"),
-                    F.col("__b"),
-                )
-            ).alias("__tb"),
-            F.min(
-                F.when(
-                    F.col("__off") + F.col("__bt") >= F.col("__k"),
-                    F.col("__off"),
-                )
-            ).alias("__toff"),
-        )
-        .collect()
-    )  # one row per group — the output grain
-    t_rows = [
-        ((r[by],) if by else ())
-        + (r["__tot"], r["__k"], r["__tb"], r["__toff"])
-        for r in targets
-        if r["__tb"] is not None  # k > n: nothing to dig; the group
-        # still reports (n, k, NULL) from the targets row below
-    ]
-    tr = local_rows_df(
-        spark,
-        t_rows,
-        (("__gk " + by_typ + ", ") if by else "")
-        + "__tot decimal(38,0), __k decimal(38,0), __tb bigint,"
-        " __toff decimal(38,0)",
-    )
-    cond = F.col("__b") == F.col("__tb")
-    if by:
-        cond = F.col(by).eqNullSafe(F.col("__gk")) & cond
-    cand = j.join(F.broadcast(tr), cond)
-    w = Window.partitionBy(*keys).orderBy(F.col("__v").asc())
-    cum = cand.withColumn(
-        "__cum",
-        F.col("__toff")
-        + F.sum("__c").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    picked = cum.groupBy(*keys, "__k").agg(
-        F.min(
-            F.when(F.col("__cum") >= F.col("__k"), F.col("__v"))
-        ).alias("__q")
-    ).collect()  # ≤ one row per group
-    qs = {
-        (r[by] if by else None): r["__q"] for r in picked
-    }
-    rows = []
-    for r in targets:
-        g = r[by] if by else None
-        tot, k = r["__tot"], r["__k"]
-        q = qs.get(g)
-        rows.append(
-            ((g,) if by else ())
-            + (
-                None if tot is None else int(tot),
-                None if k is None else int(k),
-                # same IEEE steps the in-plan finish ran: the bigint
-                # cents round to DOUBLE first, THEN divide (q/100 on
-                # Python ints is correctly-rounded rational division —
-                # 1 ulp off the double-then-divide path for |q| > 2^53)
-                (float(q) / 100.0)
-                if (k is not None and tot is not None
-                    and k <= tot and q is not None)
-                else None,
-            )
-        )
-    return local_rows_df(spark, rows, out_schema)
-
-
 def conformal_threshold(
     df: DataFrame,
     score_col: str,
@@ -7060,10 +6919,13 @@ def conformal_threshold(
     target cell's ≤1/buckets slice. No per-group funnel.
 
     EAGER (r13): construction runs three bounded driver actions
-    (range → per-group targets → per-group picks) and returns a
-    VALUES-literal result — calling this triggers cluster jobs and
-    surfaces data errors immediately, not at the caller's first
-    action.
+    (range → per-group targets → per-group picks; all three are
+    output-bounded, so they collect and re-enter as exact literals)
+    and returns a VALUES-literal result — calling this triggers
+    cluster jobs and surfaces data errors immediately, not at the
+    caller's first action. The target and result tables carry the
+    group key in any type: the picks are keyed by target index, and a
+    TIMESTAMP key travels as its exact ``unix_micros``.
     """
     a_ppm = int(round(float(alpha) * 1_000_000))
     if a_ppm <= 0 or a_ppm >= 1_000_000:
@@ -7071,141 +6933,117 @@ def conformal_threshold(
     if buckets < 1:
         raise ValueError("conformal_threshold: buckets must be >= 1")
     cov_ppm = 1_000_000 - a_ppm
-    from pybabe_spark.operators._util import attach_scalars, lazy_persist
+    from pybabe_spark.operators._util import local_or_create_df, pinned
 
+    spark = df.sparkSession
     keys = [by] if by else []
-    cv = (F.col(score_col).cast("decimal(18,2)") * 100).cast("bigint")
-    base = lazy_persist(
-        df.filter(F.col(score_col).isNotNull())
-        .select(*keys, cv.alias("__v"))
-        .groupBy(*keys, "__v")
-        .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("__c"))
-    )
-    # r13 bounded-collect finish — the weighted_quantiles surgery
-    # (_conformal_collected_finish): range, per-group targets and
-    # per-group picks are all output-bounded, so they collect and
-    # re-enter as exact literals (14 in-plan jobs → 3 actions).
     by_typ = df.schema[by].dataType.simpleString() if by else None
-    literal_ok = by is None or by_typ in (
-        "string", "int", "bigint", "smallint", "tinyint", "boolean"
-    ) or (by_typ or "").startswith("decimal")
-    if literal_ok:
-        return _conformal_collected_finish(
-            base, keys, by, by_typ, cov_ppm, buckets
+    micros = by_typ == "timestamp"
+    key_col = F.unix_micros(F.col(by)).alias(by) if micros else by
+    key_typ = "bigint" if micros else by_typ
+    esc = (by or "").replace("`", "``")
+    key_ddl = f"`{esc}` {key_typ}, " if by else ""
+
+    def emit(rows):
+        out = local_or_create_df(
+            spark, rows, key_ddl + "n bigint, k bigint, threshold double"
         )
-    rng = base.agg(F.min("__v").alias("__lo"), F.max("__v").alias("__hi"))
-    j = attach_scalars(base, rng).withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - __lo) * {buckets}"
-            " div (CAST(__hi AS DECIMAL(38,0)) - __lo + 1) AS BIGINT)"
-        ),
-    ).drop("__lo", "__hi")
-    btot = j.groupBy(*keys, "__b").agg(
-        F.sum("__c").cast("decimal(38,0)").alias("__bt")
-    )
-    zero = F.lit(0).cast("decimal(38,0)")
-    if keys:
-        wb = Window.partitionBy(*keys).orderBy(F.col("__b").asc())
-        offs = btot.select(
-            *keys,
+        return out.withColumn(by, F.timestamp_micros(by)) if micros else out
+
+    cv = (F.col(score_col).cast("decimal(18,2)") * 100).cast("bigint")
+    with pinned() as pin:
+        base = pin(
+            df.filter(F.col(score_col).isNotNull())
+            .select(*([key_col] if by else []), cv.alias("__v"))
+            .groupBy(*keys, "__v")
+            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("__c"))
+        )
+        rng = base.agg(
+            F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
+        ).collect()[0]
+        lo, hi = rng["__lo"], rng["__hi"]
+        if lo is None:
+            # unkeyed empty input still reports one all-NULL row
+            return emit([] if by else [(None, None, None)])
+        j = base.withColumn(
             "__b",
-            F.coalesce(
-                F.sum("__bt").over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                zero,
-            ).alias("__off"),
-            "__bt",
-            F.sum("__bt")
-            .over(
-                wb.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
+            F.expr(
+                f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
+                f" * {buckets} div (CAST({hi} AS BIGINT)"
+                f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
+            ),
+        )
+        offs = _cell_offsets(
+            j.groupBy(*keys, "__b").agg(
+                F.sum("__c").cast("decimal(38,0)").alias("__bt")
+            ),
+            keys,
+            buckets,
+        )
+        # k = ceil((n+1)·cov_ppm/1e6), resolved on the tiny cell table
+        k_expr = F.expr(
+            f"CAST(((__tot + 1) * {cov_ppm} + 999999) div 1000000"
+            " AS DECIMAL(38,0))"
+        )
+        reach = F.col("__off") + F.col("__bt") >= F.col("__k")
+        targets = (
+            offs.withColumn("__k", k_expr)
+            .groupBy(*keys)
+            .agg(
+                F.max("__tot").cast("decimal(38,0)").alias("__tot"),
+                F.max("__k").alias("__k"),
+                F.min(F.when(reach, F.col("__b"))).alias("__tb"),
+                F.min(F.when(reach, F.col("__off"))).alias("__toff"),
             )
-            .alias("__tot"),
+            .collect()
+        )  # one row per group — the output grain
+        # k > n: no cell reaches the rank, nothing to dig; the group
+        # still reports (n, k, NULL) from its targets row below
+        tr = local_or_create_df(
+            spark,
+            [
+                (i,) + ((r[by],) if by else ())
+                + (r["__tot"], r["__k"], r["__tb"], r["__toff"])
+                for i, r in enumerate(targets)
+                if r["__tb"] is not None
+            ],
+            "__ti int, " + (f"__gk {key_typ}, " if by else "")
+            + "__tot decimal(38,0), __k decimal(38,0), __tb bigint,"
+            " __toff decimal(38,0)",
         )
-    else:
-        bounded = btot.limit(buckets)  # __b < buckets by construction
-        a, b = bounded.alias("a"), bounded.alias("b")
-        offs = attach_scalars(
-            a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-            .groupBy(
-                F.col("a.__b").alias("__b"), F.col("a.__bt").alias("__bt")
+        cond = F.col("__b") == F.col("__tb")
+        if by:
+            cond = F.col(by).eqNullSafe(F.col("__gk")) & cond
+        w = Window.partitionBy("__ti").orderBy(F.col("__v").asc())
+        cum = j.join(F.broadcast(tr), cond).withColumn(
+            "__cum",
+            F.col("__toff")
+            + F.sum("__c").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+        picked = cum.groupBy("__ti").agg(
+            F.min(F.when(F.col("__cum") >= F.col("__k"), F.col("__v")))
+            .alias("__q")
+        ).collect()  # ≤ one row per group
+    qs = {r["__ti"]: r["__q"] for r in picked}
+    rows = []
+    for i, r in enumerate(targets):
+        tot, k, q = r["__tot"], r["__k"], qs.get(i)
+        rows.append(
+            ((r[by],) if by else ())
+            + (
+                None if tot is None else int(tot),
+                None if k is None else int(k),
+                # the bigint cents round to DOUBLE first, THEN divide
+                # (q/100 on Python ints is correctly-rounded rational
+                # division — 1 ulp off the SQL double division for
+                # |q| > 2^53)
+                (float(q) / 100.0)
+                if (k is not None and tot is not None
+                    and k <= tot and q is not None)
+                else None,
             )
-            .agg(F.coalesce(F.sum("b.__bt"), zero).alias("__off"))
-            .select("__b", "__off", "__bt"),
-            bounded.agg(F.sum("__bt").alias("__tot")),
         )
-    # k = ceil((n+1)·cov_ppm/1e6), resolved on the tiny cell table
-    k_expr = F.expr(
-        f"CAST(((__tot + 1) * {cov_ppm} + 999999) div 1000000"
-        " AS DECIMAL(38,0))"
-    )
-    targets = (
-        offs.withColumn("__k", k_expr)
-        .groupBy(*keys)
-        .agg(
-            F.max("__tot").cast("decimal(38,0)").alias("__tot"),
-            F.max("__k").alias("__k"),
-            F.min(
-                F.when(
-                    F.col("__off") + F.col("__bt") >= F.col("__k"),
-                    F.col("__b"),
-                )
-            ).alias("__tb"),
-            F.min(
-                F.when(
-                    F.col("__off") + F.col("__bt") >= F.col("__k"),
-                    F.col("__off"),
-                )
-            ).alias("__toff"),
-        )
-    )
-    tsel = [*keys, "__tot", "__k", "__tb", "__toff"]
-    tr = targets.select(
-        *[F.col(k).alias("__gk") for k in keys], *tsel[len(keys):]
-    ) if keys else targets.select(*tsel)
-    cond = F.col("__b") == F.col("__tb")
-    if keys:
-        cond = F.col(by).eqNullSafe(F.col("__gk")) & cond
-    cand = j.join(F.broadcast(tr), cond)
-    w = Window.partitionBy(*keys).orderBy(F.col("__v").asc())
-    cum = cand.withColumn(
-        "__cum",
-        F.col("__toff")
-        + F.sum("__c").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    picked = cum.groupBy(*keys, "__k").agg(
-        F.min(
-            F.when(F.col("__cum") >= F.col("__k"), F.col("__v"))
-        ).alias("__q")
-    )
-    # k > n ⟹ NO cell reaches the rank, the dig matches nothing and
-    # picked has no row for the group — the group must still report
-    # (n, k, NULL): left-join picked back onto the always-present
-    # target table (one row per group, the operator's own output grain)
-    if keys:
-        pk = picked.select(
-            *[F.col(k).alias(f"__pk_{k}") for k in keys], "__q"
-        )
-        jc = F.lit(True)
-        for k in keys:
-            jc = jc & F.col(k).eqNullSafe(F.col(f"__pk_{k}"))
-        full = targets.join(F.broadcast(pk), jc, "left")
-    else:
-        full = targets.join(
-            F.broadcast(picked.select("__q")), F.lit(True), "left"
-        )
-    return full.select(
-        *keys,
-        F.col("__tot").cast("bigint").alias("n"),
-        F.col("__k").cast("bigint").alias("k"),
-        F.when(
-            F.col("__k") <= F.col("__tot"),
-            F.col("__q").cast("double") / 100,
-        ).alias("threshold"),
-    )
+    return emit(rows)
 
 
 def conformal_threshold_sql(
@@ -7302,37 +7140,37 @@ def gesd_outliers(
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from pybabe_spark.operators._util import lazy_persist, local_rows_df
+    from pybabe_spark.operators._util import local_rows_df, pinned
 
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
-    grain = lazy_persist(
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(x.alias("__v"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
     k = max_outliers
-    tot = grain.agg(
-        F.sum("__c").cast("decimal(38,0)").alias("__n"),
-        F.coalesce(F.sum(d(F.col("__c")) * F.col("__v")), F.lit(0))
-        .cast("decimal(38,0)")
-        .alias("__s"),
-        F.coalesce(
-            F.sum(d(F.col("__c")) * F.col("__v") * F.col("__v")),
-            F.lit(0),
+    with pinned() as pin:
+        grain = pin(
+            df.filter(F.col(value_col).isNotNull())
+            .groupBy(x.alias("__v"))
+            .agg(F.count(F.lit(1)).alias("__c"))
         )
-        .cast("decimal(38,0)")
-        .alias("__q"),
-    ).collect()[0]
-    # extremes: both TakeOrdered subtrees collect in ONE action; the
-    # union is ≤2k rows by construction (the boundedness proof)
-    ext = (
-        grain.orderBy(F.col("__v").desc())
-        .limit(k)
-        .unionByName(grain.orderBy(F.col("__v").asc()).limit(k))
-        .collect()
-    )
-    grain.unpersist()  # the rounds run driver-side from here on
+        tot = grain.agg(
+            F.sum("__c").cast("decimal(38,0)").alias("__n"),
+            F.coalesce(F.sum(d(F.col("__c")) * F.col("__v")), F.lit(0))
+            .cast("decimal(38,0)")
+            .alias("__s"),
+            F.coalesce(
+                F.sum(d(F.col("__c")) * F.col("__v") * F.col("__v")),
+                F.lit(0),
+            )
+            .cast("decimal(38,0)")
+            .alias("__q"),
+        ).collect()[0]
+        # extremes: both TakeOrdered subtrees collect in ONE action; the
+        # union is ≤2k rows by construction (the boundedness proof)
+        ext = (
+            grain.orderBy(F.col("__v").desc())
+            .limit(k)
+            .unionByName(grain.orderBy(F.col("__v").asc()).limit(k))
+            .collect()
+        )
     cand = {int(r["__v"]): int(r["__c"]) for r in ext}
     rows: list[tuple] = []
     if tot["__n"] is not None:
@@ -7681,45 +7519,45 @@ def mood_median_test(
     """
     from pybabe_spark.operators._util import (
         attach_scalars,
-        lazy_persist,
         local_rows_df,
+        pinned,
     )
 
     ok = F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
-    base = lazy_persist(
-        # feeds the value-grain agg AND the flagged cell agg — one
-        # materialization instead of two source scans (lazy, job-free)
-        df.filter(ok).select(
-            F.col(group_col).alias("__g"), cents.alias("__v")
-        )
-    )
-    grain = base.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
-    tot = grain.agg(F.sum("__c").cast("decimal(38,0)").alias("__n"))
-    w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, 0)
-    cum = attach_scalars(grain, tot).withColumn(
-        "__cum", F.sum("__c").over(w).cast("decimal(38,0)")
-    )
-    med_row = cum.filter(
-        F.col("__cum") * 2 >= F.col("__n")
-    ).agg(F.min("__v").alias("__med")).collect()[0]
-    med = med_row["__med"]
     crit_ppm = int(round(float(crit) * 1_000_000))
     spark = df.sparkSession
     schema = (
         "n bigint, median double, dof bigint, chi2_ppm bigint, "
         "significant boolean"
     )
-    if med is None:  # empty input: the degenerate all-zero row
-        return local_rows_df(spark, [(0, None, 0, 0, False)], schema)
-    cells_rows = (
-        base.groupBy(
-            "__g", (F.col("__v") > F.lit(int(med))).alias("__above")
+    with pinned() as pin:
+        base = pin(
+            # feeds the value-grain agg AND the flagged cell agg — one
+            # materialization instead of two source scans
+            df.filter(ok).select(
+                F.col(group_col).alias("__g"), cents.alias("__v")
+            )
         )
-        .agg(F.count(F.lit(1)).alias("__nab"))
-        .limit(2 * max_groups + 1)  # the collect's boundedness proof
-        .collect()
-    )
+        grain = base.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
+        tot = grain.agg(F.sum("__c").cast("decimal(38,0)").alias("__n"))
+        w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, 0)
+        cum = attach_scalars(grain, tot).withColumn(
+            "__cum", F.sum("__c").over(w).cast("decimal(38,0)")
+        )
+        med = cum.filter(
+            F.col("__cum") * 2 >= F.col("__n")
+        ).agg(F.min("__v").alias("__med")).collect()[0]["__med"]
+        if med is None:  # empty input: the degenerate all-zero row
+            return local_rows_df(spark, [(0, None, 0, 0, False)], schema)
+        cells_rows = (
+            base.groupBy(
+                "__g", (F.col("__v") > F.lit(int(med))).alias("__above")
+            )
+            .agg(F.count(F.lit(1)).alias("__nab"))
+            .limit(2 * max_groups + 1)  # the collect's boundedness proof
+            .collect()
+        )
     if len(cells_rows) > 2 * max_groups:
         raise ValueError(
             f"mood_median_test: more than max_groups={max_groups} "
@@ -8418,7 +8256,7 @@ def jonckheere_terpstra(
     )
     cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    cnts = lazy_persist(
+    cnts = (
         df.filter(ok)
         .select(
             F.col(group_score_col).cast("bigint").alias("__g"),
@@ -8432,17 +8270,17 @@ def jonckheere_terpstra(
     # says DISCRETE/bucketed values), ONE limit-proved bounded collect
     # replaces the 18-local-job in-plan assembly (grid + window + grain
     # join + five side aggregates) with exact driver arithmetic and a
-    # VALUES-literal 1-row result, and the grain cache is released. A
-    # bigger grain — or a pathological one (NULL group/value from a
-    # failed cast) — keeps the in-plan path below over the cache. The
-    # probe filled only the partitions CollectLimit scanned, usually
-    # not all of them on this path, so the first action fills the rest.
+    # VALUES-literal 1-row result. The probe reads the grain once, so
+    # it is not cached. A bigger grain — or a pathological one (NULL
+    # group/value from a failed cast) — keeps the in-plan path below,
+    # which reads the grain from several branches: only that path
+    # caches it (and so computes it a second time).
     probe = cnts.limit(_JT_MAX_CELLS + 1).collect()
     if len(probe) <= _JT_MAX_CELLS and all(
         r["__g"] is not None and r["__v"] is not None for r in probe
     ) and len({r["__g"] for r in probe}) <= _JT_MAX_GROUPS:
-        cnts.unpersist()
         return _jt_finish_local(df.sparkSession, probe, z_crit)
+    cnts = lazy_persist(cnts)
     groups = cnts.groupBy("__g").agg(
         F.sum(d(F.col("__c"))).cast("decimal(38,0)").alias("__u")
     )

@@ -454,6 +454,67 @@ def test_conformal_threshold_grouped_and_ties(spark):
     assert (out["b"]["k"], out["b"]["threshold"]) == (10, 9.0)
 
 
+def _conformal_by(spark, rows, by_typ, alpha=0.5):
+    from pybabe_spark.operators.sketch import conformal_threshold
+
+    df = spark.createDataFrame(rows, f"g {by_typ}, v double")
+    return conformal_threshold(df, "v", alpha, by="g").collect()
+
+
+def test_conformal_threshold_double_keys_nan_zero_null(spark):
+    nan = float("nan")
+    rows = [(nan, 1.0), (nan, 2.0), (nan, 3.0),
+            (0.0, 10.0), (0.0, 20.0), (-0.0, 30.0),
+            (None, 5.0), (None, 7.0)]
+    out = {
+        ("nan" if r["g"] is not None and math.isnan(r["g"]) else r["g"]):
+        (r["n"], r["k"], r["threshold"])
+        for r in _conformal_by(spark, rows, "double")
+    }
+    # alpha 0.5: k = ceil((n+1)/2); NaN is one group, 0.0 and -0.0 are
+    # one group, NULL is its own group
+    assert out == {
+        "nan": (3, 2, 2.0),
+        0.0: (3, 2, 20.0),
+        None: (2, 2, 7.0),
+    }
+
+
+def test_conformal_threshold_date_keys(spark):
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 2, 29)
+    rows = [(d1, 4.0), (d1, 1.0), (d1, 3.0), (d1, 2.0), (d2, 8.0)]
+    out = {
+        r["g"]: (r["n"], r["k"], r["threshold"])
+        for r in _conformal_by(spark, rows, "date", alpha=0.2)
+    }
+    # d1: n=4, k = ceil(5*0.8) = 4 -> 4.0; d2: n=1, k = ceil(2*0.8) =
+    # 2 > n -> NULL threshold
+    assert out == {d1: (4, 4, 4.0), d2: (1, 2, None)}
+
+
+def test_conformal_threshold_timestamp_keys(spark):
+    t1 = dt.datetime(2024, 3, 10, 2, 30, 0, 123456)
+    t2 = dt.datetime(1969, 12, 31, 23, 59, 59, 999999)
+    rows = [(t1, 1.5), (t1, 0.5), (t1, 2.5), (t2, 9.0), (t2, 7.0),
+            (None, 3.0)]
+    out = {
+        r["g"]: (r["n"], r["k"], r["threshold"])
+        for r in _conformal_by(spark, rows, "timestamp")
+    }
+    # keys come back to the microsecond
+    assert out == {t1: (3, 2, 1.5), t2: (2, 2, 9.0), None: (1, 1, 3.0)}
+
+
+def test_conformal_threshold_empty_keyed_input(spark):
+    from pybabe_spark.operators.sketch import conformal_threshold
+
+    df = spark.createDataFrame([("a", 1.0)], "g string, v double")
+    out = conformal_threshold(df.filter("v > 2"), "v", 0.1, by="g")
+    assert out.columns == ["g", "n", "k", "threshold"]
+    assert dict(out.dtypes)["g"] == "string"
+    assert out.collect() == []
+
+
 @pytest.mark.deep
 def test_pca_fit_matches_numpy(spark):
     import numpy as np

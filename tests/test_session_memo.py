@@ -8,6 +8,7 @@ import re
 
 import pytest
 
+from pybabe_spark.operators._util import _TRACKED_PERSISTS
 from pybabe_spark.queries import (
     REGISTRY,
     SESSION_MEMOS,
@@ -98,6 +99,9 @@ def test_memo_users_match_the_registry_callers():
         "kruskal_wallis_lineitem",
         "gesd_outliers_orders",
         "weighted_quantiles_lineitem",
+        "wasserstein_events",
+        "conformal_threshold_events",
+        "mood_median_orders",
     ],
 )
 def test_eager_finish_releases_its_caches(spark, sf_dir, key, tmp_path):
@@ -110,6 +114,21 @@ def test_eager_finish_releases_its_caches(spark, sf_dir, key, tmp_path):
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    before = persisted()
+    before, tracked = persisted(), len(_TRACKED_PERSISTS)
     all_queries()[key](spark, str(data)).count()
     assert persisted() - before == set()
+    # an eager finish pins through pinned(), which leaves no handle in
+    # lazy_persist's tracker
+    assert len(_TRACKED_PERSISTS) == tracked
+
+
+def test_pinned_releases_on_exception(spark):
+    from pybabe_spark.operators._util import pinned
+
+    with pytest.raises(RuntimeError):
+        with pinned() as pin:
+            g = pin(spark.range(3))
+            assert g.count() == 3 and g.storageLevel.useMemory
+            raise RuntimeError("finish failed")
+    # the JVM cache manager no longer holds the frame
+    assert not g.storageLevel.useMemory
