@@ -1,49 +1,180 @@
-"""Connected components over a pair list — duplicate-cluster closure.
+"""Graph operators over edge-list DataFrames: connected components,
+PageRank, triangles and clustering, BFS / label propagation / SSSP,
+k-core, link prediction and assortativity. No operator collects the
+graph; every one is joins and aggregations over the edge list.
 
-The near-dup family (MinHash/LSH, SimHash, embedding near-dup) emits
-PAIRS; turning pairs into clusters is a connected-components problem
-(doc A ~ B, B ~ C ⇒ {A, B, C} is one dup cluster even if A ≁ C
-directly). This is the transitive-closure policy next to
-``dedup_scale.near_dedup_keep``'s conservative greedy policy.
+Each recurring idea is written once:
 
-Algorithm: min-label propagation to fixpoint — every node starts
-labeled with its own id; each round a node takes the minimum label
-among itself and its neighbors; at convergence every node carries the
-minimum id of its component (the canonical small-graph-on-big-cluster
-algorithm, cf. Kiveris et al. "Connected Components in MapReduce",
-SOCC'14 — the simple variant, since dup clusters are shallow).
+- :func:`_canonical_edges` — the undirected edge rule (``u = least``,
+  ``v = greatest``, self-loops and NULL endpoints dropped, distinct)
+  behind the triangle census, the clustering coefficient, both link
+  predictors, assortativity, and the supplier-graph session memo in
+  ``queries_analytics``.
+- :func:`_degrees` — both directions ``(z, n)`` of a canonical edge
+  set and each node's degree ``(z, d)``; :func:`_triangles` orients
+  the edges by ``(degree, id)`` on top of it and closes the wedges.
+- :func:`_both_directions` — the symmetrized, NULL- and
+  self-loop-free edge set the frontier operators and k-core walk.
+- :func:`_fixpoint` — the driver of every iterative operator
+  (connected components' min-label rounds, label propagation and its
+  one-label case BFS, SSSP, k-core). Each round is ONE eager
+  ``localCheckpoint`` job that cuts the lineage, with a fingerprint
+  ``observe()``-d on that same job; the loop stops when the
+  fingerprint repeats, so convergence never costs an extra action. A
+  cache that only the rounds read is held in
+  :func:`~pybabe_spark.operators._util.pinned` and released before
+  the operator returns — the returned plan reads the last checkpoint.
+
+Connected components close near-dup PAIRS into clusters (doc A ~ B,
+B ~ C ⇒ {A, B, C} is one dup cluster even if A ≁ C directly) — the
+transitive policy next to ``dedup_scale.near_dedup_keep``'s
+conservative greedy one. Algorithm: min-label propagation — each round
+a node takes the minimum label among itself and its neighbors, so at
+the fixpoint every node carries its component's minimum id (Kiveris
+et al., "Connected Components in MapReduce", SOCC'14, the simple
+variant: dup clusters are shallow). Round 1 is fused into label
+initialization (initial labels are identities, so the first
+propagation is min(id, min(neighbor)) in the init aggregation), and
+the fingerprint is the label sum as exact DECIMAL(38,0): labels only
+decrease, so an unchanged sum is exactly "no label changed".
 
 Min-label propagation moves the minimum ONE hop per round, so its
-round count is the component diameter — perfect for dup clusters (a
-few hops), pathological for long chains. Rather than failing on deep
-graphs, exhaustion of ``max_iters`` switches to Kiveris et al.'s
-two-phase **large-star / small-star alternation**, whose round count
-is O(log² n) regardless of diameter: each large-star points every
-strictly-larger neighbor of a node at the minimum of its closed
-neighborhood, each small-star does the same for the not-larger
-neighbors, and the alternation contracts any graph to a forest of
-stars centered on each component's minimum. The fallback is seeded
-with the labels already earned by the simple rounds (``(id, label)``
-is a valid same-component edge), so no propagation work is thrown
-away.
-
-Scale shape: state is one (node, label) row per node; each round is
-one join + one hash aggregation (two shuffles) over the node set, NOT
-the corpus; rounds ≈ cluster diameter (near-dup clusters are a few
-hops). Lineage is cut per round with an eager ``localCheckpoint`` so
-the plan doesn't grow with iterations. Each round runs EXACTLY ONE
-job: round 1 is fused into label initialization (initial labels are
-identities, so the first propagation is just min(id, min(neighbor))
-in the init aggregation), and convergence detection rides the
-checkpoint job as an ``observe()`` metric — labels only ever
-decrease, so an unchanged label-sum (exact DECIMAL(38,0), no
-overflow at any node count) is exactly "no label changed".
+round count is the component diameter. Exhaustion of ``max_iters``
+switches to Kiveris et al.'s two-phase **large-star / small-star
+alternation**, whose round count is O(log² n) regardless of diameter:
+each large-star points every strictly-larger neighbor of a node at the
+minimum of its closed neighborhood, each small-star does the same for
+the not-larger neighbors, and the alternation contracts any graph to a
+forest of stars centered on each component's minimum. The fallback is
+seeded with the labels already earned (``(id, label)`` is a valid
+same-component edge), so no propagation work is thrown away.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from pybabe_spark.operators._util import pinned
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected edge set of ``edges``: ``(u = least, v =
+    greatest)``, self-loops and NULL endpoints dropped, distinct.
+
+    Not persisted here: the operators persist it lazily (it feeds
+    degrees, wedges and probes — without the cache each consumer
+    re-derives the upstream lineage), while the supplier-graph session
+    memo caches its own one-block copy, under which a second cache
+    would only stack."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("u"),
+            F.greatest(F.col(src), F.col(dst)).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(sym, deg)`` of a canonical edge set: ``sym`` holds both
+    directions ``(z, n)`` of every edge, ``deg`` each node's degree
+    ``(z, d)``."""
+    sym = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
+        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
+    )
+    return sym, sym.groupBy("z").agg(F.count(F.lit(1)).alias("d"))
+
+
+def _triangles(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(deg, tri)`` of a canonical edge set: node degrees ``(z, d)``
+    and one ``(a, x, y)`` row per triangle.
+
+    Every edge is oriented from its ≺-smaller endpoint, ``a ≺ b`` iff
+    ``(deg(a), a) < (deg(b), b)``, so each triangle has exactly one
+    apex ``a`` with two out-edges: wedges (x ≺ y) are generated ONLY at
+    low-degree vertices and closed by the oriented edge x→y — total
+    wedge work O(Σ out-deg²) ≤ O(m^1.5), not the naive Σ deg² a hub
+    explodes. All equi-joins; the oriented set is lazily persisted
+    (both wedge sides and the closing-edge probe read it)."""
+    _, deg = _degrees(e)
+    du = deg.select(F.col("z").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("z").alias("v"), F.col("d").alias("dv"))
+    ed = e.join(du, "u").join(dv, "v")
+    u_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    oriented = ed.select(
+        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
+    ).persist()
+    x = oriented.select(
+        F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx")
+    )
+    y = oriented.select(
+        F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy")
+    )
+    wedges = x.join(y, "a").filter(
+        (F.col("dx") < F.col("dy"))
+        | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
+    )
+    tri = wedges.join(
+        oriented.select(F.col("a").alias("x"), F.col("b").alias("y")),
+        ["x", "y"],
+        "left_semi",
+    ).select("a", "x", "y")
+    return deg, tri
+
+
+def _both_directions(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(u, v)`` in both directions for every edge of ``edges``, NULL
+    endpoints and self-loops dropped, distinct."""
+
+    def side(a: str, b: str) -> DataFrame:
+        return edges.select(F.col(a).alias("u"), F.col(b).alias("v")).filter(
+            F.col("u").isNotNull()
+            & F.col("v").isNotNull()
+            & (F.col("u") != F.col("v"))
+        )
+
+    return side(src, dst).unionByName(side(dst, src)).distinct()
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    fingerprint: list[Column],
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """Iterate ``state = step(state, i)`` for ``i = 0, 1, …`` until
+    the ``fingerprint`` aggregates repeat, at most ``max_rounds``
+    times; returns ``(state, converged)``.
+
+    The initial state and every round's state are cut with an eager
+    ``localCheckpoint`` — the round's ONLY job — with the fingerprint
+    observed on that same job, so convergence detection costs no extra
+    action. Callers pick a fingerprint that is monotone in the state
+    (a label sum, a visited count, a surviving-edge count), so it
+    repeats exactly when the state stopped changing; a step that
+    changes nothing therefore stops after one round."""
+
+    def cut(df: DataFrame) -> tuple[DataFrame, dict]:
+        obs = Observation()
+        df = df.observe(obs, *fingerprint).localCheckpoint(eager=True)
+        return df, obs.get
+
+    state, prev = cut(state)
+    for i in range(max_rounds):
+        state, fp = cut(step(state, i))
+        if fp == prev:
+            return state, True
+        prev = fp
+    return state, False
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -127,7 +258,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 20,
-    deep_fallback: bool = True,
 ) -> DataFrame:
     """(id, component) for every node in ``edges``; ``component`` is the
     minimum node id in the connected component.
@@ -136,8 +266,7 @@ def connected_components(
     round — cheapest for the shallow clusters near-dedup emits). If
     ``max_iters`` rounds don't reach fixpoint (pathologically deep
     chains), switches to the O(log² n)-round large-star/small-star
-    alternation instead of failing; pass ``deep_fallback=False`` to
-    get the old raise-on-exhaustion behavior.
+    alternation instead of failing.
 
     Non-numeric node ids (string/md5/URL) are supported by mapping
     nodes to dense surrogate bigints first — the exact decimal-sum
@@ -147,25 +276,25 @@ def connected_components(
     original id (lexicographic for strings). Costs two data-linear
     joins + one group on the node set, nothing on the corpus.
     """
+    sym = edges.select(
+        F.col(src).alias("u"), F.col(dst).alias("v")
+    ).unionByName(
+        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    ).distinct()
     id_type = edges.schema[src].dataType.simpleString()
     if id_type not in ("byte", "short", "int", "bigint", "long", "integer"):
-        sym0 = edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v")
-        ).unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        ).distinct()
         nodes = (
-            sym0.select(F.col("u").alias("__orig"))
+            sym.select(F.col("u").alias("__orig"))
             .distinct()
             .withColumn("__nid", F.monotonically_increasing_id())
             .localCheckpoint(eager=True)  # pin the surrogate assignment
         )
         nu = nodes.select(F.col("__orig").alias("u"), F.col("__nid").alias("__nu"))
         nv = nodes.select(F.col("__orig").alias("v"), F.col("__nid").alias("__nv"))
-        e_num = sym0.join(nu, "u").join(nv, "v").select(
+        e_num = sym.join(nu, "u").join(nv, "v").select(
             F.col("__nu").alias(src), F.col("__nv").alias(dst)
         )
-        num = connected_components(e_num, src, dst, max_iters, deep_fallback)
+        num = connected_components(e_num, src, dst, max_iters)
         back = num.join(
             nodes.select(F.col("__nid").alias("id"), "__orig"), "id"
         )
@@ -174,22 +303,9 @@ def connected_components(
             F.col("__orig").alias("id"), F.col("__rep").alias("component")
         )
 
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    sym = sym.distinct().localCheckpoint(eager=True)
+    sym = sym.localCheckpoint(eager=True)
 
-    # init ⊗ round 1 in one aggregation: label = min(id, min(neighbors))
-    obs0 = Observation()
-    labels = (
-        sym.groupBy(F.col("u").alias("id"))
-        .agg(F.least(F.first("u"), F.min("v")).alias("label"))
-        .observe(obs0, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = obs0.get["s"]
-
-    for rnd in range(max_iters - 1):
+    def spread(labels: DataFrame, rnd: int) -> DataFrame:
         neighbor_labels = sym.join(
             labels.withColumnRenamed("id", "v"), "v"
         ).select(F.col("u").alias("id"), "label")
@@ -216,24 +332,20 @@ def connected_components(
                 )
             )
             parts = parts.unionByName(jump)
-        obs = Observation()
-        new_labels = (
-            parts
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .observe(obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-            .localCheckpoint(eager=True)  # the round's ONLY job
-        )
-        labels = new_labels
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum or cur_sum is None:
-            return labels.withColumnRenamed("label", "component")
-        prev_sum = cur_sum
-    if not deep_fallback:
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {max_iters} rounds; "
-            "raise max_iters for graphs with very long chains"
-        )
+        return parts.groupBy("id").agg(F.min("label").alias("label"))
+
+    # init ⊗ round 1 in one aggregation: label = min(id, min(neighbors))
+    init = sym.groupBy(F.col("u").alias("id")).agg(
+        F.least(F.first("u"), F.min("v")).alias("label")
+    )
+    labels, converged = _fixpoint(
+        init,
+        spread,
+        [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
+        max_iters - 1,
+    )
+    if converged:
+        return labels.withColumnRenamed("label", "component")
     # Deep-chain fallback: seed with the original edges plus the labels
     # already earned ((id, label) is a same-component edge), then run the
     # logarithmic-round two-phase alternation to the star forest.
@@ -478,28 +590,6 @@ def pagerank_sql(
     )
 
 
-def _closed_wedges(oriented) -> DataFrame:
-    """Triangle rows ``(a, x, y)`` from a degree-oriented edge set
-    (columns a, b, db): wedge (x ≺ y) at apex a, closed by the
-    oriented edge x→y — shared by the global census and the per-node
-    coefficient."""
-    x = oriented.select(
-        F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx")
-    )
-    y = oriented.select(
-        F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy")
-    )
-    wedges = x.join(y, "a").filter(
-        (F.col("dx") < F.col("dy"))
-        | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
-    )
-    return wedges.join(
-        oriented.select(F.col("a").alias("x"), F.col("b").alias("y")),
-        ["x", "y"],
-        "left_semi",
-    ).select("a", "x", "y")
-
-
 def triangle_count(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
@@ -507,54 +597,27 @@ def triangle_count(
     ``(n_nodes, n_edges, n_triangles)`` over the deduplicated,
     self-loop-free edge set.
 
-    Scale algorithm (the standard distributed one): orient every edge
-    from its ≺-smaller endpoint, where ``a ≺ b`` iff ``(deg(a), a) <
-    (deg(b), b)`` — each triangle then has exactly one "apex" with two
-    out-edges, so wedges are generated ONLY at low-degree vertices and
-    total wedge work is O(Σ out-deg²) ≤ O(m^1.5) instead of the
-    naive Σ deg² that a hub vertex explodes. Plan: degree agg (one
-    shuffle), two degree joins, the wedge self-join on the apex, and a
-    semi-join against the oriented closing edge — all equi-joins, no
-    cartesian anywhere.
+    Scale algorithm (the standard distributed one, :func:`_triangles`):
+    degree-ordered orientation, so each triangle has exactly one apex
+    and wedge work is O(m^1.5), not the Σ deg² a hub explodes. Plan:
+    degree agg (one shuffle), two degree joins, the wedge self-join on
+    the apex, and a semi-join against the oriented closing edge — all
+    equi-joins, no cartesian anywhere.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        # LAZY persist: the edge set feeds nodes/degrees/orientation/
-        # closing-edge probes — without it every consumer re-derives the
-        # whole upstream lineage (measured: a 36× source re-scan on the
-        # supplier graph). persist() marks only — no construction job
-        # (localCheckpoint(eager=False) is NOT construction-free: its
-        # .rdd conversion can force AQE stage materialization) — and
-        # the cache fills at the query's own first action.
-        .persist()
-    )
-    nodes = e.select(F.col("u").alias("n")).unionAll(
-        e.select(F.col("v").alias("n"))
-    )
-    deg = nodes.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    ed = e.join(du, "u").join(dv, "v")
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).persist()  # reused by both wedge sides + the closing-edge probe
-    closed = _closed_wedges(oriented)
-    tri = closed.agg(F.count(F.lit(1)).alias("n_triangles"))
+    # LAZY persist: the edge set feeds degrees, orientation and the
+    # closing-edge probe — without it every consumer re-derives the
+    # whole upstream lineage (measured: a 36× source re-scan on the
+    # supplier graph). persist() marks only — no construction job
+    # (localCheckpoint(eager=False) is NOT construction-free: its .rdd
+    # conversion can force AQE stage materialization) — and the cache
+    # fills at the query's own first action.
+    e = _canonical_edges(edges, src, dst).persist()
+    deg, tri = _triangles(e)
     counts = e.agg(
         F.count(F.lit(1)).alias("n_edges"),
     ).crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
-    return counts.crossJoin(tri).select("n_nodes", "n_edges", "n_triangles")
+    n_tri = tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    return counts.crossJoin(n_tri).select("n_nodes", "n_edges", "n_triangles")
 
 
 def triangle_count_sql(edges_cte: str) -> str:
@@ -592,51 +655,19 @@ def bfs_distances(
     The k-hop neighborhood primitive (blast-radius queries, feature
     neighborhoods, seed expansion).
 
-    Frontier iteration, one round per hop: join the CURRENT frontier
-    (nodes first reached last round — not the whole visited set)
-    against the symmetrized edges, anti-join out already-visited
-    nodes, append. Per-round cost is edges incident to the frontier;
-    state is the visited (id, distance) set, lineage cut per round
-    with an eager ``localCheckpoint`` and an ``observe()`` count so an
-    EMPTY frontier stops iterating without an extra job (the
-    connected-components discipline).
+    :func:`propagate_labels` with every source carrying the same
+    label: frontier iteration, one round per hop, per-round cost the
+    edges incident to the frontier; an empty frontier stops it
+    without an extra job.
     """
     if max_hops < 0:
         raise ValueError("bfs_distances: max_hops must be >= 0")
-    id_col = id_col or src
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        # lazy persist: every hop joins the frontier against sym —
-        # without it each round re-derives the edge lineage from source
-        .persist()
+    seeds = sources.select(
+        F.col(sources.columns[0]).alias("id"), F.lit(0).alias("label")
     )
-    visited = (
-        sources.select(F.col(sources.columns[0]).alias("id"))
-        .distinct()
-        .withColumn("distance", F.lit(0))
-        .localCheckpoint(eager=True)
+    return propagate_labels(edges, seeds, max_hops, src, dst, id_col).drop(
+        "label"
     )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(sym, frontier["id"] == sym["u"])
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .withColumn("distance", F.lit(hop))
-        )
-        obs = Observation()
-        nxt = nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("distance") == hop)
-        if obs.get["n"] == 0:
-            break
-    return visited.withColumnRenamed("id", id_col)
 
 
 def bfs_distances_sql(
@@ -684,46 +715,41 @@ def propagate_labels(
     The semi-supervised companion to :func:`bfs_distances`: spread
     trusted/spam/topic/owner labels from a seed set through a
     relationship graph — first-reach-wins, deterministic, no float
-    scores. Same frontier discipline as BFS: per round one
-    frontier-edges join + one min() hash agg + one anti-join, an
-    eager per-round ``localCheckpoint`` lineage cut, and an
-    ``observe()`` count so exhaustion stops without an extra job.
-    Per-round cost is edges incident to the frontier, never the graph.
+    scores. Frontier iteration on :func:`_fixpoint`: per round one
+    frontier-edges join + one min() hash agg + one anti-join over the
+    visited set, and an observed visited count so exhaustion stops
+    without an extra job. Per-round cost is edges incident to the
+    frontier, never the graph.
     """
     if max_hops < 0:
         raise ValueError("propagate_labels: max_hops must be >= 0")
     id_col = id_col or src
     sid, slab = seeds.columns[0], seeds.columns[1]
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-        )
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .persist()
-    )
-    visited = (
+    seeded = (
         seeds.groupBy(F.col(sid).alias("id"))
         .agg(F.min(slab).alias("label"))
         .withColumn("distance", F.lit(0))
-        .localCheckpoint(eager=True)
     )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(sym, frontier["id"] == sym["u"])
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.min("label").alias("label"))
-            .join(visited, "id", "left_anti")
-            .withColumn("distance", F.lit(hop))
+    with pinned() as pin:
+        # every hop joins the frontier against sym; only the rounds
+        # read it — the returned plan reads the last checkpoint
+        sym = pin(_both_directions(edges, src, dst))
+
+        def hop(visited: DataFrame, i: int) -> DataFrame:
+            nxt = (
+                visited.filter(F.col("distance") == i)
+                .join(sym, F.col("id") == F.col("u"))
+                .groupBy(F.col("v").alias("id"))
+                .agg(F.min("label").alias("label"))
+                .join(visited, "id", "left_anti")
+                .withColumn("distance", F.lit(i + 1))
+            )
+            return visited.unionByName(nxt)
+
+        # the visited count repeats exactly when the frontier is empty
+        visited, _ = _fixpoint(
+            seeded, hop, [F.count(F.lit(1)).alias("n")], max_hops
         )
-        obs = Observation()
-        nxt = nxt.observe(obs, F.count(F.lit(1)).alias("n"))
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("distance") == hop)
-        if obs.get["n"] == 0:
-            break
     return visited.withColumnRenamed("id", id_col)
 
 
@@ -778,49 +804,25 @@ def clustering_coefficient(
     a clique.
 
     Same O(m^1.5) degree-oriented wedge machinery as
-    :func:`triangle_count` (one shared closure helper); per-node
+    :func:`triangle_count` (:func:`_triangles`); per-node
     credit is one explode of each triangle row to its three corners +
     one hash agg + a left join back onto the degree table (nodes in no
     triangle count zero). No new join shapes beyond the census.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .persist()  # lazy — feeds degrees + orientation (triangle_count
-        # discipline)
-    )
-    nodes = e.select(F.col("u").alias("n")).unionAll(
-        e.select(F.col("v").alias("n"))
-    )
-    deg = nodes.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    ed = e.join(du, "u").join(dv, "v")
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).persist()
+    # lazy — feeds degrees + orientation (triangle_count discipline)
+    e = _canonical_edges(edges, src, dst).persist()
+    deg, tri = _triangles(e)
     credits = (
-        _closed_wedges(oriented)
-        .select(
+        tri.select(
             F.explode(
                 F.array(F.col("a"), F.col("x"), F.col("y"))
-            ).alias("n")
+            ).alias("z")
         )
-        .groupBy("n")
+        .groupBy("z")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    out = deg.join(credits, "n", "left").select(
-        F.col("n").alias("node"),
+    out = deg.join(credits, "z", "left").select(
+        F.col("z").alias("node"),
         F.col("d").alias("degree"),
         F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
     )
@@ -902,59 +904,52 @@ def sssp(
     ("min cost over walks of ≤ k edges" — for non-negative weights and
     k ≥ |V|−1 this IS the shortest path).
 
-    Per round: one frontier×edges equi-join on the node key + one
-    min() hash agg over (state ∪ candidates); state is one row per
-    reached node, lineage-cut with an eager ``localCheckpoint``; an
-    ``observe()`` (count, sum) fingerprint stops early at the fixpoint
-    without an extra job (distances decrease monotonically, so an
-    unchanged fingerprint ⟺ converged — the result then equals the
-    full unroll the oracle replays).
+    Per round (:func:`_fixpoint`): one frontier×edges equi-join on the
+    node key + one min() hash agg over (state ∪ candidates); state is
+    one row per reached node; an observed (count, sum) fingerprint
+    stops early at the fixpoint without an extra job (distances
+    decrease monotonically, so an unchanged fingerprint ⟺ converged —
+    the result then equals the full unroll the oracle replays).
     """
     if max_hops < 0:
         raise ValueError("sssp: max_hops must be >= 0")
     id_col = id_col or "id"
     w_cents = (F.col(weight).cast("decimal(18,2)") * 100).cast("bigint")
-    e = (
-        edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v"),
-            w_cents.alias("w"),
-        )
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & F.col("w").isNotNull()
-        )
-        # lazy persist: every round joins the frontier against e
-        .persist()
-    )
-    state = (
+    start = (
         sources.select(F.col(sources.columns[0]).alias("id"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=True)
     )
-    prev = None
-    for _ in range(max_hops):
-        cand = (
-            state.join(e, state["id"] == e["u"])
-            .select(e["v"].alias("id"), (state["dist"] + e["w"]).alias("dist"))
+    with pinned() as pin:
+        # every round joins the frontier against e; only the rounds
+        # read it — the returned plan reads the last checkpoint
+        e = pin(
+            edges.select(
+                F.col(src).alias("u"), F.col(dst).alias("v"),
+                w_cents.alias("w"),
+            ).filter(
+                F.col("u").isNotNull()
+                & F.col("v").isNotNull()
+                & F.col("w").isNotNull()
+            )
         )
-        nxt = (
-            state.unionByName(cand)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
+
+        def relax(state: DataFrame, _: int) -> DataFrame:
+            cand = state.join(e, state["id"] == e["u"]).select(
+                e["v"].alias("id"), (state["dist"] + e["w"]).alias("dist")
+            )
+            return (
+                state.unionByName(cand)
+                .groupBy("id")
+                .agg(F.min("dist").alias("dist"))
+            )
+
+        state, _ = _fixpoint(
+            start,
+            relax,
+            [F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")],
+            max_hops,
         )
-        obs = Observation()
-        nxt = nxt.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dist").alias("s"),
-        )
-        state = nxt.localCheckpoint(eager=True)
-        fp = (obs.get["n"], obs.get["s"])
-        if fp == prev:
-            break
-        prev = fp
     return state.select(
         F.col("id").alias(id_col), F.col("dist").alias("dist_cents")
     )
@@ -1005,9 +1000,9 @@ def k_core(
     Each round: one degree hash agg over the surviving edge set, keep
     nodes with degree ≥ k, then semi-join the edge set down to
     surviving endpoints — per-round cost is the CURRENT edge set,
-    monotonically shrinking. ``observe()`` counts surviving nodes, so
-    an unchanged count stops without an extra job (peeling is
-    monotone — unchanged ⟺ fixpoint ⟺ the true k-core). If
+    monotonically shrinking. :func:`_fixpoint` observes the surviving
+    edge count, so an unchanged count stops without an extra job
+    (peeling is monotone — unchanged ⟺ fixpoint ⟺ the true k-core). If
     ``max_rounds`` rounds don't converge the result is the
     ``max_rounds``-peel partial — the SAME well-defined object the
     oracle's unroll produces, and a superset of the k-core; raise
@@ -1020,48 +1015,25 @@ def k_core(
     if max_rounds < 1:
         raise ValueError("k_core: max_rounds must be >= 1")
     id_col = id_col or src
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-            .filter(
-                F.col("u").isNotNull()
-                & F.col("v").isNotNull()
-                & (F.col("u") != F.col("v"))
-            )
-        )
-        .distinct()
-    )
-    # fixpoint fingerprint rides the EDGE-set checkpoints: every node
-    # in e has degree >= 1, so a peeled node always removes edges —
-    # edge count unchanged ⟺ no node peeled ⟺ the k-core. One job
-    # per round (the e checkpoint); the twice-consumed keep subtree is
-    # recomputed from the checkpointed e (one small agg, and Spark
-    # reuses the exchange between the two semi-joins).
-    obs0 = Observation()
-    e = e.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
-    prev_n = obs0.get["n"]
-    for _ in range(max_rounds):
+
+    def peel(e: DataFrame, _: int) -> DataFrame:
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("u")
-        obs = Observation()
-        e = (
-            e.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        return e.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
-        n = obs.get["n"]
-        if n == prev_n:
-            break
-        prev_n = n
+
+    # the fingerprint is the EDGE count: every node in e has degree
+    # >= 1, so a peeled node always removes edges — edge count
+    # unchanged ⟺ no node peeled ⟺ the k-core. The twice-consumed
+    # keep subtree is recomputed from the checkpointed e (one small
+    # agg, and Spark reuses the exchange between the two semi-joins).
+    e, _ = _fixpoint(
+        _both_directions(edges, src, dst),
+        peel,
+        [F.count(F.lit(1)).alias("n")],
+        max_rounds,
+    )
     # final degrees inside the surviving edge set, filtered once more
     out = (
         e.groupBy("u")
@@ -1134,29 +1106,16 @@ def adamic_adar(
         raise ValueError("adamic_adar: max_degree must be >= 2")
     if top_n < 1:
         raise ValueError("adamic_adar: top_n must be >= 1")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .persist()  # feeds degrees, wedges, and the anti-join probe
-    )
-    sym = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
-    deg = sym.groupBy("z").agg(F.count(F.lit(1)).alias("__d"))
+    # lazy persist: feeds degrees, wedges, and the anti-join probe
+    e = _canonical_edges(edges, src, dst).persist()
+    sym, deg = _degrees(e)
     # deg-1 leaves can never center a wedge — and ln(1) = 0 would
     # divide by zero under ANSI, so they leave the weight table here
-    w = deg.filter(
-        (F.col("__d") >= 2) & (F.col("__d") <= max_degree)
-    ).select(
+    w = deg.filter((F.col("d") >= 2) & (F.col("d") <= max_degree)).select(
         "z",
-        F.expr(
-            "CAST(1.0 / ln(CAST(__d AS DOUBLE)) AS DECIMAL(18,12))"
-        ).alias("__w"),
+        F.expr("CAST(1.0 / ln(CAST(d AS DOUBLE)) AS DECIMAL(18,12))").alias(
+            "__w"
+        ),
     )
     centers = sym.join(w, "z")
     a, b = centers.alias("a"), centers.alias("b")
@@ -1269,23 +1228,12 @@ def jaccard_link_prediction(
         raise ValueError("jaccard_link_prediction: max_degree must be >= 2")
     if top_n < 1:
         raise ValueError("jaccard_link_prediction: top_n must be >= 1")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .persist()  # feeds degrees, wedges, and the anti-join probe
-    )
-    sym = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("u_back"))
-    ).toDF("z", "n")
-    deg = sym.groupBy("z").agg(F.count(F.lit(1)).alias("__d"))
-    nd = deg.select(F.col("z").alias("n"), F.col("__d").alias("__dn"))
+    # lazy persist: feeds degrees, wedges, and the anti-join probe
+    e = _canonical_edges(edges, src, dst).persist()
+    sym, deg = _degrees(e)
+    nd = deg.select(F.col("z").alias("n"), F.col("d").alias("__dn"))
     centers = sym.join(
-        deg.filter(F.col("__d") <= max_degree).select("z"), "z"
+        deg.filter(F.col("d") <= max_degree).select("z"), "z"
     ).join(nd, "n")
     a, b = centers.alias("a"), centers.alias("b")
     pairs = (
@@ -1392,22 +1340,11 @@ def assortativity(
     the tiny degree table + one map-combinable moment agg. No
     windows, no quadratic object anywhere.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .persist()  # feeds the degree agg and both end joins
-    )
-    sym = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
-    deg = sym.groupBy("z").agg(F.count(F.lit(1)).alias("__d"))
-    du = deg.select(F.col("z").alias("z"), F.col("__d").alias("__du"))
-    dv = deg.select(F.col("z").alias("n"), F.col("__d").alias("__dv"))
+    # lazy persist: feeds the degree agg and both end joins
+    e = _canonical_edges(edges, src, dst).persist()
+    sym, deg = _degrees(e)
+    du = deg.select("z", F.col("d").alias("__du"))
+    dv = deg.select(F.col("z").alias("n"), F.col("d").alias("__dv"))
     ends = sym.join(du, "z").join(dv, "n")
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = ends.agg(

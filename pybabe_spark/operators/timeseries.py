@@ -3118,7 +3118,7 @@ def activity_grain(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
 def _stickiness_from_grain(
     act: DataFrame, short_days: int, long_days: int
 ) -> DataFrame:
-    """Engagement table from a (\_\_k, \_\_d) activity grain —
+    """Engagement table from a ``(__k, __d)`` activity grain —
     the shared core of :func:`stickiness`.
 
     ONE contribute-forward explode covers all three windows: each

@@ -1583,20 +1583,15 @@ def _supplier_edges(spark, sf_dir, mod: int = 7):
 @session_memo(users=("jaccard_links_suppliers", "adamic_adar_suppliers"))
 def _supplier_canonical_edges(spark, sf_dir):
     """Canonical (id_a < id_b, distinct) supplier co-occurrence edges
-    of the mod-63 sample. Canonicalization here matches the operators'
-    own (least/greatest + distinct) rule, which is idempotent — the
-    operators re-apply it to the cached table at ~19k-row cost, so
-    semantics are bit-identical to the unshared path."""
-    raw = _supplier_edges(spark, sf_dir, mod=63)
-    e = (
-        raw.select(
-            F.least(F.col("id_a"), F.col("id_b")).alias("id_a"),
-            F.greatest(F.col("id_a"), F.col("id_b")).alias("id_b"),
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-        .filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
-        .distinct()
-    )
+    of the mod-63 sample, through the operators' own rule
+    (``graph._canonical_edges``), which is idempotent — the operators
+    re-apply it to the cached table at ~19k-row cost, so semantics are
+    bit-identical to the unshared path."""
+    from pybabe_spark.operators.graph import _canonical_edges
+
+    e = _canonical_edges(
+        _supplier_edges(spark, sf_dir, mod=63), "id_a", "id_b"
+    ).select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
     # lazy_persist, NOT localCheckpoint: the checkpoint is a barrier —
     # the owner pays a full extra materialization pass before its own
     # wedge work can start (measured: owner 2.4 → 4.2-5.2 s at sf0.1),
@@ -1733,20 +1728,7 @@ def q_triangle_count(spark, sf_dir):
     part."""
     from pybabe_spark.operators.graph import triangle_count
 
-    li = read_table(spark, sf_dir, "lineitem")
-    os_ = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
-    ).distinct()
-    a, b = os_.alias("a"), os_.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.o") == F.col("b.o")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("id_a"), F.col("b.s").alias("id_b"))
-        .filter((F.col("id_a") + F.col("id_b")) % 7 == 0)
-    )
-    return triangle_count(edges)
+    return triangle_count(_supplier_edges(spark, sf_dir, mod=7))
 
 
 def _weighted_sample_sql():
@@ -3551,20 +3533,7 @@ def q_clustering_coeff(spark, sf_dir):
     exact integral 2T/d(d-1) ppm, the ego-net cohesion signal."""
     from pybabe_spark.operators.graph import clustering_coefficient
 
-    li = read_table(spark, sf_dir, "lineitem")
-    os_ = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
-    ).distinct()
-    a, b = os_.alias("a"), os_.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.o") == F.col("b.o")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("id_a"), F.col("b.s").alias("id_b"))
-        .filter((F.col("id_a") + F.col("id_b")) % 7 == 0)
-    )
-    return clustering_coefficient(edges)
+    return clustering_coefficient(_supplier_edges(spark, sf_dir, mod=7))
 
 
 def _skyline_sql():
@@ -4325,20 +4294,10 @@ def q_kcore(spark, sf_dir):
     the same peel; fixpoint equality is the test."""
     from pybabe_spark.operators.graph import k_core
 
-    li = read_table(spark, sf_dir, "lineitem")
-    os_ = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
-    ).distinct()
-    a, b = os_.alias("a"), os_.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.o") == F.col("b.o")) & (F.col("a.s") < F.col("b.s")),
-        )
-        .select(F.col("a.s").alias("id_a"), F.col("b.s").alias("id_b"))
-        .filter((F.col("id_a") + F.col("id_b")) % 7 == 0)
+    return k_core(
+        _supplier_edges(spark, sf_dir, mod=7), k=3, max_rounds=8,
+        id_col="suppkey",
     )
-    return k_core(edges, k=3, max_rounds=8, id_col="suppkey")
 
 
 def _mwu_sql():

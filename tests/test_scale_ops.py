@@ -1090,35 +1090,31 @@ def test_connected_components_string_ids(spark):
     assert cl["z"] == ("z", 1) and cl["d"] == ("a", 5)
 
 
-def test_connected_components_raises_without_fixpoint(spark):
-    import pytest
-
+def test_connected_components_exhaustion_takes_fallback(spark):
+    """max_iters=1 leaves no min-label round: the chain is closed by
+    the star-forest fallback, with the same components."""
     from pybabe_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "id_a bigint, id_b bigint"
     )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(chain, max_iters=1, deep_fallback=False)
+    got = {r["id"]: r["component"]
+           for r in connected_components(chain, max_iters=1).collect()}
+    assert got == {i: 1 for i in range(1, 9)}
 
 
 @pytest.mark.deep
 def test_connected_components_deep_chain_fallback(spark):
     """A 1000-node chain (diameter 999) would need ~999 min-label
     rounds; the large-star/small-star fallback converges in O(log² n)
-    rounds where the simple variant raises. Also checks the fallback
-    keeps a second component and a self-loop-only node intact."""
-    import pytest
-
+    rounds. Also checks the fallback keeps a second component and a
+    self-loop-only node intact."""
     from pybabe_spark.operators.graph import connected_components
 
     rows = [(i, i + 1) for i in range(1000)]          # chain 0..1000
     rows += [(5000, 5001), (5001, 5002)]              # small second comp
     rows += [(7000, 7000)]                            # self-loop only
     chain = spark.createDataFrame(rows, "id_a bigint, id_b bigint")
-
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(chain, max_iters=3, deep_fallback=False)
 
     got = {r["id"]: r["component"]
            for r in connected_components(chain, max_iters=3).collect()}
@@ -2193,6 +2189,72 @@ def test_bfs_multiple_sources_min_distance(spark):
     assert got == {0: 0, 4: 0, 1: 1, 3: 1, 2: 2}
 
 
+def test_bfs_zero_hops_returns_only_the_sources(spark):
+    from pybabe_spark.operators.graph import bfs_distances
+
+    df = spark.createDataFrame([(0, 1), (1, 2)], "id_a int, id_b int")
+    seeds = spark.createDataFrame([(0,), (2,)], "s int")
+    got = {
+        r["id_a"]: r["distance"]
+        for r in bfs_distances(df, seeds, max_hops=0).collect()
+    }
+    assert got == {0: 0, 2: 0}
+    with pytest.raises(ValueError, match="bfs_distances"):
+        bfs_distances(df, seeds, max_hops=-1)
+
+
+def test_bfs_output_is_id_and_int_distance(spark):
+    """BFS is label propagation with one label; the label column does
+    not leak into its output."""
+    from pyspark.sql.types import IntegerType
+
+    from pybabe_spark.operators.graph import bfs_distances
+
+    df = spark.createDataFrame([(0, 1)], "id_a int, id_b int")
+    seeds = spark.createDataFrame([(0,)], "s int")
+    out = bfs_distances(df, seeds, max_hops=2, id_col="node")
+    assert out.columns == ["node", "distance"]
+    assert isinstance(out.schema["distance"].dataType, IntegerType)
+
+
+def test_bfs_ignores_null_endpoints_and_duplicate_sources(spark):
+    from pybabe_spark.operators.graph import bfs_distances
+
+    df = spark.createDataFrame(
+        [(0, 1), (1, None), (None, 2), (1, 3), (3, 3)], "id_a int, id_b int"
+    )
+    seeds = spark.createDataFrame([(0,), (0,)], "s int")
+    rows = bfs_distances(df, seeds, max_hops=4).collect()
+    assert sorted((r["id_a"], r["distance"]) for r in rows) == [
+        (0, 0), (1, 1), (3, 2),
+    ]
+
+
+def test_fixpoint_stops_when_the_fingerprint_repeats(spark):
+    """The driver observes the initial state too: a step that changes
+    nothing stops after one round; a state that never settles runs
+    out of rounds unconverged."""
+    from pyspark.sql import functions as F
+
+    from pybabe_spark.operators.graph import _fixpoint
+
+    calls = []
+
+    def same(df, i):
+        calls.append(i)
+        return df
+
+    fp = [F.count(F.lit(1)).alias("n")]
+    state, converged = _fixpoint(spark.range(3), same, fp, 5)
+    assert converged and calls == [0] and state.count() == 3
+
+    def grow(df, i):
+        return df.unionByName(spark.range(i + 10, i + 11))
+
+    state, converged = _fixpoint(spark.range(1), grow, fp, 2)
+    assert not converged and state.count() == 3
+
+
 def test_frequent_pairs_hand_checked(spark):
     from pybabe_spark.operators.collocations import frequent_pairs
 
@@ -2544,6 +2606,18 @@ def test_sssp_early_stop_matches_full_unroll(spark):
         for r in sssp(edges, _src(spark, [1]), max_hops=2).collect()
     }
     assert got6 == got2 == {1: 0, 2: 100, 3: 200}
+
+
+def test_sssp_source_without_out_edges(spark):
+    from pybabe_spark.operators.graph import sssp
+
+    # 3 only receives edges: the first round changes nothing
+    edges = _sssp_edges(spark, [(1, 3, 1.0), (2, 3, 1.0)])
+    got = {
+        r["id"]: r["dist_cents"]
+        for r in sssp(edges, _src(spark, [3]), max_hops=4).collect()
+    }
+    assert got == {3: 0}
 
 
 # -- target_encode (operators/sampling.py) --------------------------------------

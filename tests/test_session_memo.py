@@ -1,5 +1,6 @@
 """The session memo primitive (queries.session_memo), the registry's
-use of it, and the cache release of the eager VALUES-literal finishes."""
+use of it, and the cache release of the eager VALUES-literal finishes
+and of the iterative graph operators."""
 
 import gc
 import inspect
@@ -105,21 +106,50 @@ def test_memo_users_match_the_registry_callers():
     ],
 )
 def test_eager_finish_releases_its_caches(spark, sf_dir, key, tmp_path):
+    tracked = len(_TRACKED_PERSISTS)
+    assert _persists_left(spark, sf_dir, key, tmp_path) == {}
+    # an eager finish pins through pinned(), which leaves no handle in
+    # lazy_persist's tracker
+    assert len(_TRACKED_PERSISTS) == tracked
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "bfs_supplier_neighborhood",
+        "label_propagation_trade",
+        "sssp_trade_nations",
+        "kcore_suppliers",
+    ],
+)
+def test_iterative_graph_key_releases_its_edge_cache(
+    spark, sf_dir, key, tmp_path
+):
+    """The construction-time rounds' edge cache is gone after return;
+    only the rounds' local checkpoints stay (the returned plan reads
+    the last one)."""
+    left = _persists_left(spark, sf_dir, key, tmp_path)
+    assert {i for i, local in left.items() if not local} == set()
+
+
+def _persists_left(spark, sf_dir, key, tmp_path):
+    """The persistent RDDs that one ``count()`` of ``key`` adds and
+    leaves behind, as ``{rdd id: is locally checkpointed}``."""
     # a fresh path to the same data: a session memo misses (the build
     # runs), and no cache an earlier test left can absorb a new persist
     data = tmp_path / "data"
     os.symlink(os.path.abspath(sf_dir), data)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+
     # compare ids, not counts: the ContextCleaner may free RDDs that
     # earlier tests left while this action runs
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-    before, tracked = persisted(), len(_TRACKED_PERSISTS)
+    before = set(rdds().keySet())
     all_queries()[key](spark, str(data)).count()
-    assert persisted() - before == set()
-    # an eager finish pins through pinned(), which leaves no handle in
-    # lazy_persist's tracker
-    assert len(_TRACKED_PERSISTS) == tracked
+    live = rdds()
+    return {
+        i: live.get(i).rdd().isLocallyCheckpointed()
+        for i in set(live.keySet()) - before
+    }
 
 
 def test_pinned_releases_on_exception(spark):
