@@ -3,8 +3,8 @@
 Reference: pybabe/timeparse.py (multi-format lenient parse with
 ``/-,`` → space normalization, tz via pytz) and pybabe/types.py:8-49
 (``typedetect`` regex inference). Spark-first: a ``coalesce`` ladder of
-``try_to_timestamp`` formats — all JVM-side, no Python — and a
-sampling-free two-pass type detector built on ``try_cast`` counts.
+``try_to_timestamp`` formats — all JVM-side, no Python — and a type
+detector built on ``try_cast`` failure counts over a bounded sample.
 """
 
 from __future__ import annotations
@@ -142,6 +142,29 @@ def parse_time(
 _DETECT_ORDER = ["bigint", "double", "timestamp", "date"]
 
 
+#: Regex screens for the types whose failed ``try_cast`` throws. Java
+#: regex, applied through the Column API (inside ``F.expr`` the SQL
+#: parser turns ``\x00`` into ``x00``); the edge class is what the casts
+#: trim.
+_CAST_SCREENS = {
+    "bigint": r"^[\x00-\x20\x7f]*[+-]?[0-9]+[\x00-\x20\x7f]*$",
+    "double": (
+        r"(?i)^[\x00-\x20\x7f]*[+-]?(nan|inf|infinity"
+        r"|0x[0-9a-f.]*p[+-]?[0-9]+[fd]?|[0-9.]+(e[+-]?[0-9]+)?[fd]?)"
+        r"[\x00-\x20\x7f]*$"
+    ),
+}
+
+
+def _cast_fails(c: str, t: str) -> Column:
+    """``try_cast(trim(c) as t) IS NULL``, with the cast skipped for
+    values the type's screen rejects (``Or`` short-circuits)."""
+    v = F.trim(F.col(c))
+    fails = v.try_cast(t).isNull()
+    screen = _CAST_SCREENS.get(t)
+    return fails if screen is None else ~v.rlike(screen) | fails
+
+
 def typedetect(
     df: DataFrame,
     fields: Sequence[str] | None = None,
@@ -152,42 +175,32 @@ def typedetect(
     Pass 1 (one aggregation over a bounded sample): for each candidate
     column and type, count non-null values where try_cast fails. Pass 2:
     cast columns whose failure count is zero to the first matching type.
-    Two Spark jobs total, independent of column count; nothing collects
-    but one aggregate row.
+    Pass 1 runs two Spark jobs under AQE (the sample's limit, then the
+    aggregate), independent of column count, and collects one row; pass
+    2 is lazy.
     """
     string_cols = [c for c, t in df.dtypes if t == "string"]
     targets = [c for c in (fields or string_cols) if c in string_cols]
     if not targets:
         return df
-    # limit() funnels the sample into ONE task; repartition after it so
-    # the try_cast detection scan parallelizes (the reshuffle of
-    # sample_rows rows is far cheaper than a serial regex/cast pass)
-    sample = df.select(*targets).limit(sample_rows).repartition(32)
+    # a failed bigint/double try_cast costs a thrown exception per value,
+    # so _cast_fails screens values by regex first; a screen may only be
+    # looser than the cast, never stricter
+    sample = df.select(*targets).limit(sample_rows)
     aggs = []
     for c in targets:
         for t in _DETECT_ORDER:
             aggs.append(
                 F.count(
-                    F.when(
-                        F.col(c).isNotNull()
-                        & F.expr(f"try_cast(trim(`{c}`) as {t})").isNull(),
-                        1,
-                    )
+                    F.when(F.col(c).isNotNull() & _cast_fails(c, t), 1)
                 ).alias(f"{c}||{t}"),
             )
         aggs.append(F.count(F.col(c)).alias(f"{c}||nonnull"))
         # any value with a real time-of-day component? (timestamp vs date)
+        ts = F.trim(F.col(c)).try_cast("timestamp")
         aggs.append(
-            F.count(
-                F.when(
-                    F.expr(
-                        f"try_cast(trim(`{c}`) as timestamp) is not null and "
-                        f"try_cast(trim(`{c}`) as timestamp) != "
-                        f"date_trunc('DAY', try_cast(trim(`{c}`) as timestamp))"
-                    ),
-                    1,
-                )
-            ).alias(f"{c}||hastime"),
+            F.count(F.when(ts != F.date_trunc("DAY", ts), 1))
+            .alias(f"{c}||hastime"),
         )
     stats = sample.agg(*aggs).collect()[0].asDict()
 

@@ -1,13 +1,21 @@
 """Infra operators: memoize cache, log tap, mail transport, primary-key
 detect, typedetect, parse_time policies, pull format dispatch."""
 
+import functools
+import itertools
+import operator
 import os
 import zipfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from pybabe_spark.functions.time import parse_time, typedetect
+from pybabe_spark.functions.time import (
+    _DETECT_ORDER,
+    _cast_fails,
+    parse_time,
+    typedetect,
+)
 from pybabe_spark.operators.infra import (
     log_stream,
     mail,
@@ -65,7 +73,6 @@ def test_primary_key_detect(spark, sf_dir):
     assert primary_key_detect(no_pk) is None
 
 
-@pytest.mark.deep
 def test_typedetect_mixed(spark):
     df = spark.createDataFrame(
         [("1", "1.5", "2020-01-02", "abc"), ("2", "2,25", "2021-03-04", "def")],
@@ -78,7 +85,6 @@ def test_typedetect_mixed(spark):
     assert dt["s"] == "string"
 
 
-@pytest.mark.deep
 def test_typedetect_datetime_keeps_time_of_day(spark):
     """ISO datetimes must detect as timestamp, not date (Spark's
     string->date cast truncates '2020-01-02 10:30:00' silently; the
@@ -95,6 +101,102 @@ def test_typedetect_datetime_keeps_time_of_day(spark):
     assert dt["d"] == "date"
     assert dt["mid"] == "date"  # all-midnight: really a date column
     assert str(out.collect()[0]["dt"]) == "2020-01-02 10:30:00"
+
+
+def test_typedetect_edges_hand_checked(spark):
+    """Padded integers stay bigint; hex floats, NaN, inf and a 'd'
+    suffix are double; a bigint overflow falls through to double; a
+    TPC-H priority and Arabic-Indic digits stay strings."""
+    cols = {
+        "i": [" 12 ", "\t-7", "+5"],
+        "d1": ["1e3", "0x1p3", "NaN"],
+        "d2": ["inf", "1.5d", "2"],
+        "big": ["9223372036854775808", "1", "2"],
+        "s": ["1-URGENT", "2-HIGH", "3"],
+        "u": ["\u0661\u0662", "1", "2"],
+    }
+    df = spark.createDataFrame(
+        list(zip(*cols.values())), ", ".join(f"{c} string" for c in cols)
+    )
+    out = typedetect(df)
+    assert dict(out.dtypes) == {
+        "i": "bigint", "d1": "double", "d2": "double",
+        "big": "double", "s": "string", "u": "string",
+    }
+    rows = [r.asDict() for r in out.collect()]
+    assert [r["i"] for r in rows] == [12, -7, 5]
+    assert [r["d1"] for r in rows[:2]] == [1000.0, 8.0]
+    assert rows[2]["d1"] != rows[2]["d1"]  # NaN
+    assert [r["d2"] for r in rows] == [float("inf"), 1.5, 2.0]
+    assert rows[0]["big"] == 9223372036854775808.0
+
+
+def test_cast_fails_equals_try_cast_on_a_grid(spark):
+    """The regex screens are necessary conditions: on every string of up
+    to 3 characters over sign/digit/dot/exponent/hex/NaN/inf letters,
+    spaces, control characters, an ideographic space and an Arabic-Indic
+    digit, plus overflow and special-value cases, the screened failure
+    flag equals the plain try_cast one for every detected type."""
+    alphabet = list("07+-.eExpdfnaI") + [" ", "\t", "\x00", "\x7f",
+                                         "\u3000", "\u0661"]
+    values = [
+        "".join(p) for n in range(4)
+        for p in itertools.product(alphabet, repeat=n)
+    ]
+    values += [
+        "9223372036854775807", "9223372036854775808",
+        "-9223372036854775808", "-9223372036854775809",
+        "NaN", "Infinity", "-Infinity", "inf", "+INF", "nan",
+        "0x1p3", "0X1P-2d", "1e309", "+.5", "5.", "1F",
+        "1995-01-02", "1-URGENT", "",
+    ]
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    assert "rlike(" in str(_cast_fails("v", "bigint"))
+    mismatch = {
+        t: _cast_fails("v", t) != F.expr(f"try_cast(trim(v) as {t})").isNull()
+        for t in _DETECT_ORDER
+    }
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.count(F.when(m, 1)).alias(f"bad_{t}") for t, m in mismatch.items()],
+        *[F.count(F.when(~_cast_fails("v", t), 1)).alias(f"ok_{t}")
+          for t in _DETECT_ORDER],
+    ).collect()[0].asDict()
+    if any(stats[f"bad_{t}"] for t in _DETECT_ORDER):
+        bad = df.filter(
+            functools.reduce(operator.or_, mismatch.values())
+        ).limit(20).collect()
+        pytest.fail(f"screened and plain try_cast disagree: {stats} {bad}")
+    assert stats["n"] == len(values) > 8000
+    # the grid exercises both sides of every type's decision
+    assert all(
+        0 < stats[f"ok_{t}"] < len(values) for t in _DETECT_ORDER
+    ), stats
+
+
+def test_typedetect_runs_at_most_two_jobs(spark, tmp_path):
+    """Detection is one aggregate over a limit: under AQE a limit stage
+    and the aggregate, with no reshuffle of the sample in between."""
+    path = tmp_path / "t.csv"
+    path.write_text(
+        "a,b,c,d\n"
+        + "".join(f"{i},{i}.5,1995-01-{i % 28 + 1:02d},{i}-URGENT\n"
+                  for i in range(200))
+    )
+    df = pull(spark, str(path), infer_schema=False)
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id():
+        # the newest id, not a count: the status store keeps only the
+        # last spark.ui.retainedJobs jobs, so its size can drop
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job_id()
+    out = typedetect(df)
+    assert last_job_id() - before <= 2
+    assert dict(out.dtypes) == {
+        "a": "bigint", "b": "double", "c": "date", "d": "string",
+    }
 
 
 @pytest.mark.deep
