@@ -38,6 +38,17 @@ def attach_scalars(df, scalars):
     return df.crossJoin(F.broadcast(scalars))
 
 
+def round6(x):
+    """``x`` rounded half-up to 6 dp as Spark's and DuckDB's
+    ``CAST(double AS DECIMAL(18,6))`` round it: from the double's
+    shortest round-trip decimal (``repr``), not its exact binary value
+    — ``3.5e-06`` sits just below the tie in binary, so ``Decimal(x)``
+    rounds it to 0.000003 where both engines give 0.000004."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+
+
 def _sql_lit(v, typ: str) -> str:
     """One exactly-round-tripping SQL literal of declared type."""
     if v is None:

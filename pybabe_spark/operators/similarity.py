@@ -1168,21 +1168,18 @@ def _pq_encode_udf(CB: "np.ndarray"):
 def _adc_query_tables(qrows, CB: "np.ndarray", id_col: str, vec_col: str):
     """Per-query ADC lookup tables as DECIMAL(18,6) values, aligned
     with ``qrows``: the same bit-exact left-to-right arithmetic as the
-    oracle's SQL chains (:func:`_pq_sub_dists`), quantized with python
-    ``decimal`` ROUND_HALF_UP — the identical rounding of Spark's and
-    DuckDB's double→decimal casts. Shared by :func:`ann_pq` and
-    :func:`ann_ivfpq` so their distances stay bit-equal."""
-    from decimal import ROUND_HALF_UP, Decimal
+    oracle's SQL chains (:func:`_pq_sub_dists`), quantized by
+    :func:`~pybabe_spark.operators._util.round6` — the identical
+    rounding of Spark's and DuckDB's double→decimal casts. Shared by
+    :func:`ann_pq` and :func:`ann_ivfpq` so their distances stay
+    bit-equal."""
+    from pybabe_spark.operators._util import round6
 
     Q = np.asarray([list(r[vec_col]) for r in qrows], dtype="float64")
     T = _pq_sub_dists(Q, CB)
-    six = Decimal("0.000001")
     return [
         [
-            [
-                Decimal(float(T[qi, j, c])).quantize(six, ROUND_HALF_UP)
-                for c in range(T.shape[2])
-            ]
+            [round6(T[qi, j, c]) for c in range(T.shape[2])]
             for j in range(T.shape[1])
         ]
         for qi in range(len(qrows))
@@ -1240,8 +1237,8 @@ def ann_pq(
     Plan shape: the query tables (queries × m × ks entries, tiny by the
     small-query contract) are computed driver-side with the same
     bit-exact left-to-right arithmetic as the oracle's SQL chains, then
-    DECIMAL(18,6)-quantized (python ``decimal`` ROUND_HALF_UP — the
-    identical rounding of Spark's and DuckDB's double→decimal casts)
+    DECIMAL(18,6)-quantized (``round6`` — the identical rounding of
+    Spark's and DuckDB's double→decimal casts)
     and broadcast; the corpus side is the CODES table only — one narrow
     scan, a zip_with/aggregate lookup-sum per row, per-query top-k via
     window rank. No shuffle of the corpus beyond the top-k exchange;

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -1039,49 +1039,140 @@ def ab_test_sql(
     """
 
 
-def _cell_offsets(btot: DataFrame, keys: "list[str]", buckets: int):
-    """Per-(group, cell) prefix offsets and group totals from a cell-
-    totals table ``(*keys, __b, __bt)``: returns ``(*keys, __b, __off,
-    __bt, __tot)`` with ``__off`` the exclusive prefix of ``__bt``.
-    ≤ ``buckets`` rows per group, so keyed groups use bounded
-    key-partitioned windows over the cell-TOTALS table, never over the
-    data; the global form is a ``limit``-proved prefix self-join plus
-    a 1-row total attach (the ``active_intervals`` bucket-prefix
-    idiom)."""
+# The exact de-globalized cumulative behind the rank, CDF and quantile
+# operators: values fall into ≤ buckets equal-width cells of their
+# range (_cell_of), each cell gets the exclusive prefix of the earlier
+# cells' totals from the tiny cell-totals table (_cell_offsets), and a
+# window partitioned by (group, cell) adds that offset (_midrank2 for
+# doubled midranks). Never hand-write a cell id or a prefix self-join.
+
+
+def _cell_of(v: str, lo, hi, buckets: int) -> Column:
+    """Equal-width cell id in ``[0, buckets − 1]`` of the bigint column
+    ``v`` over the range ``[lo, hi]``. ``lo``/``hi`` are attached column
+    names (in-plan range) or Python ints (driver-collected range).
+    DECIMAL(38,0) math: ``(v − lo) · buckets`` overflows bigint for
+    wide cents ranges."""
+    lo, hi = (
+        x if isinstance(x, str) else f"CAST({int(x)} AS BIGINT)"
+        for x in (lo, hi)
+    )
+    return F.expr(
+        f"CAST((CAST({v} AS DECIMAL(38,0)) - {lo}) * {buckets}"
+        f" div (CAST({hi} AS DECIMAL(38,0)) - {lo} + 1) AS BIGINT)"
+    )
+
+
+def _cell_offsets(
+    btot: DataFrame,
+    keys: "list[str]",
+    cols: "dict[str, str]",
+    buckets: int,
+    tot: bool = False,
+):
+    """Per-(group, cell) prefix offsets from a cell-totals table
+    ``(*keys, __b, *cols)``: returns ``(*keys, __b, *offsets)`` where
+    ``cols`` maps each total column to the name of its exclusive
+    prefix. ``tot`` (the target-cell search of the quantile operators)
+    also keeps the cell totals and adds ``__tot``, the group total of
+    the first column. ≤ ``buckets`` rows per group, so keyed groups use
+    bounded key-partitioned windows over the cell-TOTALS table, never
+    over the data; the global form is a ``limit(buckets)``-proved left
+    prefix self-join (plus a 1-row total attach) — the caller
+    guarantees at most ``buckets`` cells, so the limit never
+    truncates. Without ``tot`` the self-join's left side keeps only
+    the cell id, which Catalyst can prune to the distinct cells."""
     from pybabe_spark.operators._util import attach_scalars
 
-    zero = F.lit(0).cast("decimal(38,0)")
+    zero = F.lit(0)
+    kept = list(cols) if tot else []
+    first = next(iter(cols))
     if keys:
         wb = Window.partitionBy(*keys).orderBy(F.col("__b").asc())
+        prior = wb.rowsBetween(Window.unboundedPreceding, -1)
+        total = wb.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
         return btot.select(
             *keys,
             "__b",
-            F.coalesce(
-                F.sum("__bt").over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                zero,
-            ).alias("__off"),
-            "__bt",
-            F.sum("__bt")
-            .over(
-                wb.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("__tot"),
+            *[
+                F.coalesce(F.sum(c).over(prior), zero).alias(o)
+                for c, o in cols.items()
+            ],
+            *kept,
+            *([F.sum(first).over(total).alias("__tot")] if tot else []),
         )
-    bounded = btot.limit(buckets)  # boundedness proof for the linter;
-    # the cell id is < buckets by construction, so the limit can never
-    # truncate
+    bounded = btot.limit(buckets)  # boundedness proof for the linter
     a, b = bounded.alias("a"), bounded.alias("b")
-    return attach_scalars(
+    offs = (
         a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-        .groupBy(F.col("a.__b").alias("__b"), F.col("a.__bt").alias("__bt"))
-        .agg(F.coalesce(F.sum("b.__bt"), zero).alias("__off"))
-        .select("__b", "__off", "__bt"),
-        bounded.agg(F.sum("__bt").alias("__tot")),
+        .groupBy(
+            F.col("a.__b").alias("__b"),
+            *[F.col(f"a.{c}").alias(c) for c in kept],
+        )
+        .agg(
+            *[
+                F.coalesce(F.sum(f"b.{c}"), zero).alias(o)
+                for c, o in cols.items()
+            ]
+        )
+        .select("__b", *cols.values(), *kept)
     )
+    if not tot:
+        return offs
+    return attach_scalars(offs, bounded.agg(F.sum(first).alias("__tot")))
+
+
+def _midrank2(
+    j: DataFrame,
+    keys: "list[str]",
+    col: str,
+    out: str,
+    offs: DataFrame,
+    broadcast_offsets: bool = True,
+    nv: str | None = None,
+) -> DataFrame:
+    """Append ``out`` = ``2·(off + cum_<(v)) + n_v + 1``, TWICE the
+    average tie-rank of ``col`` within its (``keys``) group, to the
+    grain ``j`` carrying a bigint multiplicity ``__c`` and its cell id
+    ``__b``. ``offs`` holds the exclusive cell prefix ``(*keys, __b,
+    __off)``, built in-plan by :func:`_cell_offsets` or a VALUES literal
+    of driver-collected cells. cum_< is the (group, cell)-partitioned
+    RANGE cumulative up to ``v − 1`` — it skips every row tied at v —
+    and n_v the peers-only RANGE sum (also appended as ``nv`` when
+    named), so no distinct-value rank table is ever joined back.
+
+    Keyed offsets are bounded by (groups × buckets) rows. Unhinted,
+    Catalyst cannot estimate a window's output and plans a
+    SortMergeJoin back (2 Exchanges + 2 Sorts per rank pass); the hint
+    makes it the BroadcastHashJoin the bound justifies for bounded
+    group domains (≤10⁴ groups ⟹ ≤10⁷ offset rows of two bigints). A
+    genuinely unbounded group domain passes ``broadcast_offsets=False``
+    and keeps the planner's own join."""
+    if keys:
+        offr = offs.withColumnRenamed("__b", "__b2")
+        for k in keys:
+            offr = offr.withColumnRenamed(k, f"__k_{k}")
+        conds = [F.col("__b") == F.col("__b2")] + [
+            F.col(k).eqNullSafe(F.col(f"__k_{k}")) for k in keys
+        ]
+        offj = F.broadcast(offr) if broadcast_offsets else offr
+        cum_in = j.join(
+            offj, reduce(lambda a, b: a & b, conds)
+        ).drop("__b2", *[f"__k_{k}" for k in keys])
+    else:
+        cum_in = j.join(F.broadcast(offs), ["__b"])
+    w = Window.partitionBy(*keys, "__b").orderBy(F.col(col).asc())
+    cum_lt = F.coalesce(
+        F.sum("__c").over(w.rangeBetween(Window.unboundedPreceding, -1)),
+        F.lit(0),
+    )
+    n_v = F.sum("__c").over(w.rangeBetween(0, 0))
+    r2 = (2 * (F.col("__off") + cum_lt) + n_v + 1).cast("bigint")
+    return cum_in.withColumns(
+        {out: r2, **({nv: n_v} if nv else {})}
+    ).drop("__b", "__off")
 
 
 def weighted_quantiles(
@@ -1107,20 +1198,17 @@ def weighted_quantiles(
     Scale shape — and the difference from the unweighted form: no
     per-group value buffer, and NO per-group cumulative funnel. One
     (group, value) hash agg collapses duplicates; the GLOBAL value
-    range (one 1-row min/max agg, maxRows-proven broadcast attach)
-    splits into ``buckets`` equal-width cells, so the cumulative sum
+    range (one bounded 1-row collect) splits into ``buckets``
+    equal-width cells (:func:`_cell_of`), so the cumulative sum
     runs in a window partitioned by (group, CELL) — parallelism is
     groups × cells, not groups. Cell offsets AND the group total both
     ride the (group, cell)-totals side table (≤ ``buckets`` rows per
-    group): per-group running/total sums when keyed (a bounded
-    key-partitioned window), a ``limit``-proved prefix self-join plus
-    a 1-row total attach (the ``active_intervals`` bucket-prefix
-    idiom) when global — so the big side is only ever joined to
-    broadcast-sized tables. Every prob is a conditional min in ONE
-    final hash agg (probs add counters, not passes). Cells use the
-    GLOBAL range: a group concentrated in a narrow value slice
-    degrades toward the old per-group funnel for THAT group only,
-    and is never worse; raise ``buckets`` to tighten.
+    group, :func:`_cell_offsets`) — so the big side is only ever
+    joined to broadcast-sized tables. Every prob is a conditional min
+    in ONE final hash agg (probs add counters, not passes). Cells use
+    the GLOBAL range: a group concentrated in a narrow value slice
+    degrades toward the old per-group funnel for THAT group only, and
+    is never worse; raise ``buckets`` to tighten.
 
     EAGER (r13): construction runs one bounded driver action (the
     1-row global range collect) — calling this triggers cluster jobs
@@ -1174,20 +1262,14 @@ def weighted_quantiles(
             (f"`{esc}` {by_typ}, " if by else "")
             + "prob double, value double",
         )
-    # equal-width cell of the GLOBAL range, in [0, buckets-1];
-    # decimal math — (v - lo) * buckets can overflow bigint cents
-    cell = F.expr(
-        f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
-        f" * {buckets} div (CAST({hi} AS BIGINT)"
-        f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
-    )
+    cell = _cell_of("__v", lo, hi, buckets)  # of the GLOBAL range
     j = base.withColumn("__b", cell)
     btot = rows.groupBy(*keys, cell.alias("__b")).agg(
         F.sum(F.col("__w").cast("decimal(38,0)"))
         .cast("decimal(38,0)")
         .alias("__bt")
     )
-    offs = _cell_offsets(btot, keys, buckets)
+    offs = _cell_offsets(btot, keys, {"__bt": "__off"}, buckets, tot=True)
     # TARGET CELL per (group, prob), resolved on the tiny table: the
     # first cell whose inclusive cumulative reaches p·tot — the cell
     # that contains the answer (all earlier cells sit strictly below
@@ -1610,12 +1692,11 @@ def mann_whitney_u(
     Scale shape (the weighted_quantiles discipline): one (value → arm
     counts) hash agg collapses duplicates; the control-count running
     sum over the DISTINCT values is DE-GLOBALIZED — the value range
-    (one 1-row min/max attach) splits into 1024 equal-width cells, the
-    cumsum runs in a window partitioned by CELL, and cell offsets come
-    from a ``limit``-proved prefix self-join over the ≤1024-row
-    cell-totals table (the ``active_intervals`` bucket-prefix idiom —
-    no single-task funnel even when the metric's dynamic range is
-    large); one final 1-row agg.
+    (one 1-row min/max attach) splits into 1024 equal-width cells
+    (:func:`_cell_of`), the cumsum runs in a window partitioned by
+    CELL, and cell offsets come from the ≤1024-row cell-totals table
+    (:func:`_cell_offsets` — no single-task funnel even when the
+    metric's dynamic range is large); one final 1-row agg.
     ``u2 = Σ_v cb(v)·(2·cumA_less(v) + ca(v))`` where cumA_less is the
     control count strictly below v.
     """
@@ -1641,20 +1722,13 @@ def mann_whitney_u(
         F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
     )
     j = attach_scalars(base, stats).withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - __lo) * {buckets}"
-            " div (CAST(__hi AS DECIMAL(38,0)) - __lo + 1) AS BIGINT)"
-        ),
+        "__b", _cell_of("__v", "__lo", "__hi", buckets)
     )
-    btot = j.groupBy("__b").agg(F.sum("__ca").alias("__bca"))
-    bounded = btot.limit(buckets)  # boundedness proof for the linter;
-    # __b < buckets by construction, the limit can never truncate
-    a, b = bounded.alias("a"), bounded.alias("b")
-    offs = (
-        a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-        .groupBy(F.col("a.__b").alias("__b"))
-        .agg(F.coalesce(F.sum("b.__bca"), F.lit(0)).alias("__off"))
+    offs = _cell_offsets(
+        j.groupBy("__b").agg(F.sum("__ca").alias("__bca")),
+        [],
+        {"__bca": "__off"},
+        buckets,
     )
     w = Window.partitionBy("__b").orderBy(F.col("__v").asc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -1791,10 +1865,11 @@ def ks_test(
     Scale shape (the weighted_quantiles / mann_whitney discipline):
     one (value → per-arm counts) hash agg collapses duplicates, the
     BOTH-arm running sums over distinct values are de-globalized via
-    1024 equal-width cells (1-row min/max attach; cell offsets from a
-    ``limit``-proved prefix self-join over the ≤1024-row cell-totals
-    table; cumsum windows partitioned by cell), arm totals ride a
-    1-row broadcast attach, one final fixed-shape agg. No global
+    1024 equal-width cells (1-row min/max attach, :func:`_cell_of`;
+    cell offsets from the ≤1024-row cell-totals table,
+    :func:`_cell_offsets`; cumsum windows partitioned by cell), arm
+    totals ride a 1-row broadcast attach, one final fixed-shape agg.
+    No global
     window anywhere — the plan is all map-combinable aggs plus
     bounded-small joins, sound at 100×.
     """
@@ -1818,25 +1893,15 @@ def ks_test(
         F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
     )
     j = attach_scalars(base, rng).withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - __lo) * {buckets}"
-            " div (CAST(__hi AS DECIMAL(38,0)) - __lo + 1) AS BIGINT)"
+        "__b", _cell_of("__v", "__lo", "__hi", buckets)
+    )
+    offs = _cell_offsets(
+        j.groupBy("__b").agg(
+            F.sum("__ca").alias("__bca"), F.sum("__cb").alias("__bcb")
         ),
-    )
-    btot = j.groupBy("__b").agg(
-        F.sum("__ca").alias("__bca"), F.sum("__cb").alias("__bcb")
-    )
-    bounded = btot.limit(buckets)  # boundedness proof for the linter;
-    # __b < buckets by construction, the limit can never truncate
-    a, b = bounded.alias("a"), bounded.alias("b")
-    offs = (
-        a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-        .groupBy(F.col("a.__b").alias("__b"))
-        .agg(
-            F.coalesce(F.sum("b.__bca"), F.lit(0)).alias("__offa"),
-            F.coalesce(F.sum("b.__bcb"), F.lit(0)).alias("__offb"),
-        )
+        [],
+        {"__bca": "__offa", "__bcb": "__offb"},
+        buckets,
     )
     w = Window.partitionBy("__b").orderBy(F.col("__v").asc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -2283,77 +2348,24 @@ def _pair_rank2(
     """Append ``out`` = TWICE the average tie-rank of ``col`` within
     its group (2·rank keeps half-ranks integral — ties average to
     .5s) to a pre-aggregated grain ``pdf`` carrying a bigint
-    multiplicity column ``__c``. Ranks are computed IN PLACE on the
-    grain with RANGE frames — ``2·cum_<(v) + n_v + 1`` where cum_< is
-    the (group, cell)-partitioned range-cumulative up to ``v − 1``
-    plus the cell offset and n_v is the peers-only range sum — so
-    there is NO distinct-value rank table and NO value-keyed shuffle
-    join back (the r12 de-join rewrite, shared shape with
-    :func:`_kw_rank_sums`). Cells come from the global value range
-    (1024 equal-width buckets), offsets from the tiny per-(group,
-    cell) totals — no per-group funnel."""
+    multiplicity column ``__c``: cells of the global value range
+    (:func:`_cell_of`), offsets from the tiny per-(group, cell) totals
+    (:func:`_cell_offsets`), the midrank step in place on the grain
+    (:func:`_midrank2`) — no per-group funnel, no distinct-value rank
+    table joined back."""
     from pybabe_spark.operators._util import attach_scalars
 
     rng = pdf.agg(F.min(col).alias("__lo"), F.max(col).alias("__hi"))
     j = attach_scalars(pdf, rng).withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST({col} AS DECIMAL(38,0)) - __lo) * {buckets}"
-            " div (CAST(__hi AS DECIMAL(38,0)) - __lo + 1) AS BIGINT)"
-        ),
+        "__b", _cell_of(col, "__lo", "__hi", buckets)
     ).drop("__lo", "__hi")
-    btot = j.groupBy(*keys, "__b").agg(F.sum("__c").alias("__bt"))
-    if keys:
-        wb = Window.partitionBy(*keys).orderBy(F.col("__b").asc())
-        offs = btot.select(
-            *keys,
-            "__b",
-            F.coalesce(
-                F.sum("__bt").over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).alias("__off"),
-        )
-        offr = offs.withColumnRenamed("__b", "__b2")
-        for k in keys:
-            offr = offr.withColumnRenamed(k, f"__k_{k}")
-        conds = [F.col("__b") == F.col("__b2")] + [
-            F.col(k).eqNullSafe(F.col(f"__k_{k}")) for k in keys
-        ]
-        # offs is bounded by (groups × buckets) rows — a per-(group,
-        # cell) total, never data-sized. Unhinted, Catalyst cannot
-        # estimate a window's output and planned a SortMergeJoin here
-        # (2 Exchanges + 2 Sorts per rank pass, ×2 passes in spearman —
-        # the r13 plan audit's dominant shape); the hint makes it the
-        # BroadcastHashJoin the size bound justifies for the bounded
-        # group domains the grouped-stats operators target (flags,
-        # languages, statuses — ≤10⁴ groups ⟹ ≤10⁷ offset rows of two
-        # bigints). A genuinely unbounded by-domain needs the shuffle
-        # join back — callers pass ``broadcast_offsets=False`` and the
-        # planner keeps its own (sort-merge) choice.
-        offj = F.broadcast(offr) if broadcast_offsets else offr
-        cum_in = j.join(
-            offj, reduce(lambda a, b: a & b, conds)
-        ).drop("__b2", *[f"__k_{k}" for k in keys])
-    else:
-        bounded = btot.limit(buckets)
-        a, b = bounded.alias("a"), bounded.alias("b")
-        offs = (
-            a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-            .groupBy(F.col("a.__b").alias("__b"))
-            .agg(F.coalesce(F.sum("b.__bt"), F.lit(0)).alias("__off"))
-        )
-        cum_in = j.join(F.broadcast(offs), ["__b"])
-    w = Window.partitionBy(*keys, "__b").orderBy(F.col(col).asc())
-    cum_lt = F.coalesce(
-        F.sum("__c").over(w.rangeBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
+    offs = _cell_offsets(
+        j.groupBy(*keys, "__b").agg(F.sum("__c").alias("__bt")),
+        keys,
+        {"__bt": "__off"},
+        buckets,
     )
-    n_v = F.sum("__c").over(w.rangeBetween(0, 0))
-    return cum_in.withColumn(
-        out, (2 * (F.col("__off") + cum_lt) + n_v + 1).cast("bigint")
-    ).drop("__b", "__off")
+    return _midrank2(j, keys, col, out, offs, broadcast_offsets)
 
 
 def spearman_corr(
@@ -3472,26 +3484,27 @@ def tukey_hsd_sql(
     """
 
 
-def _kw_enriched(
-    df: DataFrame, group_col: str, value_col: str, persist: bool = True
-):
-    """The shared (value, group)-grain rank stage behind
-    :func:`_kw_rank_sums` and :func:`_kw_core_rolled`: returns
-    ``(cnt, enriched)`` where cnt is the (``__v``, ``__g``, ``__c``)
-    count grain and enriched adds the exact doubled midrank
-    ``__r2 = 2·cum_<(v) + n_v + 1`` and the per-value total ``__nv``
-    (peers-only RANGE sum) via the de-globalized 1024-cell cumulative
-    — see :func:`kruskal_wallis` for the full shape.
+def _kw_grain(df: DataFrame, group_col: str, value_col: str):
+    """The (``__v``, ``__g``, ``__c``) count grain of the KW/Dunn rank
+    core: cents-lifted values per group, NULL values and groups
+    excluded."""
+    ok = F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
+    x = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
+    return (
+        df.filter(ok)
+        .groupBy(x.alias("__v"), F.col(group_col).alias("__g"))
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
 
-    ``persist``: pin the count grain (default). The multi-action
-    consumers (:func:`_kw_rank_sums`'s per_g + vtot pair feeding
-    separate KW/Dunn finishes) need the pin or every downstream action
-    re-runs the scan + first shuffle. The single-action rolled core
-    passes False: within ONE plan, ReuseExchange dedups the grain's
-    exchange across branches, and A/B runs showed the InMemoryRelation
-    pin consistently ~0.8 s SLOWER there (cache-write cost + the
-    relation blocking AQE exchange reuse, so six branch jobs raced to
-    build the same cache).
+
+def _kw_rank_sums(df: DataFrame, group_col: str, value_col: str):
+    """Shared rank machinery of :func:`kruskal_wallis` and
+    :func:`dunn_test`, in-plan: exact doubled-midrank group sums over
+    the de-globalized 1024-cell cumulative (:func:`_pair_rank2` on the
+    (value, group) count grain, no keys). Returns ``(per_g, vtot)`` —
+    per_g has ``(__g, __ng, __rs2)`` with __rs2 the exact DECIMAL(38,0)
+    doubled rank sum; vtot is the (value, count) grain for tie
+    corrections.
 
     (r13 A/B, rejected: skipping the grain agg and running the RANGE
     windows over raw __c = 1 rows is ~0.4 s SLOWER at sf0.1 — the
@@ -3499,173 +3512,62 @@ def _kw_enriched(
     dedups across the stats/cell-total/window branches; without it
     each branch re-scans the source.)
     """
-    buckets = 1024
-    ok = F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    x = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
-    from pybabe_spark.operators._util import attach_scalars, lazy_persist
+    from pybabe_spark.operators._util import lazy_persist
 
-    cnt = (
-        df.filter(ok)
-        .groupBy(x.alias("__v"), F.col(group_col).alias("__g"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    # the grain feeds several downstream branches (vtot, range stats,
-    # cell totals, offsets, the window main path, and the consumers'
-    # tie/total aggs); in the multi-action shape each branch would
-    # re-run the scan + first shuffle without the pin
-    if persist:
-        cnt = lazy_persist(cnt)
-    stats = cnt.agg(F.min("__v").alias("__lo"), F.max("__v").alias("__hi"))
-    j = attach_scalars(cnt, stats).withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - __lo) * {buckets}"
-            " div (CAST(__hi AS DECIMAL(38,0)) - __lo + 1) AS BIGINT)"
-        ),
-    )
-    btot = j.groupBy("__b").agg(F.sum("__c").alias("__bnv"))
-    bounded = btot.limit(buckets)  # __b < buckets by construction —
-    # the limit is the linter's boundedness proof, it cannot truncate
-    a, b = bounded.alias("a"), bounded.alias("b")
-    offs = (
-        a.join(b, F.col("b.__b") < F.col("a.__b"), "left")
-        .groupBy(F.col("a.__b").alias("__b"))
-        .agg(F.coalesce(F.sum("b.__bnv"), F.lit(0)).alias("__off"))
-    )
-    wv = Window.partitionBy("__b").orderBy(F.col("__v").asc())
-    # strictly-below count: RANGE to __v−1 skips every row tied at __v
-    # (the (v, g1)/(v, g2) peer rows), exactly cum_<(v) within the cell
-    cum_lt = F.coalesce(
-        F.sum("__c").over(
-            wv.rangeBetween(Window.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    # peers-only RANGE sum = n_v, no distinct-value table needed
-    n_v = F.sum("__c").over(wv.rangeBetween(0, 0))
-    enriched = j.join(F.broadcast(offs), ["__b"]).select(
-        "__v",
-        "__g",
-        "__c",
-        (2 * (F.col("__off") + cum_lt) + n_v + 1).alias("__r2"),
-        n_v.alias("__nv"),
-    )
-    return cnt, enriched
-
-
-def _kw_rank_sums(df: DataFrame, group_col: str, value_col: str):
-    """Shared rank machinery of :func:`kruskal_wallis` and
-    :func:`dunn_test`: exact doubled-midrank group sums over the
-    de-globalized 1024-cell cumulative (see kruskal_wallis's docstring
-    for the full shape). Returns ``(per_g, vtot)`` — per_g has
-    ``(__g, __ng, __rs2)`` with __rs2 the exact DECIMAL(38,0) doubled
-    rank sum; vtot is the (value, count) grain for tie corrections.
-
-    r12 shape: the doubled midrank ``r2(v) = 2·cum_<(v) + n_v + 1`` is
-    computed DIRECTLY on the (value, group) count grain with RANGE
-    frames — ``cum_<(v)`` is the per-cell range-cumulative up to
-    ``__v − 1`` (excludes ALL peers, both groups' rows at v) plus the
-    cell offset, and ``n_v`` is the peers-only range sum — so the old
-    distinct-value rank table and its (value)-keyed shuffle join back
-    to the counts (the plan's only corpus²-grain-ish shuffle pair) are
-    gone: one hash agg, one bucket-partitioned window, one group agg.
-    """
-    cnt, enriched = _kw_enriched(df, group_col, value_col)
+    # the grain feeds vtot, the range stats, cell totals, offsets and
+    # the window main path, and per_g/vtot feed separate KW/Dunn
+    # actions: unpinned, each branch re-runs the scan + first shuffle
+    cnt = lazy_persist(_kw_grain(df, group_col, value_col))
     vtot = cnt.groupBy("__v").agg(F.sum("__c").alias("__nv"))
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    per_g = enriched.groupBy("__g").agg(
-        F.sum("__c").alias("__ng"),
-        F.sum(d(F.col("__c")) * F.col("__r2"))
-        .cast("decimal(38,0)")
-        .alias("__rs2"),
+    per_g = (
+        _pair_rank2(cnt, [], "__v", "__r2")
+        .groupBy("__g")
+        .agg(
+            F.sum("__c").alias("__ng"),
+            F.sum(d(F.col("__c")) * F.col("__r2"))
+            .cast("decimal(38,0)")
+            .alias("__rs2"),
+        )
     )
     return per_g, vtot
 
 
-def _kw_core_rolled(df: DataFrame, group_col: str, value_col: str):
-    """Per-group rank sums AND the exact global tie mass in ONE
-    aggregate — the single-action core behind the KW/Dunn session memo
-    (r12 paid three driver actions: the lazy_persist build, the tie
-    collect, the per-group collect; this folds them into one job).
-
-    ``groupBy(__g)`` over the enriched (value, group) grain returns
-    one row per group carrying (``__ng``, ``__rs2``) and a per-group
-    tie PARTIAL in ``__ties``: since ``Σ_g c_vg = n_v``, the per-row
-    integer term ``c·(n_v² − 1)`` sums over ALL rows to exactly
-    ``Σ_v (n_v³ − n_v)`` — the caller adds the ≤k exact decimal group
-    partials driver-side, so no separate value-grain aggregate is
-    needed. (r13: this was ``rollup(__g)`` — the rollup's Expand
-    doubled the ~600k-row agg input to deliver one grand-total row
-    the driver can sum itself; ~0.4 s back at sf0.1.) All terms are
-    DECIMAL(38,0)-exact (n_v³ ≤ N³; N ≤ 10¹² keeps the sum within 38
-    digits).
-    """
-    _, enriched = _kw_enriched(df, group_col, value_col, persist=False)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    return enriched.groupBy("__g").agg(
-        F.sum("__c").alias("__ng"),
-        F.sum(d(F.col("__c")) * F.col("__r2"))
-        .cast("decimal(38,0)")
-        .alias("__rs2"),
-        F.coalesce(
-            F.sum(
-                d(F.col("__c"))
-                * (d(F.col("__nv")) * F.col("__nv") - F.lit(1))
-            ),
-            F.lit(0),
-        )
-        .cast("decimal(38,0)")
-        .alias("__ties"),
-    )
-
-
 def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
-    """:func:`_kw_core_rolled` ``.collect()``, restructured as THREE
-    bounded driver actions instead of one action over a plan whose
-    branch fan schedules 13 local jobs / 32 stages (measured at sf0.1:
-    the rolled collect costs ~3.3-5 s of which nearly all is the
-    local-scheduler floor of those jobs, not compute).
+    """The KW/Dunn rank core as THREE bounded driver actions, returning
+    one row per group: (``__g``, ``__ng``, ``__rs2``) as in
+    :func:`_kw_rank_sums` plus a per-group tie PARTIAL ``__ties``.
 
-    The de-globalized cumulative needs three in-plan attaches — the
-    1-row global (lo, hi) range, and the ≤``buckets``-row cell-total
-    prefix offsets — and every attach is a broadcast-build job plus
-    duplicated grain subtrees in the plan. All three attach inputs are
-    BOUNDED by construction (1 row; ≤1024 cells), so they collect
-    driver-side and re-enter the plan as exact integer literals /
-    a VALUES-literal LocalRelation (``local_rows_df``): action 1 fills
-    the pinned (value, group) count grain and returns (lo,
-    hi); action 2 reads the pinned grain for the ≤1024 cell totals
-    (the Python prefix sum over sorted cells is the same exact integer
-    arithmetic as the in-plan bucket-prefix self-join); action 3 runs
-    the identical RANGE-frame midrank windows + per-group aggregate
-    and returns the ≤k group rows. Arithmetic is unchanged term for
-    term — same cents lift, same cell formula, same ``2·cum_<(v) +
-    n_v + 1`` integral midranks, same DECIMAL(38,0) sums — so the
-    rows are value-identical to the rolled core's.
+    The in-plan core attaches the 1-row global (lo, hi) range and the
+    ≤``buckets``-row cell-total prefix offsets, and every attach is a
+    broadcast-build job plus duplicated grain subtrees (one
+    action over that plan schedules 13 local jobs / 32 stages at sf0.1,
+    ~3.3-5 s of local-scheduler floor). All attach inputs are BOUNDED
+    by construction, so they collect driver-side and re-enter as exact
+    integer literals / a VALUES-literal offsets table: action 1 fills
+    the pinned (value, group) count grain and returns (lo, hi); action
+    2 reads the ≤1024 cell totals (the Python prefix sum over sorted
+    cells is the same exact integer arithmetic as
+    :func:`_cell_offsets`); action 3 runs :func:`_midrank2` and the
+    per-group aggregate. Since ``Σ_g c_vg = n_v``, the per-row integer
+    ``c·(n_v² − 1)`` sums over ALL rows to exactly ``Σ_v (n_v³ − n_v)``
+    — the caller adds the ≤k exact group partials, so no value-grain
+    aggregate is needed. All terms are DECIMAL(38,0)-exact (n_v³ ≤ N³;
+    N ≤ 10¹² keeps the sum within 38 digits).
     """
     buckets = 1024
     from pybabe_spark.operators._util import local_rows_df, pinned
 
-    ok = F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    x = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
     with pinned() as pin:
-        cnt = pin(
-            df.filter(ok)
-            .groupBy(x.alias("__v"), F.col(group_col).alias("__g"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
+        cnt = pin(_kw_grain(df, group_col, value_col))
         rng = cnt.agg(
             F.min("__v").alias("__lo"), F.max("__v").alias("__hi")
         ).collect()[0]
         lo, hi = rng["__lo"], rng["__hi"]
         if lo is None:
             return []
-        b_expr = F.expr(
-            f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
-            f" * {buckets} div (CAST({hi} AS BIGINT)"
-            f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
-        )
-        cells = cnt.groupBy(b_expr.alias("__b")).agg(
+        j = cnt.withColumn("__b", _cell_of("__v", lo, hi, buckets))
+        cells = j.groupBy("__b").agg(
             F.sum("__c").alias("__bnv")
         ).collect()  # ≤ buckets rows: __b < buckets by construction
         cells.sort(key=lambda r: r["__b"])
@@ -3676,22 +3578,9 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
         offs = local_rows_df(
             df.sparkSession, offs_rows, "__b bigint, __off bigint"
         )
-        j = cnt.withColumn("__b", b_expr).join(F.broadcast(offs), ["__b"])
-        wv = Window.partitionBy("__b").orderBy(F.col("__v").asc())
-        cum_lt = F.coalesce(
-            F.sum("__c").over(wv.rangeBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-        n_v = F.sum("__c").over(wv.rangeBetween(0, 0))
-        enriched = j.select(
-            "__v",
-            "__g",
-            "__c",
-            (2 * (F.col("__off") + cum_lt) + n_v + 1).alias("__r2"),
-            n_v.alias("__nv"),
-        )
+        enriched = _midrank2(j, [], "__v", "__r2", offs, nv="__nv")
         d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-        rows = enriched.groupBy("__g").agg(
+        return enriched.groupBy("__g").agg(
             F.sum("__c").alias("__ng"),
             F.sum(d(F.col("__c")) * F.col("__r2"))
             .cast("decimal(38,0)")
@@ -3706,7 +3595,33 @@ def _kw_core_rows(df: DataFrame, group_col: str, value_col: str):
             .cast("decimal(38,0)")
             .alias("__ties"),
         ).collect()
-        return rows
+
+
+def _kw_rank_sums_local(df: DataFrame, group_col: str, value_col: str):
+    """:func:`kruskal_wallis`' and :func:`dunn_test`'s ``rank_sums``
+    pair ``(per_g, ties)`` from the eager core :func:`_kw_core_rows`,
+    as VALUES-literal LocalRelations (exact decimal schema, the group
+    column's own type), so a consumer action costs no rank work. Equal
+    to :func:`_kw_rank_sums` + :func:`_kw_tie_sum`: on empty input both
+    give zero group rows and a 1-row zero tie mass."""
+    from decimal import Decimal
+
+    from pybabe_spark.operators._util import local_or_create_df, local_rows_df
+
+    spark = df.sparkSession
+    rows = _kw_core_rows(df, group_col, value_col)
+    g_typ = df.schema[group_col].dataType.simpleString()
+    per_g = local_or_create_df(
+        spark,
+        [(r["__g"], r["__ng"], r["__rs2"]) for r in rows],
+        f"__g {g_typ}, __ng bigint, __rs2 decimal(38,0)",
+    )
+    ties = local_rows_df(
+        spark,
+        [(sum((r["__ties"] for r in rows), Decimal(0)),)],
+        "__ties decimal(38,0)",
+    )
+    return per_g, ties
 
 
 def _kw_tie_sum(vtot: DataFrame) -> DataFrame:
@@ -3756,24 +3671,23 @@ def kruskal_wallis(
     as one fixed-shape IEEE expression rounded once. H is NULL when
     k < 2; tie-corrected H is NULL when every value is identical.
 
-    Scale shape: one (value, group) hash agg collapses duplicates, a
-    value-level cumulative count runs DE-GLOBALIZED (1024 equal-width
-    cells, window partitioned by cell, offsets from the limit()-proved
-    ≤1024-row bucket-prefix self-join — the mann_whitney machinery),
-    one join back by value, one group-grain agg, one 1-row finish. No
-    global window anywhere.
+    Scale shape: one (value, group) hash agg collapses duplicates, the
+    doubled midranks run DE-GLOBALIZED in place on that grain (1024
+    equal-width cells, window partitioned by cell, offsets from the
+    ≤1024-row cell-totals table — :func:`_pair_rank2`), one
+    group-grain agg, one 1-row finish. No global window anywhere.
 
-    ``rank_sums``: pass a precomputed ``(per_g, ties)`` pair — per_g
-    from :func:`_kw_rank_sums`, ties from :func:`_kw_tie_sum` — to
-    share the rank stage with :func:`dunn_test` on the same grain
-    (the post-hoc test ALWAYS follows KW on identical inputs —
-    recomputing the ranks would double the pipeline's dominant stage
-    for no information).
+    ``rank_sums``: pass a precomputed ``(per_g, ties)`` pair — from
+    :func:`_kw_rank_sums_local`, or per_g from :func:`_kw_rank_sums`
+    and ties from :func:`_kw_tie_sum` — to share the rank stage with
+    :func:`dunn_test` on the same grain (the post-hoc test ALWAYS
+    follows KW on identical inputs — recomputing the ranks would
+    double the pipeline's dominant stage for no information).
 
-    EAGER (r13): construction runs the bounded-collect rank core
-    (three driver actions: range, cell totals, group rows) — calling
-    this triggers cluster jobs and surfaces data errors immediately,
-    not at the caller's first action.
+    Lazy: without ``rank_sums`` construction runs no job. The eager
+    form is :func:`_kw_rank_sums_local` (three bounded driver actions:
+    range, cell totals, group rows), which a caller runs once and
+    passes as ``rank_sums``.
     """
     from pybabe_spark.operators._util import attach_scalars
 
@@ -4935,7 +4849,7 @@ def dunn_test(
         T = Σ_v (n_v³ − n_v) / (12(N−1))        (tie correction)
 
     with mean ranks from the SAME exact doubled-midrank machinery KW
-    uses (:func:`_kw_rank_sums` — shared code, the statistics cannot
+    uses (:func:`_pair_rank2` — shared code, the statistics cannot
     drift apart). One row per pair: ``(g1, g2, n1, n2, z,
     significant)`` where ``significant = |z| > z_crit`` — supply a
     Bonferroni/Šidák-adjusted quantile for the pair count (e.g.
@@ -4953,13 +4867,12 @@ def dunn_test(
     bounded by the in-plan ``max_groups`` guard (the
     :func:`~pybabe_spark.operators.tfidf.vocab_overlap` contract).
     ``rank_sums`` accepts KW's precomputed ``(per_g, ties)`` pair
-    (:func:`_kw_rank_sums` + :func:`_kw_tie_sum`) so the
-    test-then-post-hoc pipeline ranks the corpus once, not twice.
+    (:func:`_kw_rank_sums_local`, or :func:`_kw_rank_sums` +
+    :func:`_kw_tie_sum`) so the test-then-post-hoc pipeline ranks the
+    corpus once, not twice.
 
-    EAGER (r13) unless ``rank_sums`` is supplied: the shared KW rank
-    core runs its bounded driver actions at construction time —
-    calling this triggers cluster jobs and surfaces data errors
-    immediately, not at the caller's first action.
+    Lazy, as :func:`kruskal_wallis`: only the eager
+    :func:`_kw_rank_sums_local` runs driver actions.
     """
     if max_groups < 2:
         raise ValueError(f"dunn_test: max_groups {max_groups} < 2")
@@ -6757,13 +6670,7 @@ def wasserstein_1d(
         if head["__lo"] is None:  # empty input: the old 1-row NULL shape
             return local_rows_df(spark, [(0, 0, None, None)], out_schema)
         lo, hi = int(head["__lo"]), int(head["__hi"])
-        j = base.withColumn(
-            "__b",
-            F.expr(
-                f"CAST((CAST(__v AS DECIMAL(38,0)) - {lo}) * {buckets}"
-                f" div (CAST({hi} AS DECIMAL(38,0)) - {lo} + 1) AS BIGINT)"
-            ),
-        )
+        j = base.withColumn("__b", _cell_of("__v", lo, hi, buckets))
         btot = (
             j.groupBy("__b")
             .agg(
@@ -6965,20 +6872,15 @@ def conformal_threshold(
         if lo is None:
             # unkeyed empty input still reports one all-NULL row
             return emit([] if by else [(None, None, None)])
-        j = base.withColumn(
-            "__b",
-            F.expr(
-                f"CAST((CAST(__v AS DECIMAL(38,0)) - CAST({lo} AS BIGINT))"
-                f" * {buckets} div (CAST({hi} AS BIGINT)"
-                f" - CAST({lo} AS BIGINT) + 1) AS BIGINT)"
-            ),
-        )
+        j = base.withColumn("__b", _cell_of("__v", lo, hi, buckets))
         offs = _cell_offsets(
             j.groupBy(*keys, "__b").agg(
                 F.sum("__c").cast("decimal(38,0)").alias("__bt")
             ),
             keys,
+            {"__bt": "__off"},
             buckets,
+            tot=True,
         )
         # k = ceil((n+1)·cov_ppm/1e6), resolved on the tiny cell table
         k_expr = F.expr(
@@ -7138,9 +7040,8 @@ def gesd_outliers(
             "gesd_outliers: lambdas must have max_outliers entries"
         )
     import math
-    from decimal import ROUND_HALF_UP, Decimal
 
-    from pybabe_spark.operators._util import local_rows_df, pinned
+    from pybabe_spark.operators._util import local_rows_df, pinned, round6
 
     d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x = (F.col(value_col).cast("decimal(18,2)") * 100).cast("bigint")
@@ -7185,9 +7086,7 @@ def gesd_outliers(
                 break  # monotone: removals never restore n or variance
             nd = float(n)
             r = float(sc) / (nd * math.sqrt(float(var_num) / (nd * (nd - 1.0))))
-            r6 = float(
-                Decimal(r).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-            )
+            r6 = float(round6(r))
             rows.append((i, float(mv) / 100.0, n, r6))
             # remove ONE instance of the suspect value
             cand[mv] -= 1
@@ -8130,9 +8029,8 @@ def _jt_finish_local(spark, rows, z_crit: float) -> "DataFrame":
     DECIMAL(18,6) HALF_UP rounding — the gesd/mood_median house
     pattern)."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
 
-    from pybabe_spark.operators._util import local_rows_df
+    from pybabe_spark.operators._util import local_rows_df, round6
 
     out_schema = (
         "n bigint, k_groups bigint, jt2 bigint, z double, "
@@ -8189,9 +8087,7 @@ def _jt_finish_local(spark, rows, z_crit: float) -> "DataFrame":
     diff = jt2 - mu2
     if var_dbl > 0.0:
         zraw = float(diff) / (2.0 * math.sqrt(var_dbl))
-        z = float(
-            Decimal(zraw).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
+        z = float(round6(zraw))
     else:
         z = None
     trend = (

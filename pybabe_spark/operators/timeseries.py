@@ -1326,13 +1326,13 @@ def active_intervals(
     funnel. Instead the sweep is de-globalized: ±1 deltas aggregate
     per boundary timestamp, cumulative-sum WITHIN their time bucket
     (partitioned window), and each bucket adds the prefix total of all
-    earlier buckets, computed on the bucket-totals table — whose size
-    is the calendar span / ``bucket_seconds``, a quantity that does
-    NOT grow with data volume. That table is bounded by
-    ``max_buckets`` (in-plan lazy guard raises past it; 4096 hourly
-    buckets ≈ 5.5 months — widen the bucket for longer spans) and
-    ``limit``-proved to the plan linter, so the prefix self-join is
-    constant work by contract.
+    earlier buckets, computed on the bucket-totals table
+    (``sketch._cell_offsets``) — whose size is the calendar span /
+    ``bucket_seconds``, a quantity that does NOT grow with data
+    volume. That table is bounded by ``max_buckets`` (in-plan lazy
+    guard raises past it; 4096 hourly buckets ≈ 5.5 months — widen
+    the bucket for longer spans) and ``limit``-proved to the plan
+    linter, so the prefix self-join is constant work by contract.
     """
     if bucket_seconds <= 0 or max_buckets < 1:
         raise ValueError(
@@ -1353,17 +1353,15 @@ def active_intervals(
             .cast("long"),
         )
     )
-    btot = (
-        deltas.groupBy("__b")
-        .agg(F.sum("delta").alias("__t"))
-        .limit(max_buckets)  # proves boundedness; the guard below
-        # makes the truncation impossible rather than silent
-    )
-    a, b = btot.alias("a"), btot.alias("b")
-    prefix = (
-        a.join(b, F.col("b.__b") < F.col("a.__b"))
-        .groupBy(F.col("a.__b").alias("__b"))
-        .agg(F.sum("b.__t").alias("__off"))
+    from pybabe_spark.operators.sketch import _cell_offsets
+
+    # max_buckets bounds the prefix table; the guard below makes its
+    # limit's truncation impossible rather than silent
+    prefix = _cell_offsets(
+        deltas.groupBy("__b").agg(F.sum("delta").alias("__t")),
+        [],
+        {"__t": "__off"},
+        max_buckets,
     )
     n_buckets = deltas.select("__b").distinct().agg(
         F.count(F.lit(1)).alias("__nb")
@@ -2384,11 +2382,13 @@ def logrank_test(
     Scale shape: one (duration → per-group subject/event counts) hash
     agg collapses ties; the at-risk counts need the count of subjects
     with duration STRICTLY BELOW t — the mann_whitney cell machinery
-    (cells from a 1-row min/max attach, (cell)-partitioned cumsums,
-    offsets via the limit-proved bucket-prefix self-join) — then one
-    1-row conditional agg. No per-subject window, no global funnel.
+    (cells of a 1-row min/max attach, ``sketch._cell_of``;
+    (cell)-partitioned cumsums; offsets from ``sketch._cell_offsets``)
+    — then one 1-row conditional agg. No per-subject window, no global
+    funnel.
     """
     from pybabe_spark.operators._util import attach_scalars
+    from pybabe_spark.operators.sketch import _cell_of, _cell_offsets
 
     is_a = F.col(group_col) == group_a
     is_b = F.col(group_col) == group_b
@@ -2409,25 +2409,15 @@ def logrank_test(
     )
     rng = base.agg(F.min("__t").alias("__lo"), F.max("__t").alias("__hi"))
     j = attach_scalars(base, rng).withColumn(
-        "__b",
-        F.expr(
-            f"CAST((CAST(__t AS DECIMAL(38,0)) - __lo) * {buckets}"
-            " div (CAST(__hi AS DECIMAL(38,0)) - __lo + 1) AS BIGINT)"
-        ),
+        "__b", _cell_of("__t", "__lo", "__hi", buckets)
     ).drop("__lo", "__hi")
-    btot = j.groupBy("__b").agg(
-        F.sum("__c").alias("__bc"), F.sum("__ca").alias("__bca")
-    )
-    bounded = btot.limit(buckets)  # boundedness proof (cell id <
-    # buckets by construction, the limit can never truncate)
-    x, y = bounded.alias("x"), bounded.alias("y")
-    offs = (
-        x.join(y, F.col("y.__b") < F.col("x.__b"), "left")
-        .groupBy(F.col("x.__b").alias("__b"))
-        .agg(
-            F.coalesce(F.sum("y.__bc"), F.lit(0)).alias("__oc"),
-            F.coalesce(F.sum("y.__bca"), F.lit(0)).alias("__oca"),
-        )
+    offs = _cell_offsets(
+        j.groupBy("__b").agg(
+            F.sum("__c").alias("__bc"), F.sum("__ca").alias("__bca")
+        ),
+        [],
+        {"__bc": "__oc", "__bca": "__oca"},
+        buckets,
     )
     w = Window.partitionBy("__b").orderBy(F.col("__t").asc()).rowsBetween(
         Window.unboundedPreceding, 0

@@ -13,7 +13,6 @@ from pybabe_spark.queries import register, session_memo
 from pybabe_spark.sources.io import read_table
 
 
-import decimal as _decimal
 from functools import partial
 
 from pybabe_spark.queries import _dec as _dec_base
@@ -3818,39 +3817,17 @@ def q_kruskal(spark, sf_dir):
 #: (per_g, ties) rank core for the l_returnflag/l_extendedprice
 #: doubled-midrank grain — kruskal_wallis_lineitem and
 #: dunn_test_lineitem are the omnibus test and its post-hoc on the
-#: IDENTICAL rank machinery (sketch.py::_kw_rank_sums).
+#: IDENTICAL rank machinery (sketch.py::_kw_core_rows).
 @session_memo(users=("kruskal_wallis_lineitem", "dunn_test_lineitem"))
 def _kw_core(spark, sf_dir):
-    from pybabe_spark.operators._util import local_rows_df
-    from pybabe_spark.operators.sketch import _kw_core_rows
+    from pybabe_spark.operators.sketch import _kw_rank_sums_local
 
     li = read_table(spark, sf_dir, "lineitem")
-    # THREE bounded driver actions (1-row range, ≤1024-cell totals, ≤k
-    # group rows — sketch.py::_kw_core_rows): the r13 optimization pass
-    # measured the old single-action rolled core at 13 local jobs / 32
-    # stages (~3.3-5 s of scheduler floor at sf0.1) because every
-    # in-plan attach of its bounded side tables was a broadcast-build
-    # job over a duplicated grain subtree; collecting those bounded
-    # tables and re-entering them as literals cuts the build to 3 jobs
-    # with identical integer arithmetic. The core is rebuilt as
-    # VALUES-literal LocalRelations (exact decimal schema, repr-exact
-    # values), so memo hits cost zero cluster work and every consumer
-    # action skips the ExistingRDD 32-tasklet wave createDataFrame
-    # would schedule.
-    rows = _kw_core_rows(li, "l_returnflag", "l_extendedprice")
-    pg_rows = [(r["__g"], r["__ng"], r["__rs2"]) for r in rows]
-    # empty grain yields zero group rows; the non-memo path's global
-    # agg still returns its 1-row zero — keep the paths identical
-    ties_rows = [
-        (
-            sum((r["__ties"] for r in rows), _decimal.Decimal(0)),
-        )
-    ]
-    pg_local = local_rows_df(
-        spark, pg_rows, "__g string, __ng bigint, __rs2 decimal(38,0)"
-    )
-    ties_local = local_rows_df(spark, ties_rows, "__ties decimal(38,0)")
-    return (pg_local, ties_local)
+    # the eager core (three bounded driver actions instead of the
+    # in-plan core's 13 local jobs) as VALUES-literal LocalRelations:
+    # memo hits cost zero cluster work, and no consumer action pays the
+    # ExistingRDD tasklet wave createDataFrame would schedule
+    return _kw_rank_sums_local(li, "l_returnflag", "l_extendedprice")
 
 
 _TREND_SCORES = {
