@@ -39,11 +39,14 @@ def attach_scalars(df, scalars):
 
 
 def round6(x):
-    """``x`` rounded half-up to 6 dp as Spark's and DuckDB's
-    ``CAST(double AS DECIMAL(18,6))`` round it: from the double's
-    shortest round-trip decimal (``repr``), not its exact binary value
-    — ``3.5e-06`` sits just below the tie in binary, so ``Decimal(x)``
-    rounds it to 0.000003 where both engines give 0.000004."""
+    """``x`` rounded half-up to 6 dp as Spark's ``CAST(double AS
+    DECIMAL(18,6))`` rounds it: from the double's shortest round-trip
+    decimal (``repr``), not its exact binary value — ``3.5e-06`` sits
+    just below the tie in binary, so ``Decimal(x)`` rounds it to
+    0.000003 where Spark gives 0.000004. DuckDB 1.0's cast does not
+    round the shortest repr (``71.3278125`` → 71.327812, Spark
+    71.327813), so a value that can land on a 6 dp tie must be computed
+    exactly in integers on both engines instead."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)

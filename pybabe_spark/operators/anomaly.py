@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pybabe_spark.operators._util import lazy_persist
+
 
 def _round6(c):
     return F.round(c, 6)
@@ -209,7 +211,7 @@ def mad_anomalies(
     # med (and mad below) are per-key tables consumed by two corpus
     # branches each; the lazy persist stops their aggregation lineage
     # re-running the source scan per consumer (4 scans → 3 measured)
-    med = (
+    med = lazy_persist(
         df.filter(F.col(value_col).isNotNull())
         .groupBy(key_col)
         .agg(
@@ -217,13 +219,12 @@ def mad_anomalies(
             .cast("decimal(18,6)")
             .alias("__med")
         )
-        .persist()
     )
     dev = (
         df.join(med, key_col)
         .withColumn("__dev", F.abs(vd - F.col("__med")))
     )
-    mad = (
+    mad = lazy_persist(
         dev.filter(F.col(value_col).isNotNull())
         .groupBy(key_col)
         .agg(
@@ -231,7 +232,6 @@ def mad_anomalies(
             .cast("decimal(18,6)")
             .alias("__mad")
         )
-        .persist()
     )
     j = dev.join(mad, key_col)
     cond = (

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pybabe_spark.operators._util import attach_scalars
+from pybabe_spark.operators._util import attach_scalars, lazy_persist
 from pybabe_spark.operators.lm import bigram_rows, unigram_rows
 
 
@@ -141,11 +141,10 @@ def basket_pair_core(
     with the support filter applied immediately."""
     from pyspark.sql import functions as F
 
-    bi = (
+    bi = lazy_persist(
         df.select(F.col(basket_col).alias("b"), F.col(item_col).alias("i"))
         .filter(F.col("b").isNotNull() & F.col("i").isNotNull())
         .distinct()
-        .persist()
     )
     x, y = bi.alias("x"), bi.alias("y")
     pairs = (

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pybabe_spark.functions.text import exact_key, shingle_array, words
+from pybabe_spark.operators._util import lazy_persist
 
 
 def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -948,7 +949,7 @@ def containment_pairs(
     # in executor memory. (The ×30 stress spill on this family is the
     # shingle join's own sort buffers — present with or without a
     # cache — not a persist artifact; measured both ways.)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n")).persist()
+    sizes = lazy_persist(sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n")))
     joinable = sh
     if max_shingle_df is not None:
         hot = (
@@ -1013,11 +1014,8 @@ def source_overlap(
         df.filter(F.col(group_col).isNotNull())
         .select(F.col(group_col).alias("g"), F.col(text_col).alias("t"))
     )
-    rows = (
-        _shingle_rows(gs, "g", "t", shingle_n)
-        .distinct()
-        .persist()  # lazy: feeds the pair join twice + the sizes
-    )
+    # lazy: feeds the pair join twice + the sizes
+    rows = lazy_persist(_shingle_rows(gs, "g", "t", shingle_n).distinct())
     a, b = rows.alias("a"), rows.alias("b")
     common = (
         a.join(
@@ -1172,8 +1170,6 @@ def winnow_fingerprints(
             ).alias("__h"),
         )
     )
-    from pybabe_spark.operators._util import lazy_persist
-
     # three consumers (the pick window, the join-back, the per-doc
     # totals) — without the pin the gram explode + md5 runs three
     # times (measured: the join-back recompute alone was ~40% of the

@@ -30,6 +30,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pybabe_spark.operators._util import lazy_persist
+
 _EMPTY = "filter(array(''), x -> false)"  # typed empty array<string>
 
 
@@ -120,9 +122,10 @@ def fuzzy_string_pairs(
     )
     if max_dist == 1:
         # substitution pairs: equal everywhere but one position
-        pk = s.select(
+        # lazy cache — both join sides consume it
+        pk = lazy_persist(s.select(
             "s", F.explode(positional_deletion_keys("s")).alias("k")
-        ).persist()  # lazy cache — both join sides consume it
+        ))
         # _spread: without it AQE coalesces the small distinct-strings
         # shuffle to 1 partition and the candidate stage serializes;
         # quadratic=True since work grows with bucket collisions²
@@ -158,12 +161,13 @@ def fuzzy_string_pairs(
         return subst.unionByName(insdel.distinct()).withColumn(
             "dist", F.lit(1)
         )
-    keys = s.select(
+    # both join sides consume the key table; the lazy cache computes the
+    # deletion neighborhoods once (persist, not localCheckpoint(eager=
+    # False): the latter can run stages at construction, which would
+    # defeat the max_len guard's laziness)
+    keys = lazy_persist(s.select(
         "s", F.explode(deletion_keys("s", max_dist)).alias("k")
-    ).persist()  # both join sides consume the key table; the lazy
-    # cache computes the deletion neighborhoods once (persist, not
-    # localCheckpoint(eager=False): the latter can run stages at
-    # construction, which would defeat the max_len guard's laziness)
+    ))
     a = _spread(keys, quadratic=True).alias("a")
     b = keys.alias("b")
     cand = a.join(
@@ -218,7 +222,6 @@ def fuzzy_connectivity_pairs(
     :func:`fuzzy_pairs` (equal-string row pairs excluded; ids multiply
     only the final edge list, never the candidate join).
     """
-    from pybabe_spark.operators._util import lazy_persist
     from pybabe_spark.operators.similarity import _spread
 
     # three branches consume the distinct-string set (positional keys,

@@ -57,7 +57,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pybabe_spark.operators._util import pinned
+from pybabe_spark.operators._util import lazy_persist, pinned
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -108,11 +108,11 @@ def _triangles(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = ed.select(
+    oriented = lazy_persist(ed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).persist()
+    ))
     x = oriented.select(
         F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx")
     )
@@ -483,25 +483,22 @@ def pagerank(
     # both sides of the final assembly) re-derives the full upstream
     # edge lineage (measured 40× source re-scan on the 3-iteration
     # trade-network query). persist() is construction-job-free.
-    ewd = e.join(deg, "src").persist()
-    nodes = (
+    ewd = lazy_persist(e.join(deg, "src"))
+    nodes = lazy_persist(
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     if seeds is not None:
-        flags = (
+        flags = lazy_persist(
             nodes.join(
                 seeds.select(F.col(seed_col).alias("node")).distinct()
                 .withColumn("__is_seed", F.lit(1)),
                 "node",
                 "left",
-            )
-            .select(
+            ).select(
                 "node", F.coalesce("__is_seed", F.lit(0)).alias("__seed")
             )
-            .persist()
         )
         base_col = (F.lit(base) * F.col("__seed")).cast("bigint")
         ranks = flags.select(
@@ -611,7 +608,7 @@ def triangle_count(
     # (localCheckpoint(eager=False) is NOT construction-free: its .rdd
     # conversion can force AQE stage materialization) — and the cache
     # fills at the query's own first action.
-    e = _canonical_edges(edges, src, dst).persist()
+    e = lazy_persist(_canonical_edges(edges, src, dst))
     deg, tri = _triangles(e)
     counts = e.agg(
         F.count(F.lit(1)).alias("n_edges"),
@@ -810,7 +807,7 @@ def clustering_coefficient(
     triangle count zero). No new join shapes beyond the census.
     """
     # lazy — feeds degrees + orientation (triangle_count discipline)
-    e = _canonical_edges(edges, src, dst).persist()
+    e = lazy_persist(_canonical_edges(edges, src, dst))
     deg, tri = _triangles(e)
     credits = (
         tri.select(
@@ -1107,7 +1104,7 @@ def adamic_adar(
     if top_n < 1:
         raise ValueError("adamic_adar: top_n must be >= 1")
     # lazy persist: feeds degrees, wedges, and the anti-join probe
-    e = _canonical_edges(edges, src, dst).persist()
+    e = lazy_persist(_canonical_edges(edges, src, dst))
     sym, deg = _degrees(e)
     # deg-1 leaves can never center a wedge — and ln(1) = 0 would
     # divide by zero under ANSI, so they leave the weight table here
@@ -1229,7 +1226,7 @@ def jaccard_link_prediction(
     if top_n < 1:
         raise ValueError("jaccard_link_prediction: top_n must be >= 1")
     # lazy persist: feeds degrees, wedges, and the anti-join probe
-    e = _canonical_edges(edges, src, dst).persist()
+    e = lazy_persist(_canonical_edges(edges, src, dst))
     sym, deg = _degrees(e)
     nd = deg.select(F.col("z").alias("n"), F.col("d").alias("__dn"))
     centers = sym.join(
@@ -1341,7 +1338,7 @@ def assortativity(
     windows, no quadratic object anywhere.
     """
     # lazy persist: feeds the degree agg and both end joins
-    e = _canonical_edges(edges, src, dst).persist()
+    e = lazy_persist(_canonical_edges(edges, src, dst))
     sym, deg = _degrees(e)
     du = deg.select("z", F.col("d").alias("__du"))
     dv = deg.select(F.col("z").alias("n"), F.col("d").alias("__dv"))

@@ -16,6 +16,8 @@ import sys
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from pybabe_spark.operators._util import lazy_persist
+
 log = logging.getLogger("pybabe_spark")
 
 
@@ -352,11 +354,10 @@ def foreign_key_check(
     """
     # the distinct-value table feeds both the count and the anti-join;
     # lazy persist keeps the child scan single-pass per consumer pair
-    vals = (
+    vals = lazy_persist(
         child.select(F.col(child_col).alias("__v"))
         .filter(F.col("__v").isNotNull())
         .distinct()
-        .persist()
     )
     orphans = vals.join(
         parent.select(F.col(parent_col).alias("__v")).distinct(),

@@ -134,18 +134,22 @@ def pareto_report(
     corpus-scale window: no global window appears anywhere). Totals
     ride a 1-row attach. All shares are integer micro-unit arithmetic.
     """
-    from pybabe_spark.operators._util import attach_scalars, gen_col
+    from pybabe_spark.operators._util import (
+        attach_scalars,
+        gen_col,
+        lazy_persist,
+    )
 
     v = gen_col(df.columns, "__v")
     sums = df.groupBy(F.col(key)).agg(
         F.sum(F.col(value_col).cast("decimal(18,6)")).alias(v)
     )
-    micro = sums.select(
+    # feeds totals + the TakeOrdered head: without the (lazy,
+    # key-cardinality) cache each consumer re-runs the corpus aggregation
+    micro = lazy_persist(sums.select(
         F.col(key),
         (F.col(v) * 1_000_000).cast("bigint").alias("__vm"),
-    ).persist()  # feeds totals + the TakeOrdered head: without the
-    # (lazy, key-cardinality) cache each consumer re-runs the corpus
-    # aggregation
+    ))
     totals = micro.agg(F.sum("__vm").cast("bigint").alias("__tm"))
     top = micro.orderBy(
         F.col("__vm").desc(), F.col(key).asc_nulls_first()

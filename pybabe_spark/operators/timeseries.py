@@ -165,8 +165,9 @@ def gap_fill(
       gap both draw the same line); before the first / after the last
       non-null value the fill is flat (nearest available). The sensor /
       metrics resampling rule LOCF mis-states for sloping series. The
-      interpolated value is one fixed-shape IEEE expression rounded
-      once to DECIMAL(18,6), so both engines agree bit-for-bit.
+      interpolated value is exact: integer micro-units and one
+      half-away-from-zero integral division (:func:`_lerp_micro`), so
+      both engines agree bit-for-bit, at ties too.
 
     ``agg_cols`` maps column → aggregate ('sum' | 'count' | 'min' |
     'max'); sums of doubles go through the engine's exact-decimal
@@ -247,29 +248,59 @@ def gap_fill(
             .orderBy("bucket")
             .rowsBetween(0, Window.unboundedFollowing)
         )
-        t = F.unix_timestamp("bucket").cast("double")
+        t = F.unix_timestamp("bucket")
 
-        def lerp(c):
-            known_t = F.when(
-                F.col(c).isNotNull(), F.unix_timestamp("bucket")
-            ).cast("double")
-            pv = F.last(c, ignorenulls=True).over(wp)
-            pt = F.last(known_t, ignorenulls=True).over(wp)
-            nv = F.first(c, ignorenulls=True).over(wn)
-            nt = F.first(known_t, ignorenulls=True).over(wn)
-            interp = pv + (nv - pv) * ((t - pt) / (nt - pt))
-            return (
-                F.when(F.col(c).isNotNull(), F.col(c))
-                .when(pv.isNull(), nv)
-                .when(nv.isNull(), pv)
-                .otherwise(
-                    interp.cast("decimal(18,6)").cast("double")
-                )
-                .alias(c)
-            )
+        def ends(i, c):
+            known_t = F.when(F.col(c).isNotNull(), t)
+            return [
+                F.last(c, ignorenulls=True).over(wp).alias(f"__pv{i}"),
+                F.last(known_t, ignorenulls=True).over(wp).alias(f"__pt{i}"),
+                F.first(c, ignorenulls=True).over(wn).alias(f"__nv{i}"),
+                F.first(known_t, ignorenulls=True).over(wn).alias(f"__nt{i}"),
+            ]
 
-        out = out.select(key_col, "bucket", *[lerp(c) for c in vals])
+        out = out.select(
+            key_col, "bucket", t.alias("__t"),
+            *[F.col(c).alias(f"__v{i}") for i, c in enumerate(vals)],
+            *[e for i, c in enumerate(vals) for e in ends(i, c)],
+        ).select(
+            key_col,
+            "bucket",
+            *[
+                F.expr(
+                    _lerp_micro(
+                        f"__v{i}", f"__pv{i}", f"__nv{i}", "__t",
+                        f"__pt{i}", f"__nt{i}", "DECIMAL(38,0)", "div",
+                    )
+                ).alias(c)
+                for i, c in enumerate(vals)
+            ],
+        )
     return out
+
+
+def _lerp_micro(v, pv, nv, t, pt, nt, wide, div):
+    """SQL of one linearly filled value: ``v`` if known, the nearest
+    known value at an edge of the grid, else ``pv + (nv − pv)·(t − pt)
+    / (nt − pt)`` rounded to 6 dp. The rounding is exact: ``pv`` and
+    ``nv`` in integer micro-units, the step in the ``wide`` integer
+    type, and one sign-split integral division (``div``) that rounds
+    half away from zero — no IEEE quotient whose 6 dp cast the two
+    engines round differently at a tie (Spark rounds the shortest
+    repr, DuckDB 1.0 does not). Spark passes ``DECIMAL(38,0)`` and
+    ``div``, DuckDB ``HUGEINT`` and ``//``."""
+    pu = f"CAST(round({pv} * 1000000) AS BIGINT)"
+    num = f"((CAST(round({nv} * 1000000) AS {wide}) - {pu}) * ({t} - {pt}))"
+    den = f"({nt} - {pt})"
+    step = (
+        f"CASE WHEN {num} >= 0 THEN (2 * {num} + {den}) {div} (2 * {den})"
+        f" ELSE -(({den} - 2 * {num}) {div} (2 * {den})) END"
+    )
+    return (
+        f"CASE WHEN {v} IS NOT NULL THEN {v} WHEN {pv} IS NULL THEN {nv}"
+        f" WHEN {nv} IS NULL THEN {pv}"
+        f" ELSE CAST({pu} + {step} AS DOUBLE) / 1000000 END"
+    )
 
 
 def gap_fill_sql(
@@ -282,7 +313,8 @@ def gap_fill_sql(
 ) -> str:
     """DuckDB oracle of :func:`gap_fill` — generate_series grid, same
     bucket floor, same decimal-sum convention, IGNORE NULLS window for
-    the forward fill."""
+    the forward fill, the same exact :func:`_lerp_micro` for the
+    linear one."""
     step = int(step_seconds)
     parts = []
     for c, how in agg_cols.items():
@@ -315,23 +347,16 @@ def gap_fill_sql(
             "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)"
         )
 
+        t = "CAST(epoch(g.bucket) AS BIGINT)"
+
         def _lerp(c):
-            kt = (
-                f"CASE WHEN d.{c} IS NOT NULL"
-                " THEN CAST(epoch(g.bucket) AS DOUBLE) END"
-            )
+            kt = f"CASE WHEN d.{c} IS NOT NULL THEN {t} END"
             pv = f"LAST_VALUE(d.{c} IGNORE NULLS) {wp}"
             pt = f"LAST_VALUE({kt} IGNORE NULLS) {wp}"
             nv = f"FIRST_VALUE(d.{c} IGNORE NULLS) {wn}"
             nt = f"FIRST_VALUE({kt} IGNORE NULLS) {wn}"
-            return (
-                f"CASE WHEN d.{c} IS NOT NULL THEN d.{c} "
-                f"WHEN {pv} IS NULL THEN {nv} "
-                f"WHEN {nv} IS NULL THEN {pv} "
-                f"ELSE CAST(CAST({pv} + ({nv} - {pv}) * "
-                f"((CAST(epoch(g.bucket) AS DOUBLE) - {pt}) / ({nt} - {pt}))"
-                f" AS DECIMAL(18,6)) AS DOUBLE) END AS {c}"
-            )
+            lerp = _lerp_micro(f"d.{c}", pv, nv, t, pt, nt, "HUGEINT", "//")
+            return f"{lerp} AS {c}"
 
         fills = ", ".join(_lerp(c) for c in vals)
     else:
@@ -1619,10 +1644,11 @@ def interarrival_stats(
     features.
 
     Determinism: gaps are exact integer MICROSECONDS from one lag
-    window; Σx and Σx² are exact DECIMAL(38,0); μ, σ (the one
-    transcendental — sqrt), cv = σ/μ and B are a fixed-shape IEEE
-    expression over those exact sums, each output rounded once to
-    DECIMAL(18,6) (house convention). Keys with < 3 events (< 2 gaps)
+    window; Σx and Σx² are exact DECIMAL(38,0). The mean gap is exact
+    too: ``(2Σx + n) div 2n`` µs, the half-up rounding of Σx/n. σ (the
+    one transcendental — sqrt), cv = σ/μ and B are a fixed-shape IEEE
+    expression over the exact sums, each rounded once to DECIMAL(18,6)
+    (house convention). Keys with < 3 events (< 2 gaps)
     emit NULL cv/burstiness (variance undefined); keys with < 2 events
     are absent. Zero-mean edge (all events simultaneous): NULL.
 
@@ -1656,10 +1682,11 @@ def interarrival_stats(
     sig = F.sqrt(var)
     r6 = lambda c: c.cast("decimal(18,6)").cast("double")  # noqa: E731
     ok2 = (F.col("__n") > 1) & (F.col("__s") > 0)
+    mean_us = F.expr("(2 * __s + __n) div (2 * __n)")
     return agg.select(
         F.col("__k").alias(key_col),
         F.col("__n").cast("bigint").alias("n_gaps"),
-        r6(mu / 1e6).alias("mean_gap_s"),
+        (mean_us.cast("double") / 1e6).alias("mean_gap_s"),
         F.when(ok2, r6(sig / mu)).alias("cv"),
         F.when(ok2, r6((sig - mu) / (sig + mu))).alias("burstiness"),
     )
@@ -1669,8 +1696,8 @@ def interarrival_stats_sql(
     table: str, key_col: str, ts_col: str, where: str = "TRUE"
 ) -> str:
     """DuckDB oracle of :func:`interarrival_stats` — same lag window,
-    same exact HUGEINT sums, same fixed-shape IEEE expressions and
-    6 dp roundings."""
+    same exact HUGEINT sums and integral mean, same fixed-shape IEEE
+    expressions and 6 dp roundings."""
     return f"""
     WITH pts AS (
         SELECT {key_col} AS k,
@@ -1692,8 +1719,7 @@ def interarrival_stats_sql(
     )
     SELECT k AS {key_col},
            CAST(n AS BIGINT) AS n_gaps,
-           CAST(CAST((CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / 1e6
-                AS DECIMAL(18,6)) AS DOUBLE) AS mean_gap_s,
+           CAST((2 * s + n) // (2 * n) AS DOUBLE) / 1e6 AS mean_gap_s,
            CASE WHEN n > 1 AND s > 0 THEN CAST(CAST(
              sqrt((CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
                    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))

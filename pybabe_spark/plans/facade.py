@@ -6,11 +6,27 @@ IR is the DataFrame's Catalyst logical plan: each method returns a new
 ``Babe`` wrapping a transformed DataFrame; terminals (`push`, `to_list`)
 trigger actions. No custom machinery — the facade is sugar over
 :mod:`pybabe_spark.operators`.
+
+Most chain methods only forward, and none of those is written out:
+``babe.name(*args, **kwargs)`` is ``babe._wrap(op(babe.df, *args,
+**kwargs))`` with every ``Babe`` argument unwrapped to its DataFrame.
+They are bound from the ``_FORWARDS`` table when this module is imported
+— the reference's ``BabeBase.register(name, fn)`` (pybabe/base.py:
+263-269) — and carry the operator's docstring and signature. To add
+one, put its name into the operator module's ``_FORWARDS`` entry, as
+``name=op`` when the chain name differs from the operator's.
+
+Write a method in the class body only when it does more than forward:
+its public parameter names or defaults differ from the operator's
+(keyword callers rely on them), it adds a column through
+``withColumn``, it combines several operators, or it returns something
+other than a new stream.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import importlib
+import inspect
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,128 +83,15 @@ class Babe:
         DataFrame itself was never physically split)."""
         return Babe(self.df, ())
 
-    # -- projection / filtering ---------------------------------------------
-    def filter_columns(self, keep_fields=None, remove_fields=None) -> "Babe":
-        return self._wrap(ops.filter_columns(self.df, keep_fields, remove_fields))
-
-    def rename(self, **mapping) -> "Babe":
-        return self._wrap(ops.rename(self.df, **mapping))
-
-    def filter(self, condition) -> "Babe":
-        return self._wrap(ops.filter_rows(self.df, condition))
-
-    def filter_values(self, **equals) -> "Babe":
-        return self._wrap(ops.filter_values(self.df, **equals))
-
-    def filter_out_null_values(self, fields) -> "Babe":
-        return self._wrap(ops.filter_out_null_values(self.df, fields))
-
-    def filter_by_regexp(self, field, regexp) -> "Babe":
-        return self._wrap(ops.filter_by_regexp(self.df, field, regexp))
-
-    def skip(self, n, order_by=None) -> "Babe":
-        return self._wrap(ops.skip(self.df, n, order_by))
-
-    def head(self, n) -> "Babe":
-        return self._wrap(ops.head(self.df, n))
-
-    def replace(self, oldvalue, newvalue) -> "Babe":
-        return self._wrap(ops.replace_cell(self.df, oldvalue, newvalue))
-
-    def replace_in_string(self, match, replacement, field) -> "Babe":
-        return self._wrap(ops.replace_in_string(self.df, match, replacement, field))
-
-    def split(self, field, separator) -> "Babe":
-        return self._wrap(ops.split_rows(self.df, field, separator))
-
-    # -- sort / topk / dedup -------------------------------------------------
-    def sort(self, field, reverse=False) -> "Babe":
-        return self._wrap(ops.sort(self.df, field, reverse))
-
-    def maxN(self, column, n) -> "Babe":
-        return self._wrap(ops.max_n(self.df, column, n))
-
-    def minN(self, column, n) -> "Babe":
-        return self._wrap(ops.min_n(self.df, column, n))
-
-    def dedup(self, fields=None, keep_first=False) -> "Babe":
-        return self._wrap(ops.dedup(self.df, fields, keep_first))
-
-    def source_overlap(self, group_col, text_col="text", shingle_n=3) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import source_overlap
-
-        return self._wrap(
-            source_overlap(self.df, group_col, text_col, shingle_n)
-        )
-
-    def near_dedup(self, id_col, text_col, threshold=0.8, **kwargs) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import near_dedup_keep
-
-        return self._wrap(
-            near_dedup_keep(self.df, id_col, text_col, threshold, **kwargs)
-        )
-
-    def lsh_candidate_calibration(self, id_col, text_col,
-                                  **kwargs) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import (
-            lsh_candidate_calibration,
-        )
-
-        return self._wrap(
-            lsh_candidate_calibration(self.df, id_col, text_col, **kwargs)
-        )
-
-    def simhash_neardup(self, id_col, text_col, bits=48,
-                        max_hamming=3) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import simhash_neardup_pairs
-
-        return self._wrap(
-            simhash_neardup_pairs(self.df, id_col, text_col, bits,
-                                  max_hamming)
-        )
-
-    def hamming_neardup(self, id_col, fp_col, bits, max_hamming=3) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import hamming_neardup_pairs
-
-        return self._wrap(
-            hamming_neardup_pairs(self.df, id_col, fp_col, bits, max_hamming)
-        )
-
+    # -- public parameter names that differ from the operator's --------------
     def near_dedup_against(
         self, seen: "Babe | DataFrame", id_col, text_col, **kwargs
     ) -> "Babe":
         from pybabe_spark.operators.dedup_scale import near_dedup_against
 
-        s = seen.df if isinstance(seen, Babe) else seen
         return self._wrap(
-            near_dedup_against(self.df, s, id_col, text_col, **kwargs)
+            near_dedup_against(self.df, _df(seen), id_col, text_col, **kwargs)
         )
-
-    def near_dedup_against_stored(self, path, id_col="doc_id",
-                                  text_col="text", threshold=0.8) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import near_dedup_against_stored
-
-        return self._wrap(
-            near_dedup_against_stored(self.df, path, id_col, text_col, threshold)
-        )
-
-    def semantic_dedup(self, k_clusters=8, threshold=0.9, **kwargs) -> "Babe":
-        from pybabe_spark.operators.similarity import semantic_dedup
-
-        return self._wrap(
-            semantic_dedup(self.df, k_clusters, threshold, **kwargs)
-        )
-
-    def pq_encode(self, m=8, ks=16, **kwargs) -> "Babe":
-        from pybabe_spark.operators.similarity import pq_encode
-
-        return self._wrap(pq_encode(self.df, m, ks, **kwargs))
-
-    # -- sampling / splitting / scrubbing ------------------------------------
-    def sample(self, key, fraction) -> "Babe":
-        from pybabe_spark.operators.sampling import hash_sample
-
-        return self._wrap(hash_sample(self.df, key, fraction))
 
     def stratified_fixed_n(self, strata, key, n, seed=0) -> "Babe":
         from pybabe_spark.operators.sampling import stratified_fixed_n
@@ -208,287 +111,18 @@ class Babe:
                            out_col=out_col)
         )
 
-    def target_encode(self, cat_col, target_col, smoothing=20,
-                      loo=True, out_col=None) -> "Babe":
-        from pybabe_spark.operators.sampling import target_encode
-
-        return self._wrap(
-            target_encode(self.df, cat_col, target_col, smoothing,
-                          loo, out_col)
-        )
-
-    def weighted_sample(self, weight_col, n, id_col, seed=0) -> "Babe":
-        from pybabe_spark.operators.sampling import weighted_sample
-
-        return self._wrap(weighted_sample(self.df, weight_col, n, id_col, seed))
-
     def winsorize(self, column, lower_p=0.01, upper_p=0.99, by=None) -> "Babe":
         from pybabe_spark.operators.sampling import winsorize
 
         return self._wrap(winsorize(self.df, column, lower_p, upper_p, by))
 
-    def stratified_sample(self, strata, key, fractions) -> "Babe":
-        from pybabe_spark.operators.sampling import stratified_sample
-
-        return self._wrap(stratified_sample(self.df, strata, key, fractions))
-
-    def train_test_split(self, key, test_fraction=0.1) -> tuple["Babe", "Babe"]:
-        from pybabe_spark.operators.sampling import train_test_split
-
-        train, test = train_test_split(self.df, key, test_fraction)
-        return self._wrap(train), self._wrap(test)
-
-    def clip(self, max_words, mode="head", **kwargs) -> "Babe":
-        """Token-budget truncation (head/tail/middle) before packing."""
-        from pybabe_spark.operators.packing import clip_documents
-
-        return self._wrap(clip_documents(self.df, max_words, mode, **kwargs))
-
-    def curriculum_order(
-        self, score_col, boundaries, key, seed=0, **kwargs
-    ) -> "Babe":
-        """Banded curriculum epoch order: fixed score bands, seeded
-        shuffle inside each band, range-partitioned sort."""
-        from pybabe_spark.operators.sampling import curriculum_order
-
-        return self._wrap(
-            curriculum_order(self.df, score_col, boundaries, key, seed, **kwargs)
-        )
-
-    def temperature_resample(self, group_col, key, budget, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sampling import temperature_resample
-
-        return self._wrap(temperature_resample(self.df, group_col, key, budget, **kwargs))
-
-    def token_budget_sample(
-        self, group_col, key, token_col, budget, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.sampling import token_budget_sample
-
-        return self._wrap(
-            token_budget_sample(
-                self.df, group_col, key, token_col, budget, **kwargs
-            )
-        )
-
-    def global_shuffle(self, key, seed=0, shards=None) -> "Babe":
-        from pybabe_spark.operators.sampling import global_shuffle
-
-        return self._wrap(global_shuffle(self.df, key, seed, shards))
-
-    def pseudonymize(self, cols, salt, prefix_len=16) -> "Babe":
-        from pybabe_spark.functions.enrich import pseudonymize
-
-        return self._wrap(pseudonymize(self.df, cols, salt, prefix_len))
-
-    def normalize_url(self, field) -> "Babe":
-        from pybabe_spark.functions.url import normalize_url
-
-        return self._wrap(self.df.withColumn(field, normalize_url(field)))
-
-    def registered_domain(self, field, out_col="domain") -> "Babe":
-        from pybabe_spark.functions.url import registered_domain
-
-        return self._wrap(
-            self.df.withColumn(out_col, registered_domain(field))
-        )
-
-    def json_flatten(self, col, fields, **kwargs) -> "Babe":
-        from pybabe_spark.functions.json_ops import json_flatten
-
-        return self._wrap(json_flatten(self.df, col, fields, **kwargs))
-
-    def html_to_text(self, field) -> "Babe":
-        from pybabe_spark.functions.html import html_to_text
-
-        return self._wrap(self.df.withColumn(field, html_to_text(field)))
-
-    def normalize_text(self, field, **kwargs) -> "Babe":
-        from pybabe_spark.functions.text import normalize_text
-
-        return self._wrap(
-            self.df.withColumn(field, normalize_text(field, **kwargs))
-        )
-
-    def k_anonymity(self, quasi_cols, k=10) -> "Babe":
-        from pybabe_spark.functions.enrich import k_anonymity
-
-        return self._wrap(k_anonymity(self.df, quasi_cols, k))
-
-    def l_diversity(self, quasi_cols, sensitive_col, l=2) -> "Babe":  # noqa: E741
-        from pybabe_spark.functions.enrich import l_diversity
-
-        return self._wrap(
-            l_diversity(self.df, quasi_cols, sensitive_col, l)
-        )
-
-    def pii_scrub(self, field) -> "Babe":
-        from pybabe_spark.functions.text import pii_scrub
-
-        return self._wrap(self.df.withColumn(field, pii_scrub(field)))
-
-    def upsert(self, updates: "Babe | DataFrame", keys) -> "Babe":
-        from pybabe_spark.operators.merge import upsert
-
-        u = updates.df if isinstance(updates, Babe) else updates
-        return self._wrap(upsert(self.df, u, keys))
-
-    def dedup_against(self, seen: "Babe | DataFrame", keys) -> "Babe":
-        from pybabe_spark.operators.merge import dedup_against
-
-        s = seen.df if isinstance(seen, Babe) else seen
-        return self._wrap(dedup_against(self.df, s, keys))
-
-    def bfs_distances(self, sources, max_hops=6, **kwargs) -> "Babe":
-        from pybabe_spark.operators.graph import bfs_distances
-
-        srcs = sources.df if isinstance(sources, Babe) else sources
-        return self._wrap(bfs_distances(self.df, srcs, max_hops, **kwargs))
-
-    def k_core(self, k, max_rounds=8, **kwargs) -> "Babe":
-        from pybabe_spark.operators.graph import k_core
-
-        return self._wrap(k_core(self.df, k, max_rounds, **kwargs))
-
-    def sssp(self, sources, max_hops=4, **kwargs) -> "Babe":
-        from pybabe_spark.operators.graph import sssp
-
-        srcs = sources.df if isinstance(sources, Babe) else sources
-        return self._wrap(sssp(self.df, srcs, max_hops, **kwargs))
-
-    def triangle_count(self, src="id_a", dst="id_b") -> "Babe":
-        from pybabe_spark.operators.graph import triangle_count
-
-        return self._wrap(triangle_count(self.df, src, dst))
-
-    def adamic_adar(self, src="id_a", dst="id_b", max_degree=256,
-                    top_n=100) -> "Babe":
-        from pybabe_spark.operators.graph import adamic_adar
-
-        return self._wrap(
-            adamic_adar(self.df, src, dst, max_degree, top_n)
-        )
-
-    def jaccard_link_prediction(self, src="id_a", dst="id_b",
-                                max_degree=256, top_n=100) -> "Babe":
-        from pybabe_spark.operators.graph import jaccard_link_prediction
-
-        return self._wrap(
-            jaccard_link_prediction(self.df, src, dst, max_degree, top_n)
-        )
-
-    def assortativity(self, src="id_a", dst="id_b") -> "Babe":
-        from pybabe_spark.operators.graph import assortativity
-
-        return self._wrap(assortativity(self.df, src, dst))
-
-    def bollinger_bands(self, key_col, ts_col, value_col,
-                        **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import bollinger_bands
-
-        return self._wrap(
-            bollinger_bands(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def pagerank(self, iters=3, damping=0.85, **kwargs) -> "Babe":
-        """Treats the wrapped frame as a (src, dst) edge list."""
-        from pybabe_spark.operators.graph import pagerank
-
-        return self._wrap(pagerank(self.df, iters, damping, **kwargs))
-
-    def ab_test(self, variant_col, success_col, control, treatment, **kw) -> "Babe":
-        from pybabe_spark.operators.sketch import ab_test
-
-        return self._wrap(
-            ab_test(self.df, variant_col, success_col, control, treatment, **kw)
-        )
-
-    def ab_test_by(self, variant_col, success_col, control, treatment,
-                   by, z_crit=1.959964) -> "Babe":
-        from pybabe_spark.operators.sketch import ab_test_by
-
-        return self._wrap(
-            ab_test_by(self.df, variant_col, success_col, control,
-                       treatment, by, z_crit)
-        )
-
-    def proportion_ci(self, success_col, by=None, z=1.959964) -> "Babe":
-        from pybabe_spark.operators.sketch import proportion_ci
-
-        return self._wrap(proportion_ci(self.df, success_col, by, z))
-
-    def gini(self, key_col, value_col) -> "Babe":
-        from pybabe_spark.operators.skew import gini
-
-        return self._wrap(gini(self.df, key_col, value_col))
-
-    def pareto_report(self, key, value_col, top_n=50) -> "Babe":
-        from pybabe_spark.operators.skew import pareto_report
-
-        return self._wrap(pareto_report(self.df, key, value_col, top_n))
-
-    def bootstrap_mean_ci(self, value_col, key_col, by=None, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import bootstrap_mean_ci
-
-        return self._wrap(
-            bootstrap_mean_ci(self.df, value_col, key_col, by, **kwargs)
-        )
-
-    def mutual_information(self, a_col, b_col) -> "Babe":
-        from pybabe_spark.operators.sketch import mutual_information
-
-        return self._wrap(mutual_information(self.df, a_col, b_col))
-
-    def cramers_v(self, a_col, b_col) -> "Babe":
-        from pybabe_spark.operators.sketch import cramers_v
-
-        return self._wrap(cramers_v(self.df, a_col, b_col))
-
-    def cohens_kappa(self, a_col, b_col) -> "Babe":
-        from pybabe_spark.operators.sketch import cohens_kappa
-
-        return self._wrap(cohens_kappa(self.df, a_col, b_col))
-
-    def classification_report(self, label_col, pred_col) -> "Babe":
-        from pybabe_spark.operators.classifier import classification_report
-
-        return self._wrap(
-            classification_report(self.df, label_col, pred_col)
-        )
-
-    def ranking_metrics(self, truth: "Babe | DataFrame", query_col,
-                        doc_col, rank_col, k=10) -> "Babe":
-        from pybabe_spark.operators.ranking import ranking_metrics
-
-        t = truth.df if isinstance(truth, Babe) else truth
-        return self._wrap(
-            ranking_metrics(self.df, t, query_col, doc_col, rank_col, k)
-        )
-
     def rbo_overlap(self, other: "Babe | DataFrame", query_col, doc_col,
                     rank_col, k=10, p=0.9) -> "Babe":
         from pybabe_spark.operators.ranking import rbo_overlap
 
-        o = other.df if isinstance(other, Babe) else other
         return self._wrap(
-            rbo_overlap(self.df, o, query_col, doc_col, rank_col, k, p)
+            rbo_overlap(self.df, _df(other), query_col, doc_col, rank_col, k, p)
         )
-
-    def spearman_corr(self, x_col, y_col, by=None, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import spearman_corr
-
-        return self._wrap(spearman_corr(self.df, x_col, y_col, by, **kwargs))
-
-    def corr_matrix(self, cols) -> "Babe":
-        from pybabe_spark.operators.sketch import corr_matrix
-
-        return self._wrap(corr_matrix(self.df, cols))
-
-    def quantiles(self, column, probs, by=None, approx=False, **kw) -> "Babe":
-        from pybabe_spark.operators.sketch import quantiles, quantiles_approx
-
-        fn = quantiles_approx if approx else quantiles
-        return self._wrap(fn(self.df, column, probs, by, **kw))
 
     def histogram(self, column, bins=10) -> "Babe":
         from pybabe_spark.operators.sketch import histogram
@@ -507,11 +141,86 @@ class Babe:
             group_heavy_hitters(self.df, group_col, column, support)
         )
 
-    def throttle(self, key, ts_col, min_gap_seconds, tiebreak=None) -> "Babe":
-        from pybabe_spark.operators.relational import throttle
+    def unpivot(self, common_fields, name_field="name", value_field="value") -> "Babe":
+        return self._wrap(ops.unpivot(self.df, common_fields, name_field, value_field))
+
+    def benford_audit(self, column, **kwargs) -> "Babe":
+        from pybabe_spark.operators.validate import benford_audit
+
+        return self._wrap(benford_audit(self.df, column, **kwargs))
+
+    def schema_drift(self, other: "Babe | DataFrame") -> "Babe":
+        from pybabe_spark.operators.validate import schema_drift
+
+        return self._wrap(schema_drift(self.df, _df(other)))
+
+    def js_divergence(self, other: "Babe | DataFrame", col) -> "Babe":
+        from pybabe_spark.operators.validate import js_divergence
+
+        return self._wrap(js_divergence(self.df, _df(other), col))
+
+    def table_diff(self, other, keys, compare_cols=None) -> "Babe":
+        from pybabe_spark.operators.merge import table_diff
+
+        return self._wrap(table_diff(self.df, _df(other), keys, compare_cols))
+
+    # -- joins ----------------------------------------------------------------
+    def join(self, other: "Babe | DataFrame", key, join_key=None, **kwargs) -> "Babe":
+        return self._wrap(ops.join(self.df, _df(other), key, join_key, **kwargs))
+
+    def asof_join(
+        self, other: "Babe | DataFrame", on, left_ts="ts", right_ts="ts", **kwargs
+    ) -> "Babe":
+        return self._wrap(
+            ops.asof_join(self.df, _df(other), on, left_ts, right_ts, **kwargs)
+        )
+
+    def range_join(
+        self, other: "Babe | DataFrame", point, start, end, key=None, **kwargs
+    ) -> "Babe":
+        return self._wrap(
+            ops.range_join(self.df, _df(other), point, start, end, key, **kwargs)
+        )
+
+    def radius_join(self, other, radius, **kwargs) -> "Babe":
+        from pybabe_spark.operators.spatial import radius_join
+
+        return self._wrap(radius_join(self.df, _df(other), radius, **kwargs))
+
+    def nearest_join(self, other, radius, right_id, **kwargs) -> "Babe":
+        from pybabe_spark.operators.spatial import nearest_join
 
         return self._wrap(
-            throttle(self.df, key, ts_col, min_gap_seconds, tiebreak)
+            nearest_join(self.df, _df(other), radius, right_id, **kwargs)
+        )
+
+    def overlap_join(self, other, left_range, right_range, **kwargs) -> "Babe":
+        from pybabe_spark.operators.join import overlap_join
+
+        return self._wrap(
+            overlap_join(self.df, _df(other), left_range, right_range, **kwargs)
+        )
+
+    def fuzzy_join(
+        self, other: "Babe | DataFrame", left_on, right_on, max_dist=1, **kwargs
+    ) -> "Babe":
+        from pybabe_spark.operators.fuzzy import fuzzy_join
+
+        return self._wrap(
+            fuzzy_join(self.df, _df(other), left_on, right_on, max_dist, **kwargs)
+        )
+
+    # -- column functions applied through withColumn ---------------------------
+    def normalize_url(self, field) -> "Babe":
+        from pybabe_spark.functions.url import normalize_url
+
+        return self._wrap(self.df.withColumn(field, normalize_url(field)))
+
+    def registered_domain(self, field, out_col="domain") -> "Babe":
+        from pybabe_spark.functions.url import registered_domain
+
+        return self._wrap(
+            self.df.withColumn(out_col, registered_domain(field))
         )
 
     def url_parse(self, field, out_field="url_parts") -> "Babe":
@@ -519,84 +228,22 @@ class Babe:
 
         return self._wrap(self.df.withColumn(out_field, url_parse(field)))
 
-    def decontaminate(self, benchmark: "Babe | DataFrame", **kwargs) -> "Babe":
-        from pybabe_spark.operators.decontam import decontaminate
+    def html_to_text(self, field) -> "Babe":
+        from pybabe_spark.functions.html import html_to_text
 
-        b = benchmark.df if isinstance(benchmark, Babe) else benchmark
-        return self._wrap(decontaminate(self.df, b, **kwargs))
+        return self._wrap(self.df.withColumn(field, html_to_text(field)))
 
-    def coverage_dedup(self, threshold=0.8, **kwargs) -> "Babe":
-        from pybabe_spark.operators.decontam import coverage_dedup
-
-        return self._wrap(coverage_dedup(self.df, threshold, **kwargs))
-
-    def strip_boilerplate_lines(self, id_col, text_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.decontam import strip_boilerplate_lines
+    def normalize_text(self, field, **kwargs) -> "Babe":
+        from pybabe_spark.functions.text import normalize_text
 
         return self._wrap(
-            strip_boilerplate_lines(self.df, id_col, text_col, **kwargs)
+            self.df.withColumn(field, normalize_text(field, **kwargs))
         )
 
-    def strip_duplicated_spans(self, n=15, **kwargs) -> "Babe":
-        """Exact duplicated-substring removal (Lee et al. / RefinedWeb):
-        delete every word covered by a corpus-duplicated n-gram."""
-        from pybabe_spark.operators.decontam import strip_duplicated_spans
+    def pii_scrub(self, field) -> "Babe":
+        from pybabe_spark.functions.text import pii_scrub
 
-        return self._wrap(strip_duplicated_spans(self.df, n, **kwargs))
-
-    def perplexity_filter(
-        self, max_ppl, lm=None, id_col="doc_id", text_col="text", **kwargs
-    ) -> "Babe":
-        """CCNet-style LM quality cut: score against ``lm`` (default: a
-        bigram LM trained on this corpus itself) and keep docs at or
-        below ``max_ppl``."""
-        from pybabe_spark.operators.lm import perplexity_filter, train_bigram_lm
-
-        model = lm or train_bigram_lm(self.df, text_col, id_col)
-        return self._wrap(
-            perplexity_filter(self.df, model, max_ppl, id_col, text_col, **kwargs)
-        )
-
-    def calibration_bins(self, score_col, label_col, bins=10) -> "Babe":
-        from pybabe_spark.operators.classifier import calibration_bins
-
-        return self._wrap(
-            calibration_bins(self.df, score_col, label_col, bins)
-        )
-
-    def quality_filter(
-        self, labeled: "Babe | DataFrame", label_col, min_prob=0.5,
-        id_col="doc_id", text_col="text", **kwargs
-    ) -> "Babe":
-        """fastText-style quality cut: train a logistic classifier on
-        the ``labeled`` corpus's hashed-bigram features, keep docs this
-        corpus scores at or above ``min_prob``."""
-        from pybabe_spark.operators.classifier import (
-            quality_classifier_filter,
-            train_quality_classifier,
-        )
-
-        t = labeled.df if isinstance(labeled, Babe) else labeled
-        w = train_quality_classifier(t, label_col, id_col, text_col, **kwargs)
-        buckets = kwargs.get("buckets", 4096)
-        return self._wrap(
-            quality_classifier_filter(
-                self.df, w, min_prob, id_col, text_col, buckets
-            )
-        )
-
-    def dsir_select(
-        self, target: "Babe | DataFrame", k, id_col="doc_id",
-        text_col="text", seed=0, **kwargs
-    ) -> "Babe":
-        """DSIR: importance-weight this corpus against ``target`` and
-        Gumbel-top-k resample the k most target-like documents."""
-        from pybabe_spark.operators.dsir import dsir_log_weights, dsir_resample
-
-        t = target.df if isinstance(target, Babe) else target
-        w = dsir_log_weights(self.df, t, id_col, text_col, **kwargs)
-        picked = dsir_resample(w, k, id_col, seed=seed).select(id_col)
-        return self._wrap(self.df.join(picked, id_col, "semi"))
+        return self._wrap(self.df.withColumn(field, pii_scrub(field)))
 
     def word_entropy(self, field, out_field="entropy") -> "Babe":
         from pybabe_spark.functions.text import word_entropy
@@ -615,1299 +262,6 @@ class Babe:
         return self._wrap(
             self.df.withColumn(out_field, compression_ratio(field, level))
         )
-
-    def centroid_drift(self, group_col="label",
-                       vec_col="embedding") -> "Babe":
-        from pybabe_spark.operators.similarity import centroid_drift
-
-        return self._wrap(centroid_drift(self.df, group_col, vec_col))
-
-    def stickiness(self, key_col, ts_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import stickiness
-
-        return self._wrap(stickiness(self.df, key_col, ts_col, **kwargs))
-
-    def stream_activity_grain(self, key_col, ts_col, store_path,
-                              checkpoint, **kwargs):
-        from pybabe_spark.streaming.ops import stream_activity_grain
-
-        return stream_activity_grain(
-            self.df, key_col, ts_col, store_path, checkpoint, **kwargs
-        )
-
-    def vocab_overlap(self, group_col="source", text_col="text",
-                      **kwargs) -> "Babe":
-        from pybabe_spark.operators.tfidf import vocab_overlap
-
-        return self._wrap(
-            vocab_overlap(self.df, group_col, text_col, **kwargs)
-        )
-
-    def required_sample_size(self, success_col, by=None, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import required_sample_size
-
-        return self._wrap(
-            required_sample_size(self.df, success_col, by, **kwargs)
-        )
-
-    def seasonal_decompose(self, key_col, ts_col, value_col,
-                           **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import seasonal_decompose
-
-        return self._wrap(
-            seasonal_decompose(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def seasonal_decompose_mult(self, key_col, ts_col, value_col,
-                                **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import seasonal_decompose_mult
-
-        return self._wrap(
-            seasonal_decompose_mult(
-                self.df, key_col, ts_col, value_col, **kwargs
-            )
-        )
-
-    def snaive_forecast(self, key_col, ts_col, value_col,
-                        **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import snaive_forecast
-
-        return self._wrap(
-            snaive_forecast(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def forecast_backtest(self, key_col, ts_col, value_col,
-                          **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import forecast_backtest
-
-        return self._wrap(
-            forecast_backtest(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def g_test(self, a_col, b_col, crit=15.507313) -> "Babe":
-        from pybabe_spark.operators.sketch import g_test
-
-        return self._wrap(g_test(self.df, a_col, b_col, crit))
-
-    def fleiss_kappa(self, item_col, category_col) -> "Babe":
-        from pybabe_spark.operators.sketch import fleiss_kappa
-
-        return self._wrap(fleiss_kappa(self.df, item_col, category_col))
-
-    def dunn_test(self, group_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import dunn_test
-
-        return self._wrap(dunn_test(self.df, group_col, value_col, **kwargs))
-
-    def tukey_hsd(self, group_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import tukey_hsd
-
-        return self._wrap(tukey_hsd(self.df, group_col, value_col, **kwargs))
-
-    def friedman_test(self, block_col, treatment_col, value_col,
-                      **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import friedman_test
-
-        return self._wrap(
-            friedman_test(self.df, block_col, treatment_col, value_col,
-                          **kwargs)
-        )
-
-    def page_trend_test(self, block_col, treatment_col, value_col,
-                        scores, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import page_trend_test
-
-        return self._wrap(
-            page_trend_test(self.df, block_col, treatment_col,
-                            value_col, scores, **kwargs)
-        )
-
-    def cochran_q(self, block_col, treatment_col, success_col,
-                  **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import cochran_q
-
-        return self._wrap(
-            cochran_q(self.df, block_col, treatment_col, success_col,
-                      **kwargs)
-        )
-
-    def mcc(self, label_col, pred_col) -> "Babe":
-        from pybabe_spark.operators.classifier import mcc
-
-        return self._wrap(mcc(self.df, label_col, pred_col))
-
-    def grubbs_test(self, value_col, by=None, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import grubbs_test
-
-        return self._wrap(grubbs_test(self.df, value_col, by, **kwargs))
-
-    def mood_median_test(self, group_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import mood_median_test
-
-        return self._wrap(
-            mood_median_test(self.df, group_col, value_col, **kwargs)
-        )
-
-    def cochran_armitage_trend(
-        self, score_col, success_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.sketch import cochran_armitage_trend
-
-        return self._wrap(
-            cochran_armitage_trend(self.df, score_col, success_col, **kwargs)
-        )
-
-    def bartlett_test(self, group_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import bartlett_test
-
-        return self._wrap(
-            bartlett_test(self.df, group_col, value_col, **kwargs)
-        )
-
-    def jarque_bera(self, value_col, by=None, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import jarque_bera
-
-        return self._wrap(jarque_bera(self.df, value_col, by, **kwargs))
-
-    def jonckheere_terpstra(
-        self, group_score_col, value_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.sketch import jonckheere_terpstra
-
-        return self._wrap(
-            jonckheere_terpstra(
-                self.df, group_score_col, value_col, **kwargs
-            )
-        )
-
-    def theil_index(self, key_col, value_col) -> "Babe":
-        from pybabe_spark.operators.skew import theil_index
-
-        return self._wrap(theil_index(self.df, key_col, value_col))
-
-    def breusch_pagan(self, x_col, y_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.regression import breusch_pagan
-
-        return self._wrap(breusch_pagan(self.df, x_col, y_col, **kwargs))
-
-    def turning_points_test(
-        self, key_col, ts_col, value_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.timeseries import turning_points_test
-
-        return self._wrap(
-            turning_points_test(
-                self.df, key_col, ts_col, value_col, **kwargs
-            )
-        )
-
-    def granger_causality(
-        self, key_col, ts_col, x_col, y_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.timeseries import granger_causality
-
-        return self._wrap(
-            granger_causality(
-                self.df, key_col, ts_col, x_col, y_col, **kwargs
-            )
-        )
-
-    def price_index(
-        self, item_col, price_col, qty_col, period_col,
-        base_period, curr_period,
-    ) -> "Babe":
-        from pybabe_spark.operators.sketch import price_index
-
-        return self._wrap(
-            price_index(
-                self.df, item_col, price_col, qty_col, period_col,
-                base_period, curr_period,
-            )
-        )
-
-    def max_drawdown(self, key_col, ts_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import max_drawdown
-
-        return self._wrap(
-            max_drawdown(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def dickey_fuller(self, key_col, ts_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import dickey_fuller
-
-        return self._wrap(
-            dickey_fuller(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def pettitt_test(self, key_col, ts_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import pettitt_test
-
-        return self._wrap(
-            pettitt_test(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def holt_linear(self, key_col, ts_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import holt_linear
-
-        return self._wrap(
-            holt_linear(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def cmh_test(
-        self, stratum_col, exposure_col, outcome_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.sketch import cmh_test
-
-        return self._wrap(
-            cmh_test(
-                self.df, stratum_col, exposure_col, outcome_col, **kwargs
-            )
-        )
-
-    def youden_threshold(self, score_col, label_col) -> "Babe":
-        from pybabe_spark.operators.classifier import youden_threshold
-
-        return self._wrap(
-            youden_threshold(self.df, score_col, label_col)
-        )
-
-    def equalized_odds(
-        self, group_col, label_col, pred_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.classifier import equalized_odds
-
-        return self._wrap(
-            equalized_odds(
-                self.df, group_col, label_col, pred_col, **kwargs
-            )
-        )
-
-    def winnow_fingerprints(self, id_col, text_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import winnow_fingerprints
-
-        return self._wrap(
-            winnow_fingerprints(self.df, id_col, text_col, **kwargs)
-        )
-
-    def runs_test(self, key_col, ts_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import runs_test
-
-        return self._wrap(
-            runs_test(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def ece(self, score_col, label_col, bins=10) -> "Babe":
-        from pybabe_spark.operators.classifier import ece
-
-        return self._wrap(ece(self.df, score_col, label_col, bins))
-
-    def pr_auc(self, score_col, label_col, by=None) -> "Babe":
-        from pybabe_spark.operators.classifier import pr_auc
-
-        return self._wrap(pr_auc(self.df, score_col, label_col, by))
-
-    def herfindahl_index(self, entity_col, value_col, by=None) -> "Babe":
-        from pybabe_spark.operators.sketch import herfindahl_index
-
-        return self._wrap(
-            herfindahl_index(self.df, entity_col, value_col, by)
-        )
-
-    def kendall_tau_b(self, x_col, y_col, by=None, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import kendall_tau_b
-
-        return self._wrap(
-            kendall_tau_b(self.df, x_col, y_col, by, **kwargs)
-        )
-
-    def partial_corr(self, x_col, y_col, z_col, by=None) -> "Babe":
-        from pybabe_spark.operators.sketch import partial_corr
-
-        return self._wrap(partial_corr(self.df, x_col, y_col, z_col, by))
-
-    def odds_ratio(self, exposure_col, outcome_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.sketch import odds_ratio
-
-        return self._wrap(
-            odds_ratio(self.df, exposure_col, outcome_col, **kwargs)
-        )
-
-    def lorenz_curve(self, key_col, value_col, n_buckets=10) -> "Babe":
-        from pybabe_spark.operators.skew import lorenz_curve
-
-        return self._wrap(
-            lorenz_curve(self.df, key_col, value_col, n_buckets)
-        )
-
-    def eb_shrink_rates(self, group_col, success_col) -> "Babe":
-        from pybabe_spark.operators.sketch import eb_shrink_rates
-
-        return self._wrap(eb_shrink_rates(self.df, group_col, success_col))
-
-    def roc_auc(self, score_col, label_col, by=None) -> "Babe":
-        from pybabe_spark.operators.classifier import roc_auc
-
-        return self._wrap(roc_auc(self.df, score_col, label_col, by))
-
-    def gains_table(self, score_col, label_col, id_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.classifier import gains_table
-
-        return self._wrap(
-            gains_table(self.df, score_col, label_col, id_col, **kwargs)
-        )
-
-    def running_totals(self, **kwargs) -> "Babe":
-        from pybabe_spark.streaming.ops import running_totals
-
-        return self._wrap(running_totals(self.df, **kwargs))
-
-    def stream_group_heavy_hitters(self, group_col, value_col,
-                                   support=0.01, **kwargs) -> "Babe":
-        from pybabe_spark.streaming.ops import stream_group_heavy_hitters
-
-        return self._wrap(
-            stream_group_heavy_hitters(
-                self.df, group_col, value_col, support, **kwargs
-            )
-        )
-
-    # -- join / group / reshape ----------------------------------------------
-    def join(self, other: "Babe | DataFrame", key, join_key=None, **kwargs) -> "Babe":
-        build = other.df if isinstance(other, Babe) else other
-        return self._wrap(ops.join(self.df, build, key, join_key, **kwargs))
-
-    def frequent_pairs(self, basket_col, item_col, min_support=2) -> "Babe":
-        from pybabe_spark.operators.collocations import frequent_pairs
-
-        return self._wrap(
-            frequent_pairs(self.df, basket_col, item_col, min_support)
-        )
-
-    def association_rules(self, basket_col, item_col, min_support=2,
-                          min_confidence_ppm=0) -> "Babe":
-        from pybabe_spark.operators.collocations import association_rules
-
-        return self._wrap(
-            association_rules(self.df, basket_col, item_col,
-                              min_support, min_confidence_ppm)
-        )
-
-    def transition_matrix(self, **kwargs) -> "Babe":
-        from pybabe_spark.operators.group import transition_matrix
-
-        return self._wrap(transition_matrix(self.df, **kwargs))
-
-    def sequence_count(self, steps, **kwargs) -> "Babe":
-        from pybabe_spark.operators.group import sequence_count
-
-        return self._wrap(sequence_count(self.df, steps, **kwargs))
-
-    def funnel(self, steps, **kwargs) -> "Babe":
-        from pybabe_spark.operators.group import funnel
-
-        return self._wrap(funnel(self.df, steps, **kwargs))
-
-    def groupBy(self, key, aggregations=None, **kwargs) -> "Babe":
-        return self._wrap(ops.group(self.df, key, aggregations, **kwargs))
-
-    def group_all(self, aggregations=None, **kwargs) -> "Babe":
-        return self._wrap(ops.group_all(self.df, aggregations, **kwargs))
-
-    def pivot(self, pivot_col, group: Sequence[str], **kwargs) -> "Babe":
-        return self._wrap(ops.pivot(self.df, pivot_col, group, **kwargs))
-
-    def unpivot(self, common_fields, name_field="name", value_field="value") -> "Babe":
-        return self._wrap(ops.unpivot(self.df, common_fields, name_field, value_field))
-
-    def transpose(self, **kwargs) -> "Babe":
-        return self._wrap(ops.transpose(self.df, **kwargs))
-
-    def windowMap(self, window_size, agg, source_col=None, **kwargs) -> "Babe":
-        return self._wrap(ops.window_map(self.df, window_size, agg, source_col, **kwargs))
-
-    # -- UDF surface (mapTo / bulkMapTo / flatMap / iterate) -----------------
-    def mapTo(self, fn, insert_fields=None, fields=None) -> "Babe":
-        from pybabe_spark.operators.udf_ops import map_to
-
-        return self._wrap(map_to(self.df, fn, insert_fields, fields))
-
-    iterate = mapTo  # pybabe/iterate.py:5-30 — same semantics, dict bag
-
-    def bulkMapTo(self, fn, insert_fields=None, fields=None) -> "Babe":
-        from pybabe_spark.operators.udf_ops import bulk_map_to
-
-        return self._wrap(bulk_map_to(self.df, fn, insert_fields, fields))
-
-    def flatMap(self, fn, insert_fields=None, fields=None) -> "Babe":
-        from pybabe_spark.operators.udf_ops import flat_map
-
-        return self._wrap(flat_map(self.df, fn, insert_fields, fields))
-
-    def map_filter(self, fn) -> "Babe":
-        from pybabe_spark.operators.udf_ops import map_filter
-
-        return self._wrap(map_filter(self.df, fn))
-
-    def asof_join(
-        self, other: "Babe | DataFrame", on, left_ts="ts", right_ts="ts", **kwargs
-    ) -> "Babe":
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(ops.asof_join(self.df, right, on, left_ts, right_ts, **kwargs))
-
-    def range_join(
-        self, other: "Babe | DataFrame", point, start, end, key=None, **kwargs
-    ) -> "Babe":
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(ops.range_join(self.df, right, point, start, end, key, **kwargs))
-
-    def sessionize(self, **kwargs) -> "Babe":
-        from pybabe_spark.streaming.ops import sessionize
-
-        return self._wrap(sessionize(self.df, **kwargs))
-
-    def sessionize_batch(self, gap_seconds, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import sessionize
-
-        return self._wrap(sessionize(self.df, gap_seconds, **kwargs))
-
-    def session_stats(self, gap_seconds, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import session_stats
-
-        return self._wrap(session_stats(self.df, gap_seconds, **kwargs))
-
-    def population_stability(self, new: "Babe | DataFrame", col, bins=10) -> "Babe":
-        from pybabe_spark.operators.validate import population_stability
-
-        n = new.df if isinstance(new, Babe) else new
-        return self._wrap(population_stability(self.df, n, col, bins=bins))
-
-    def feature_hash_encode(self, id_col="doc_id", text_col="text",
-                            dim=64) -> "Babe":
-        from pybabe_spark.operators.dsir import feature_hash_encode
-
-        return self._wrap(
-            feature_hash_encode(self.df, id_col, text_col, dim)
-        )
-
-    def zipf_fit(self, top_n=1000, text_col="text") -> "Babe":
-        from pybabe_spark.operators.tfidf import zipf_fit
-
-        return self._wrap(zipf_fit(self.df, top_n, text_col))
-
-    def brier_score(self, score_col, label_col) -> "Babe":
-        from pybabe_spark.operators.classifier import brier_score
-
-        return self._wrap(brier_score(self.df, score_col, label_col))
-
-    def disparate_impact(self, group_col, pred_col, min_n=20) -> "Babe":
-        from pybabe_spark.operators.classifier import disparate_impact
-
-        return self._wrap(
-            disparate_impact(self.df, group_col, pred_col, min_n)
-        )
-
-    def schema_drift(self, other: "Babe | DataFrame") -> "Babe":
-        from pybabe_spark.operators.validate import schema_drift
-
-        o = other.df if isinstance(other, Babe) else other
-        return self._wrap(schema_drift(self.df, o))
-
-    def js_divergence(self, other: "Babe | DataFrame", col) -> "Babe":
-        from pybabe_spark.operators.validate import js_divergence
-
-        o = other.df if isinstance(other, Babe) else other
-        return self._wrap(js_divergence(self.df, o, col))
-
-    def validate(self, rules) -> "Babe":
-        from pybabe_spark.operators.validate import validate
-
-        return self._wrap(validate(self.df, rules))
-
-    def benford_audit(self, column, **kwargs) -> "Babe":
-        from pybabe_spark.operators.validate import benford_audit
-
-        return self._wrap(benford_audit(self.df, column, **kwargs))
-
-    def impute(self, cols, by=None) -> "Babe":
-        from pybabe_spark.operators.validate import impute
-
-        return self._wrap(impute(self.df, cols, by))
-
-    def quarantine(self, rules, out_col="violations") -> "Babe":
-        from pybabe_spark.operators.validate import quarantine
-
-        return self._wrap(quarantine(self.df, rules, out_col))
-
-    def table_diff(self, other, keys, compare_cols=None) -> "Babe":
-        from pybabe_spark.operators.merge import table_diff
-
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(table_diff(self.df, right, keys, compare_cols))
-
-    def zscore_anomalies(self, key_col, value_col, ts_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.anomaly import zscore_anomalies
-
-        return self._wrap(
-            zscore_anomalies(self.df, key_col, value_col, ts_col, **kwargs)
-        )
-
-    def mad_anomalies(self, key_col, value_col, ts_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.anomaly import mad_anomalies
-
-        return self._wrap(
-            mad_anomalies(self.df, key_col, value_col, ts_col, **kwargs)
-        )
-
-    def cusum_alarms(self, key_col, value_col, ts_col, target, **kwargs) -> "Babe":
-        from pybabe_spark.operators.anomaly import cusum_alarms
-
-        return self._wrap(
-            cusum_alarms(self.df, key_col, value_col, ts_col, target, **kwargs)
-        )
-
-    def ewma(self, key_col, value_col, ts_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import ewma_smooth
-
-        return self._wrap(
-            ewma_smooth(self.df, key_col, value_col, ts_col, **kwargs)
-        )
-
-    def time_weighted_avg(self, key_col, ts_col, value_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import time_weighted_avg
-
-        return self._wrap(
-            time_weighted_avg(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def km_survival(self, duration_col, event_col, group_col=None) -> "Babe":
-        from pybabe_spark.operators.timeseries import km_survival
-
-        return self._wrap(
-            km_survival(self.df, duration_col, event_col, group_col)
-        )
-
-    def km_quantiles(self, duration_col, event_col,
-                     probs=(0.75, 0.5, 0.25), group_col=None) -> "Babe":
-        from pybabe_spark.operators.timeseries import km_quantiles
-
-        return self._wrap(
-            km_quantiles(self.df, duration_col, event_col, probs,
-                         group_col)
-        )
-
-    def rmst(self, duration_col, event_col, tau,
-             group_col=None) -> "Babe":
-        from pybabe_spark.operators.timeseries import rmst
-
-        return self._wrap(
-            rmst(self.df, duration_col, event_col, tau, group_col)
-        )
-
-    def nelson_aalen(self, duration_col, event_col,
-                     group_col=None) -> "Babe":
-        from pybabe_spark.operators.timeseries import nelson_aalen
-
-        return self._wrap(
-            nelson_aalen(self.df, duration_col, event_col, group_col)
-        )
-
-    def logrank_test(self, duration_col, event_col, group_col,
-                     group_a, group_b, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import logrank_test
-
-        return self._wrap(
-            logrank_test(self.df, duration_col, event_col, group_col,
-                         group_a, group_b, **kwargs)
-        )
-
-    def attribute_conversions(
-        self, conversion, touch, channel_col, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.attribution import attribute_conversions
-
-        return self._wrap(
-            attribute_conversions(
-                self.df, conversion, touch, channel_col, **kwargs
-            )
-        )
-
-    def cube(self, dims, aggregations, kind="cube") -> "Babe":
-        from pybabe_spark.operators.group import cube_agg
-
-        return self._wrap(cube_agg(self.df, dims, aggregations, kind=kind))
-
-    def foreign_key_check(self, child_col, parent, parent_col) -> "Babe":
-        from pybabe_spark.operators.infra import foreign_key_check
-
-        right = parent.df if isinstance(parent, Babe) else parent
-        return self._wrap(
-            foreign_key_check(self.df, child_col, right, parent_col)
-        )
-
-    def phonetic_pairs(self, id_col, name_col, max_dist=None) -> "Babe":
-        from pybabe_spark.functions.phonetic import phonetic_pairs
-
-        return self._wrap(
-            phonetic_pairs(self.df, id_col, name_col, max_dist=max_dist)
-        )
-
-    def containment_pairs(self, id_col, text_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import containment_pairs
-
-        return self._wrap(
-            containment_pairs(self.df, id_col, text_col, **kwargs)
-        )
-
-    def novelty_score(self, reference: "Babe | DataFrame", **kwargs) -> "Babe":
-        from pybabe_spark.operators.decontam import novelty_score
-
-        ref = reference.df if isinstance(reference, Babe) else reference
-        return self._wrap(novelty_score(self.df, ref, **kwargs))
-
-    def hard_negatives(self, queries: "Babe | DataFrame", k=10, **kwargs) -> "Babe":
-        from pybabe_spark.operators.similarity import ann_hard_negatives
-
-        q = queries.df if isinstance(queries, Babe) else queries
-        return self._wrap(ann_hard_negatives(self.df, q, k=k, **kwargs))
-
-    def rank_fuse(self, *others: "Babe | DataFrame", k=10, **kwargs) -> "Babe":
-        from pybabe_spark.operators.fusion import rank_fuse
-
-        lists = [self.df] + [
-            o.df if isinstance(o, Babe) else o for o in others
-        ]
-        return self._wrap(rank_fuse(lists, k=k, **kwargs))
-
-    def streaks(self, key_col, ts_col, period_seconds=86400) -> "Babe":
-        from pybabe_spark.operators.timeseries import streaks
-
-        return self._wrap(
-            streaks(self.df, key_col, ts_col, period_seconds)
-        )
-
-    def growth_accounting(self, key_col, ts_col,
-                          period_seconds=604800) -> "Babe":
-        from pybabe_spark.operators.timeseries import growth_accounting
-
-        return self._wrap(
-            growth_accounting(self.df, key_col, ts_col, period_seconds)
-        )
-
-    def period_over_period(self, key_col, ts_col, value_col,
-                           period_seconds=86400) -> "Babe":
-        from pybabe_spark.operators.timeseries import period_over_period
-
-        return self._wrap(
-            period_over_period(self.df, key_col, ts_col, value_col,
-                               period_seconds)
-        )
-
-    def cohort_values(self, key_col, ts_col, value_col,
-                      **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import cohort_values
-
-        return self._wrap(
-            cohort_values(self.df, key_col, ts_col, value_col, **kwargs)
-        )
-
-    def retention_cohorts(self, key_col, ts_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import retention_cohorts
-
-        return self._wrap(
-            retention_cohorts(self.df, key_col, ts_col, **kwargs)
-        )
-
-    def scd2(self, key_col, ts_col, attr_cols, **kwargs) -> "Babe":
-        from pybabe_spark.operators.scd import scd2_from_changelog
-
-        return self._wrap(
-            scd2_from_changelog(self.df, key_col, ts_col, attr_cols, **kwargs)
-        )
-
-    def scd2_upsert(self, updates, key_col, ts_col, attr_cols) -> "Babe":
-        from pybabe_spark.operators.scd import scd2_upsert
-
-        right = updates.df if isinstance(updates, Babe) else updates
-        return self._wrap(
-            scd2_upsert(self.df, right, key_col, ts_col, attr_cols)
-        )
-
-    def item_neighbors(self, basket_col, item_col, k=10, min_support=2) -> "Babe":
-        from pybabe_spark.operators.recommend import item_neighbors
-
-        return self._wrap(
-            item_neighbors(self.df, basket_col, item_col, k, min_support)
-        )
-
-    def clustering_coefficient(self, src="id_a", dst="id_b") -> "Babe":
-        from pybabe_spark.operators.graph import clustering_coefficient
-
-        return self._wrap(clustering_coefficient(self.df, src, dst))
-
-    def propagate_labels(self, seeds, max_hops=6, **kwargs) -> "Babe":
-        from pybabe_spark.operators.graph import propagate_labels
-
-        sd = seeds.df if isinstance(seeds, Babe) else seeds
-        return self._wrap(
-            propagate_labels(self.df, sd, max_hops, **kwargs)
-        )
-
-    def mean_test(self, variant_col, value_col, control, treatment,
-                  z_crit=1.959964) -> "Babe":
-        from pybabe_spark.operators.sketch import mean_test
-
-        return self._wrap(
-            mean_test(self.df, variant_col, value_col, control,
-                      treatment, z_crit)
-        )
-
-    def anova_f(self, group_col, value_col) -> "Babe":
-        from pybabe_spark.operators.sketch import anova_f
-
-        return self._wrap(anova_f(self.df, group_col, value_col))
-
-    def trend_test(self, group_col, success_col, scores,
-                   z_crit=1.959964) -> "Babe":
-        from pybabe_spark.operators.sketch import trend_test
-
-        return self._wrap(
-            trend_test(self.df, group_col, success_col, scores, z_crit)
-        )
-
-    def effect_size(self, variant_col, value_col, control,
-                    treatment) -> "Babe":
-        from pybabe_spark.operators.sketch import effect_size
-
-        return self._wrap(
-            effect_size(self.df, variant_col, value_col, control,
-                        treatment)
-        )
-
-    def ratio_metric_ci(self, unit_col, num_col, den_col, by=None,
-                        z=1.959964) -> "Babe":
-        from pybabe_spark.operators.sketch import ratio_metric_ci
-
-        return self._wrap(
-            ratio_metric_ci(self.df, unit_col, num_col, den_col, by, z)
-        )
-
-    def cliffs_delta(self, variant_col, value_col, control,
-                     treatment) -> "Babe":
-        from pybabe_spark.operators.sketch import cliffs_delta
-
-        return self._wrap(
-            cliffs_delta(self.df, variant_col, value_col, control,
-                         treatment)
-        )
-
-    def seasonal_zscore(self, key_col, value_col, ts_col,
-                        threshold=3.0, season="hour_of_week") -> "Babe":
-        from pybabe_spark.operators.anomaly import seasonal_zscore
-
-        return self._wrap(
-            seasonal_zscore(self.df, key_col, value_col, ts_col,
-                            threshold, season)
-        )
-
-    def brown_forsythe(self, group_col, value_col) -> "Babe":
-        from pybabe_spark.operators.sketch import brown_forsythe
-
-        return self._wrap(brown_forsythe(self.df, group_col, value_col))
-
-    def kruskal_wallis(self, group_col, value_col,
-                       chi2_crit=None) -> "Babe":
-        from pybabe_spark.operators.sketch import kruskal_wallis
-
-        return self._wrap(
-            kruskal_wallis(self.df, group_col, value_col, chi2_crit)
-        )
-
-    def rfm_segments(self, key_col, ts_col, value_col, as_of,
-                     k=5) -> "Babe":
-        from pybabe_spark.operators.rfm import rfm_segments
-
-        return self._wrap(
-            rfm_segments(self.df, key_col, ts_col, value_col, as_of, k)
-        )
-
-    def chi2_independence(self, a_col, b_col, crit=15.507313) -> "Babe":
-        from pybabe_spark.operators.sketch import chi2_independence
-
-        return self._wrap(
-            chi2_independence(self.df, a_col, b_col, crit)
-        )
-
-    def category_diversity(self, col, by=None) -> "Babe":
-        from pybabe_spark.operators.sketch import category_diversity
-
-        return self._wrap(category_diversity(self.df, col, by))
-
-    def trimmed_mean(self, value_col, by=None, alpha=0.1) -> "Babe":
-        from pybabe_spark.operators.sketch import trimmed_mean
-
-        return self._wrap(trimmed_mean(self.df, value_col, by, alpha))
-
-    def srm_check(self, variant_col, expected_ppm,
-                  crit=3.841459) -> "Babe":
-        from pybabe_spark.operators.sketch import srm_check
-
-        return self._wrap(
-            srm_check(self.df, variant_col, expected_ppm, crit)
-        )
-
-    def mann_whitney_u(self, variant_col, value_col, control,
-                       treatment, z_crit=1.959964) -> "Babe":
-        from pybabe_spark.operators.sketch import mann_whitney_u
-
-        return self._wrap(
-            mann_whitney_u(self.df, variant_col, value_col, control,
-                           treatment, z_crit)
-        )
-
-    def ks_test(self, group_col, value_col, group_a, group_b,
-                c_alpha=1.358102) -> "Babe":
-        from pybabe_spark.operators.sketch import ks_test
-
-        return self._wrap(
-            ks_test(self.df, group_col, value_col, group_a, group_b,
-                    c_alpha)
-        )
-
-    def did_estimate(self, arm_col, period_col, value_col, control,
-                     treatment, pre, post, z_crit=1.959964) -> "Babe":
-        from pybabe_spark.operators.cuped import did_estimate
-
-        return self._wrap(
-            did_estimate(self.df, arm_col, period_col, value_col,
-                         control, treatment, pre, post, z_crit)
-        )
-
-    def cuped_adjust(self, metric_col, covariate_col, by=None,
-                     out_col="adjusted") -> "Babe":
-        from pybabe_spark.operators.cuped import cuped_adjust
-
-        return self._wrap(
-            cuped_adjust(self.df, metric_col, covariate_col, by, out_col)
-        )
-
-    def weighted_quantiles(self, col, weight_col, probs, by=None) -> "Babe":
-        from pybabe_spark.operators.sketch import weighted_quantiles
-
-        return self._wrap(
-            weighted_quantiles(self.df, col, weight_col, probs, by)
-        )
-
-    def skyline2d(self, x_col, y_col, buckets=32) -> "Babe":
-        from pybabe_spark.operators.skyline import skyline2d
-
-        return self._wrap(skyline2d(self.df, x_col, y_col, buckets))
-
-    def radius_join(self, other, radius, **kwargs) -> "Babe":
-        from pybabe_spark.operators.spatial import radius_join
-
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(radius_join(self.df, right, radius, **kwargs))
-
-    def nearest_join(self, other, radius, right_id, **kwargs) -> "Babe":
-        from pybabe_spark.operators.spatial import nearest_join
-
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(
-            nearest_join(self.df, right, radius, right_id, **kwargs)
-        )
-
-    def zorder_key(self, cols, bits=16, out_col="zkey") -> "Babe":
-        from pybabe_spark.operators.layout import zorder_key
-
-        return self._wrap(zorder_key(self.df, cols, bits, out_col))
-
-    def zorder_layout(self, cols, bits=16, num_files=32) -> "Babe":
-        from pybabe_spark.operators.layout import zorder_layout
-
-        return self._wrap(zorder_layout(self.df, cols, bits, num_files))
-
-    def ols(self, x_col, y_col, group_cols=None) -> "Babe":
-        from pybabe_spark.operators.regression import ols
-
-        return self._wrap(ols(self.df, x_col, y_col, group_cols))
-
-    def golden_record(self, cluster_col, order_by, value_cols=None) -> "Babe":
-        from pybabe_spark.operators.merge import golden_record
-
-        return self._wrap(
-            golden_record(self.df, cluster_col, order_by, value_cols)
-        )
-
-    def apply_cdc(self, changes, keys, order_by, **kwargs) -> "Babe":
-        from pybabe_spark.operators.cdc import apply_cdc
-
-        feed = changes.df if isinstance(changes, Babe) else changes
-        return self._wrap(
-            apply_cdc(self.df, feed, keys, order_by, **kwargs)
-        )
-
-    def path_counts(self, key_col, ts_col, step_col, k=20, **kwargs) -> "Babe":
-        from pybabe_spark.operators.group import path_counts
-
-        return self._wrap(
-            path_counts(self.df, key_col, ts_col, step_col, k, **kwargs)
-        )
-
-    def ohlc_bars(self, key_col, ts_col, value_col, bucket_seconds,
-                  volume_col=None) -> "Babe":
-        from pybabe_spark.operators.timeseries import ohlc_bars
-
-        return self._wrap(
-            ohlc_bars(self.df, key_col, ts_col, value_col,
-                      bucket_seconds, volume_col)
-        )
-
-    def active_intervals(self, start_col, end_col, bucket_seconds=3600,
-                         max_buckets=4096) -> "Babe":
-        from pybabe_spark.operators.timeseries import active_intervals
-
-        return self._wrap(
-            active_intervals(self.df, start_col, end_col,
-                             bucket_seconds, max_buckets)
-        )
-
-    def seasonal_backtest(self, key_col, ts_col, value_col,
-                          season_rows) -> "Babe":
-        from pybabe_spark.operators.timeseries import seasonal_backtest
-
-        return self._wrap(
-            seasonal_backtest(self.df, key_col, ts_col, value_col,
-                              season_rows)
-        )
-
-    def interarrival_stats(self, key_col, ts_col) -> "Babe":
-        from pybabe_spark.operators.timeseries import interarrival_stats
-
-        return self._wrap(interarrival_stats(self.df, key_col, ts_col))
-
-    def theilsen_slope(self, key_col, ts_col, value_col,
-                       max_points=200) -> "Babe":
-        from pybabe_spark.operators.timeseries import theilsen_slope
-
-        return self._wrap(
-            theilsen_slope(self.df, key_col, ts_col, value_col,
-                           max_points)
-        )
-
-    def ccf(self, key_col, ts_col, x_col, y_col, lags=3) -> "Babe":
-        from pybabe_spark.operators.timeseries import ccf
-
-        return self._wrap(
-            ccf(self.df, key_col, ts_col, x_col, y_col, lags)
-        )
-
-    def acf(self, key_col, ts_col, value_col, lags=3) -> "Babe":
-        from pybabe_spark.operators.timeseries import acf
-
-        return self._wrap(acf(self.df, key_col, ts_col, value_col, lags))
-
-    def mcnemar(self, gold_col, pred_a_col, pred_b_col,
-                chi2_crit=None) -> "Babe":
-        from pybabe_spark.operators.sketch import mcnemar
-
-        return self._wrap(
-            mcnemar(self.df, gold_col, pred_a_col, pred_b_col, chi2_crit)
-        )
-
-    def durbin_watson(self, key_col, ts_col, value_col) -> "Babe":
-        from pybabe_spark.operators.timeseries import durbin_watson
-
-        return self._wrap(
-            durbin_watson(self.df, key_col, ts_col, value_col)
-        )
-
-    def mann_kendall(self, key_col, ts_col, value_col,
-                     bucket_seconds=86400, z_crit=None,
-                     max_periods=2048) -> "Babe":
-        from pybabe_spark.operators.timeseries import mann_kendall
-
-        return self._wrap(
-            mann_kendall(self.df, key_col, ts_col, value_col,
-                         bucket_seconds, z_crit, max_periods)
-        )
-
-    def acf_bucketed(self, key_col, ts_col, value_col,
-                     bucket_seconds=3600, lags=3) -> "Babe":
-        from pybabe_spark.operators.timeseries import acf_bucketed
-
-        return self._wrap(
-            acf_bucketed(self.df, key_col, ts_col, value_col,
-                         bucket_seconds, lags)
-        )
-
-    def cronbach_alpha(self, subject_col, item_col, value_col) -> "Babe":
-        from pybabe_spark.operators.sketch import cronbach_alpha
-
-        return self._wrap(
-            cronbach_alpha(self.df, subject_col, item_col, value_col)
-        )
-
-    def overdispersion(self, group_col, entity_col,
-                       z_crit=None) -> "Babe":
-        from pybabe_spark.operators.sketch import overdispersion
-
-        return self._wrap(
-            overdispersion(self.df, group_col, entity_col, z_crit)
-        )
-
-    def chow_test(self, x_col, y_col, regime_col,
-                  f_crit=None) -> "Babe":
-        from pybabe_spark.operators.regression import chow_test
-
-        return self._wrap(
-            chow_test(self.df, x_col, y_col, regime_col, f_crit)
-        )
-
-    def hosmer_lemeshow(self, score_col, label_col, bins=10,
-                        chi2_crit=None) -> "Babe":
-        from pybabe_spark.operators.classifier import hosmer_lemeshow
-
-        return self._wrap(
-            hosmer_lemeshow(self.df, score_col, label_col, bins,
-                            chi2_crit)
-        )
-
-    def wasserstein_1d(self, group_col, value_col, group_a,
-                       group_b) -> "Babe":
-        from pybabe_spark.operators.sketch import wasserstein_1d
-
-        return self._wrap(
-            wasserstein_1d(self.df, group_col, value_col, group_a,
-                           group_b)
-        )
-
-    def gumbel_maxima(self, key_col, ts_col, value_col,
-                      bucket_seconds=86400,
-                      return_period=100) -> "Babe":
-        from pybabe_spark.operators.timeseries import gumbel_maxima
-
-        return self._wrap(
-            gumbel_maxima(self.df, key_col, ts_col, value_col,
-                          bucket_seconds, return_period)
-        )
-
-    def conformal_threshold(self, score_col, alpha, by=None,
-                            buckets=1024) -> "Babe":
-        from pybabe_spark.operators.sketch import conformal_threshold
-
-        return self._wrap(
-            conformal_threshold(self.df, score_col, alpha, by, buckets)
-        )
-
-    def embedding_covariance(self, vec_col="embedding", dim=64,
-                             top=8) -> "Babe":
-        from pybabe_spark.operators.pca import embedding_covariance
-
-        return self._wrap(
-            embedding_covariance(self.df, vec_col, dim, top)
-        )
-
-    def pca_fit(self, vec_col="embedding", dim=64, top_k=8) -> "Babe":
-        from pybabe_spark.operators.pca import pca_fit
-
-        return self._wrap(pca_fit(self.df, vec_col, dim, top_k))
-
-    def gesd_outliers(self, value_col, max_outliers=3,
-                      lambdas=None) -> "Babe":
-        from pybabe_spark.operators.sketch import gesd_outliers
-
-        return self._wrap(
-            gesd_outliers(self.df, value_col, max_outliers, lambdas)
-        )
-
-    def nemenyi_test(self, block_col, treatment_col, value_col,
-                     q_crit=None, max_treatments=64) -> "Babe":
-        from pybabe_spark.operators.sketch import nemenyi_test
-
-        return self._wrap(
-            nemenyi_test(self.df, block_col, treatment_col, value_col,
-                         q_crit, max_treatments)
-        )
-
-    def pairwise_winrate(self, item_a_col, item_b_col, outcome_col,
-                         z_crit=None) -> "Babe":
-        from pybabe_spark.operators.classifier import pairwise_winrate
-
-        return self._wrap(
-            pairwise_winrate(self.df, item_a_col, item_b_col,
-                             outcome_col, z_crit)
-        )
-
-    def ljung_box(self, key_col, ts_col, value_col, lags=3,
-                  chi2_crit=None) -> "Babe":
-        from pybabe_spark.operators.timeseries import ljung_box
-
-        return self._wrap(
-            ljung_box(self.df, key_col, ts_col, value_col, lags,
-                      chi2_crit)
-        )
-
-    def gap_fill(self, step_seconds, key_col, ts_col, agg_cols, **kwargs) -> "Babe":
-        from pybabe_spark.operators.timeseries import gap_fill
-
-        return self._wrap(
-            gap_fill(self.df, step_seconds, key_col, ts_col, agg_cols, **kwargs)
-        )
-
-    def overlap_join(self, other, left_range, right_range, **kwargs) -> "Babe":
-        from pybabe_spark.operators.join import overlap_join
-
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(
-            overlap_join(self.df, right, left_range, right_range, **kwargs)
-        )
-
-    def fuzzy_join(
-        self, other: "Babe | DataFrame", left_on, right_on, max_dist=1, **kwargs
-    ) -> "Babe":
-        from pybabe_spark.operators.fuzzy import fuzzy_join
-
-        right = other.df if isinstance(other, Babe) else other
-        return self._wrap(
-            fuzzy_join(self.df, right, left_on, right_on, max_dist, **kwargs)
-        )
-
-    def fellegi_sunter(self, fields, lower=0.0, upper=4.0) -> "Babe":
-        from pybabe_spark.operators.fuzzy import fellegi_sunter
-
-        return self._wrap(fellegi_sunter(self.df, fields, lower, upper))
-
-    def fuzzy_pairs(self, id_col, s_col, max_dist=1, **kwargs) -> "Babe":
-        from pybabe_spark.operators.fuzzy import fuzzy_pairs
-
-        return self._wrap(fuzzy_pairs(self.df, id_col, s_col, max_dist, **kwargs))
-
-    # -- set ops ---------------------------------------------------------------
-    def union(self, *others: "Babe | DataFrame") -> "Babe":
-        dfs = [o.df if isinstance(o, Babe) else o for o in others]
-        return self._wrap(ops.union_streams(self.df, *dfs))
-
-    def insert_rows(self, new_rows, before=True) -> "Babe":
-        return self._wrap(ops.insert_rows(self.df, new_rows, before))
-
-    # -- typing & enrichment -------------------------------------------------
-    def typedetect(self, fields=None, **kwargs) -> "Babe":
-        from pybabe_spark.functions.time import typedetect
-
-        return self._wrap(typedetect(self.df, fields, **kwargs))
-
-    def parse_time(self, field, **kwargs) -> "Babe":
-        from pybabe_spark.functions.time import parse_time
-
-        return self._wrap(parse_time(self.df, field, **kwargs))
-
-    def geoip(self, field="ip", **kwargs) -> "Babe":
-        from pybabe_spark.functions.enrich import geoip
-
-        return self._wrap(geoip(self.df, field, **kwargs))
-
-    def geoip_country_code(self, field="ip", **kwargs) -> "Babe":
-        from pybabe_spark.functions.enrich import geoip_country_code
-
-        return self._wrap(geoip_country_code(self.df, field, **kwargs))
-
-    def user_agent(self, field, **kwargs) -> "Babe":
-        from pybabe_spark.functions.enrich import user_agent
-
-        return self._wrap(user_agent(self.df, field, **kwargs))
-
-    def tfidf_top_terms(self, k=3, **kwargs) -> "Babe":
-        from pybabe_spark.operators.tfidf import tfidf_top_terms
-
-        return self._wrap(tfidf_top_terms(self.df, k, **kwargs))
-
-    def bm25_search(self, query_terms, k=10, **kwargs) -> "Babe":
-        from pybabe_spark.operators.tfidf import bm25_search
-
-        return self._wrap(bm25_search(self.df, query_terms, k, **kwargs))
-
-    def build_bm25_index(self, path, **kwargs) -> None:
-        from pybabe_spark.operators.tfidf import build_bm25_index
-
-        build_bm25_index(self.df, path, **kwargs)
-
-    def build_lsh_index(self, path, **kwargs) -> None:
-        from pybabe_spark.operators.similarity import build_lsh_index
-
-        build_lsh_index(self.df, path, **kwargs)
-
-    def append_lsh_index(self, path, **kwargs) -> None:
-        from pybabe_spark.operators.similarity import append_lsh_index
-
-        append_lsh_index(self.df, path, **kwargs)
-
-    def build_ivf_index(self, path, **kwargs) -> None:
-        from pybabe_spark.operators.similarity import build_ivf_index
-
-        build_ivf_index(self.df, path, **kwargs)
-
-    def append_ivf_index(self, path, **kwargs) -> None:
-        from pybabe_spark.operators.similarity import append_ivf_index
-
-        append_ivf_index(self.df, path, **kwargs)
-
-    def pmi_collocations(self, k=20, min_count=5, **kwargs) -> "Babe":
-        from pybabe_spark.operators.collocations import pmi_collocations
-
-        return self._wrap(pmi_collocations(self.df, k, min_count, **kwargs))
-
-    def llr_collocations(self, k=20, min_count=5, **kwargs) -> "Babe":
-        from pybabe_spark.operators.collocations import llr_collocations
-
-        return self._wrap(llr_collocations(self.df, k, min_count, **kwargs))
-
-    def kmeans_fit(self, k=8, iters=5, **kwargs):
-        """Returns the k × dim centroid matrix (driver-side value)."""
-        from pybabe_spark.operators.kmeans import kmeans_fit
-
-        return kmeans_fit(self.df, k, iters, **kwargs)
-
-    def kmeans_assign(self, centroids, **kwargs) -> "Babe":
-        from pybabe_spark.operators.kmeans import kmeans_assign
-
-        return self._wrap(kmeans_assign(self.df, centroids, **kwargs))
-
-    def embedding_stats(self, col="embedding") -> "Babe":
-        from pybabe_spark.operators.similarity import embedding_stats
-
-        return self._wrap(embedding_stats(self.df, col))
-
-    def quantize_embeddings(self, **kwargs) -> "Babe":
-        from pybabe_spark.operators.similarity import quantize_embeddings
-
-        return self._wrap(quantize_embeddings(self.df, **kwargs))
-
-    def profile(self, columns=None, exact=False) -> "Babe":
-        from pybabe_spark.operators.infra import profile
-
-        return self._wrap(profile(self.df, columns, exact=exact))
-
-    def pack_tokens(self, budget, **kwargs) -> "Babe":
-        from pybabe_spark.operators.packing import pack_tokens
-
-        return self._wrap(pack_tokens(self.df, budget, **kwargs))
-
-    def pack_contiguous(self, budget, **kwargs) -> "Babe":
-        from pybabe_spark.operators.packing import pack_contiguous
-
-        return self._wrap(pack_contiguous(self.df, budget, **kwargs))
-
-    def chunk_documents(self, chunk_words, **kwargs) -> "Babe":
-        from pybabe_spark.operators.packing import chunk_documents
-
-        return self._wrap(chunk_documents(self.df, chunk_words, **kwargs))
-
-    def primary_key_detect(self, **kwargs):
-        """Returns the detected key column name (metadata, not a new
-        stream — pybabe/types.py:52-87 sets header.primary_key)."""
-        from pybabe_spark.operators.infra import primary_key_detect
-
-        return primary_key_detect(self.df, **kwargs)
 
     def text_stats(self, field="text", tokenizer=None) -> "Babe":
         """Append n_words / n_tokens / lang_pred / quality columns.
@@ -1937,36 +291,28 @@ class Babe:
             self.df.withColumn(output, T.tokens(field, tokenizer=tokenizer))
         )
 
-    def train_bpe(self, field="text", **kwargs):
-        """Train a corpus BPE tokenizer (operators/bpe.py); returns the
-        TrainedBPETokenizer — pass it back into text_stats / tokenize /
-        pack_tokens / clip as ``tokenizer=``. Training is an action
-        (one word-frequency agg + a bounded TakeOrdered head)."""
-        from pybabe_spark.operators.bpe import train_bpe
+    # -- several operators or streams in one step -----------------------------
+    def union(self, *others: "Babe | DataFrame") -> "Babe":
+        return self._wrap(ops.union_streams(self.df, *map(_df, others)))
 
-        return train_bpe(self.df, text_col=field, **kwargs)
+    def rank_fuse(self, *others: "Babe | DataFrame", k=10, **kwargs) -> "Babe":
+        from pybabe_spark.operators.fusion import rank_fuse
 
-    def minhash_lsh_pairs(self, id_col, text_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import minhash_lsh_pairs
+        return self._wrap(
+            rank_fuse([self.df, *map(_df, others)], k=k, **kwargs)
+        )
 
-        return self._wrap(minhash_lsh_pairs(self.df, id_col, text_col, **kwargs))
+    def train_test_split(self, key, test_fraction=0.1) -> tuple["Babe", "Babe"]:
+        from pybabe_spark.operators.sampling import train_test_split
 
-    def segment_dedup(self, id_col, text_col, **kwargs) -> "Babe":
-        from pybabe_spark.operators.dedup_scale import segment_dedup
+        train, test = train_test_split(self.df, key, test_fraction)
+        return self._wrap(train), self._wrap(test)
 
-        return self._wrap(segment_dedup(self.df, id_col, text_col, **kwargs))
+    def quantiles(self, column, probs, by=None, approx=False, **kw) -> "Babe":
+        from pybabe_spark.operators.sketch import quantiles, quantiles_approx
 
-    def dup_clusters(self, pairs: "Babe | DataFrame", **kwargs) -> "Babe":
-        from pybabe_spark.operators.graph import dup_clusters
-
-        other = pairs.df if isinstance(pairs, Babe) else pairs
-        return self._wrap(dup_clusters(self.df, other, **kwargs))
-
-    def best_of_clusters(self, pairs: "Babe | DataFrame", **kwargs) -> "Babe":
-        from pybabe_spark.operators.graph import best_of_clusters
-
-        other = pairs.df if isinstance(pairs, Babe) else pairs
-        return self._wrap(best_of_clusters(self.df, other, **kwargs))
+        fn = quantiles_approx if approx else quantiles
+        return self._wrap(fn(self.df, column, probs, by, **kw))
 
     def ann_topk(self, queries: "Babe | DataFrame", k=10,
                  method="brute", **kwargs) -> "Babe":
@@ -1976,8 +322,110 @@ class Babe:
         from pybabe_spark.operators import similarity as S
 
         fn = {"brute": S.ann_brute_force, "lsh": S.ann_lsh, "ivf": S.ann_ivf}[method]
-        other = queries.df if isinstance(queries, Babe) else queries
-        return self._wrap(fn(self.df, other, k=k, **kwargs))
+        return self._wrap(fn(self.df, _df(queries), k=k, **kwargs))
+
+    def perplexity_filter(
+        self, max_ppl, lm=None, id_col="doc_id", text_col="text", **kwargs
+    ) -> "Babe":
+        """CCNet-style LM quality cut: score against ``lm`` (default: a
+        bigram LM trained on this corpus itself) and keep docs at or
+        below ``max_ppl``."""
+        from pybabe_spark.operators.lm import perplexity_filter, train_bigram_lm
+
+        model = lm or train_bigram_lm(self.df, text_col, id_col)
+        return self._wrap(
+            perplexity_filter(self.df, model, max_ppl, id_col, text_col, **kwargs)
+        )
+
+    def quality_filter(
+        self, labeled: "Babe | DataFrame", label_col, min_prob=0.5,
+        id_col="doc_id", text_col="text", **kwargs
+    ) -> "Babe":
+        """fastText-style quality cut: train a logistic classifier on
+        the ``labeled`` corpus's hashed-bigram features, keep docs this
+        corpus scores at or above ``min_prob``."""
+        from pybabe_spark.operators.classifier import (
+            quality_classifier_filter,
+            train_quality_classifier,
+        )
+
+        w = train_quality_classifier(
+            _df(labeled), label_col, id_col, text_col, **kwargs
+        )
+        buckets = kwargs.get("buckets", 4096)
+        return self._wrap(
+            quality_classifier_filter(
+                self.df, w, min_prob, id_col, text_col, buckets
+            )
+        )
+
+    def dsir_select(
+        self, target: "Babe | DataFrame", k, id_col="doc_id",
+        text_col="text", seed=0, **kwargs
+    ) -> "Babe":
+        """DSIR: importance-weight this corpus against ``target`` and
+        Gumbel-top-k resample the k most target-like documents."""
+        from pybabe_spark.operators.dsir import dsir_log_weights, dsir_resample
+
+        w = dsir_log_weights(self.df, _df(target), id_col, text_col, **kwargs)
+        picked = dsir_resample(w, k, id_col, seed=seed).select(id_col)
+        return self._wrap(self.df.join(picked, id_col, "semi"))
+
+    # -- results that are not a new stream ------------------------------------
+    def stream_activity_grain(self, key_col, ts_col, store_path,
+                              checkpoint, **kwargs):
+        from pybabe_spark.streaming.ops import stream_activity_grain
+
+        return stream_activity_grain(
+            self.df, key_col, ts_col, store_path, checkpoint, **kwargs
+        )
+
+    def build_bm25_index(self, path, **kwargs) -> None:
+        from pybabe_spark.operators.tfidf import build_bm25_index
+
+        build_bm25_index(self.df, path, **kwargs)
+
+    def build_lsh_index(self, path, **kwargs) -> None:
+        from pybabe_spark.operators.similarity import build_lsh_index
+
+        build_lsh_index(self.df, path, **kwargs)
+
+    def append_lsh_index(self, path, **kwargs) -> None:
+        from pybabe_spark.operators.similarity import append_lsh_index
+
+        append_lsh_index(self.df, path, **kwargs)
+
+    def build_ivf_index(self, path, **kwargs) -> None:
+        from pybabe_spark.operators.similarity import build_ivf_index
+
+        build_ivf_index(self.df, path, **kwargs)
+
+    def append_ivf_index(self, path, **kwargs) -> None:
+        from pybabe_spark.operators.similarity import append_ivf_index
+
+        append_ivf_index(self.df, path, **kwargs)
+
+    def kmeans_fit(self, k=8, iters=5, **kwargs):
+        """Returns the k × dim centroid matrix (driver-side value)."""
+        from pybabe_spark.operators.kmeans import kmeans_fit
+
+        return kmeans_fit(self.df, k, iters, **kwargs)
+
+    def primary_key_detect(self, **kwargs):
+        """Returns the detected key column name (metadata, not a new
+        stream — pybabe/types.py:52-87 sets header.primary_key)."""
+        from pybabe_spark.operators.infra import primary_key_detect
+
+        return primary_key_detect(self.df, **kwargs)
+
+    def train_bpe(self, field="text", **kwargs):
+        """Train a corpus BPE tokenizer (operators/bpe.py); returns the
+        TrainedBPETokenizer — pass it back into text_stats / tokenize /
+        pack_tokens / clip as ``tokenizer=``. Training is an action
+        (one word-frequency agg + a bounded TakeOrdered head)."""
+        from pybabe_spark.operators.bpe import train_bpe
+
+        return train_bpe(self.df, text_col=field, **kwargs)
 
     def lint(self) -> list:
         """Scale-smell findings for the current plan (plans/lint.py)."""
@@ -2023,3 +471,165 @@ class Babe:
 
     def count(self) -> int:
         return self.df.count()
+
+
+#: The chain methods that only forward, one entry per operator module:
+#: ``name`` binds ``Babe.name`` to the module's ``name``, ``name=op`` to
+#: its ``op``.
+_FORWARDS = {
+    "pybabe_spark.functions.enrich": """
+        geoip geoip_country_code k_anonymity l_diversity pseudonymize
+        user_agent""",
+    "pybabe_spark.functions.json_ops": """
+        json_flatten""",
+    "pybabe_spark.functions.phonetic": """
+        phonetic_pairs""",
+    "pybabe_spark.functions.time": """
+        parse_time typedetect""",
+    "pybabe_spark.operators": """
+        dedup filter=filter_rows filter_by_regexp filter_columns
+        filter_out_null_values filter_values group_all groupBy=group head
+        insert_rows maxN=max_n minN=min_n pivot rename replace=replace_cell
+        replace_in_string skip sort split=split_rows transpose
+        windowMap=window_map""",
+    "pybabe_spark.operators.anomaly": """
+        cusum_alarms mad_anomalies seasonal_zscore zscore_anomalies""",
+    "pybabe_spark.operators.attribution": """
+        attribute_conversions""",
+    "pybabe_spark.operators.cdc": """
+        apply_cdc""",
+    "pybabe_spark.operators.classifier": """
+        brier_score calibration_bins classification_report
+        disparate_impact ece equalized_odds gains_table hosmer_lemeshow
+        mcc pairwise_winrate pr_auc roc_auc youden_threshold""",
+    "pybabe_spark.operators.collocations": """
+        association_rules frequent_pairs llr_collocations pmi_collocations""",
+    "pybabe_spark.operators.cuped": """
+        cuped_adjust did_estimate""",
+    "pybabe_spark.operators.decontam": """
+        coverage_dedup decontaminate novelty_score strip_boilerplate_lines
+        strip_duplicated_spans""",
+    "pybabe_spark.operators.dedup_scale": """
+        containment_pairs hamming_neardup=hamming_neardup_pairs
+        lsh_candidate_calibration minhash_lsh_pairs near_dedup=near_dedup_keep
+        near_dedup_against_stored segment_dedup
+        simhash_neardup=simhash_neardup_pairs source_overlap
+        winnow_fingerprints""",
+    "pybabe_spark.operators.dsir": """
+        feature_hash_encode""",
+    "pybabe_spark.operators.fuzzy": """
+        fellegi_sunter fuzzy_pairs""",
+    "pybabe_spark.operators.graph": """
+        adamic_adar assortativity best_of_clusters bfs_distances
+        clustering_coefficient dup_clusters jaccard_link_prediction k_core
+        pagerank propagate_labels sssp triangle_count""",
+    "pybabe_spark.operators.group": """
+        cube=cube_agg funnel path_counts sequence_count transition_matrix""",
+    "pybabe_spark.operators.infra": """
+        foreign_key_check profile""",
+    "pybabe_spark.operators.kmeans": """
+        kmeans_assign""",
+    "pybabe_spark.operators.layout": """
+        zorder_key zorder_layout""",
+    "pybabe_spark.operators.merge": """
+        dedup_against golden_record upsert""",
+    "pybabe_spark.operators.packing": """
+        chunk_documents clip=clip_documents pack_contiguous pack_tokens""",
+    "pybabe_spark.operators.pca": """
+        embedding_covariance pca_fit""",
+    "pybabe_spark.operators.ranking": """
+        ranking_metrics""",
+    "pybabe_spark.operators.recommend": """
+        item_neighbors""",
+    "pybabe_spark.operators.regression": """
+        breusch_pagan chow_test ols""",
+    "pybabe_spark.operators.relational": """
+        throttle""",
+    "pybabe_spark.operators.rfm": """
+        rfm_segments""",
+    "pybabe_spark.operators.sampling": """
+        curriculum_order global_shuffle sample=hash_sample
+        stratified_sample target_encode temperature_resample
+        token_budget_sample weighted_sample""",
+    "pybabe_spark.operators.scd": """
+        scd2=scd2_from_changelog scd2_upsert""",
+    "pybabe_spark.operators.similarity": """
+        centroid_drift embedding_stats hard_negatives=ann_hard_negatives
+        pq_encode quantize_embeddings semantic_dedup""",
+    "pybabe_spark.operators.sketch": """
+        ab_test ab_test_by anova_f bartlett_test bootstrap_mean_ci
+        brown_forsythe category_diversity chi2_independence cliffs_delta
+        cmh_test cochran_armitage_trend cochran_q cohens_kappa
+        conformal_threshold corr_matrix cramers_v cronbach_alpha
+        dunn_test eb_shrink_rates effect_size fleiss_kappa friedman_test
+        g_test gesd_outliers grubbs_test herfindahl_index jarque_bera
+        jonckheere_terpstra kendall_tau_b kruskal_wallis ks_test
+        mann_whitney_u mcnemar mean_test mood_median_test
+        mutual_information nemenyi_test odds_ratio overdispersion
+        page_trend_test partial_corr price_index proportion_ci
+        ratio_metric_ci required_sample_size spearman_corr srm_check
+        trend_test trimmed_mean tukey_hsd wasserstein_1d
+        weighted_quantiles""",
+    "pybabe_spark.operators.skew": """
+        gini lorenz_curve pareto_report theil_index""",
+    "pybabe_spark.operators.skyline": """
+        skyline2d""",
+    "pybabe_spark.operators.tfidf": """
+        bm25_search tfidf_top_terms vocab_overlap zipf_fit""",
+    "pybabe_spark.operators.timeseries": """
+        acf acf_bucketed active_intervals bollinger_bands ccf
+        cohort_values dickey_fuller durbin_watson ewma=ewma_smooth
+        forecast_backtest gap_fill granger_causality growth_accounting
+        gumbel_maxima holt_linear interarrival_stats km_quantiles
+        km_survival ljung_box logrank_test mann_kendall max_drawdown
+        nelson_aalen ohlc_bars period_over_period pettitt_test
+        retention_cohorts rmst runs_test seasonal_backtest
+        seasonal_decompose seasonal_decompose_mult session_stats
+        sessionize_batch=sessionize snaive_forecast stickiness streaks
+        theilsen_slope time_weighted_avg turning_points_test""",
+    "pybabe_spark.operators.udf_ops": """
+        bulkMapTo=bulk_map_to flatMap=flat_map iterate=map_to map_filter
+        mapTo=map_to""",
+    "pybabe_spark.operators.validate": """
+        impute population_stability quarantine validate""",
+    "pybabe_spark.streaming.ops": """
+        running_totals sessionize stream_group_heavy_hitters""",
+}
+
+
+def _df(x):
+    """``x``'s DataFrame if ``x`` is a :class:`Babe`, else ``x``."""
+    return x.df if isinstance(x, Babe) else x
+
+
+def _forwarder(name, op):
+    """The chain method ``name``: ``op`` over this stream's DataFrame
+    and the call's arguments (each ``Babe`` one unwrapped), re-wrapped
+    with this stream's partition fields."""
+
+    def method(self, *args, **kwargs):
+        args = [_df(a) for a in args]
+        kwargs = {k: _df(v) for k, v in kwargs.items()}
+        return self._wrap(op(self.df, *args, **kwargs))
+
+    sig = inspect.signature(op)
+    this = inspect.Parameter("self", inspect.Parameter.POSITIONAL_OR_KEYWORD)
+    method.__signature__ = sig.replace(
+        parameters=[this, *list(sig.parameters.values())[1:]],
+        return_annotation="Babe",
+    )
+    method.__name__, method.__qualname__ = name, f"Babe.{name}"
+    method.__doc__, method.__wrapped__ = op.__doc__, op
+    return method
+
+
+def _install(cls, table):
+    """Bind every ``table`` entry on ``cls`` as a :func:`_forwarder`."""
+    for module, names in table.items():
+        mod = importlib.import_module(module)
+        for entry in names.split():
+            name, _, op = entry.partition("=")
+            setattr(cls, name, _forwarder(name, getattr(mod, op or name)))
+
+
+_install(Babe, _FORWARDS)

@@ -917,6 +917,7 @@ def q_scd2_upsert(spark, sf_dir):
     the incremental path must be value-identical to recomputing from
     the whole changelog, which is exactly the operator's exactness
     contract for append-only batches."""
+    from pybabe_spark.operators._util import lazy_persist
     from pybabe_spark.operators.scd import scd2_from_changelog, scd2_upsert
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -926,9 +927,9 @@ def q_scd2_upsert(spark, sf_dir):
     # lazy persist: in real use history is READ from storage; built
     # in-plan it would otherwise be re-collapsed once per consumer
     # (anti-join, span guard, re-expansion — 7 source scans measured)
-    hist = scd2_from_changelog(
+    hist = lazy_persist(scd2_from_changelog(
         ev.filter(F.col("ts") < cutoff), "user_id", "ts", ["event_type"]
-    ).persist()
+    ))
     return scd2_upsert(
         hist,
         ev.filter(F.col("ts") >= cutoff),
@@ -4026,11 +4027,12 @@ def q_overlap_join(spark, sf_dir):
     emitted exactly once via the canonical later-start cell (NO dedup
     shuffle); exact integer overlap microseconds. The oracle is the
     raw inequality-join definition."""
+    from pybabe_spark.operators._util import lazy_persist
     from pybabe_spark.operators.join import overlap_join
     from pybabe_spark.operators.timeseries import session_stats
 
     ev = read_table(spark, sf_dir, "events")
-    sess = session_stats(ev, 1800, order_cols=["event_id"]).persist()
+    sess = lazy_persist(session_stats(ev, 1800, order_cols=["event_id"]))
     left = sess.filter(F.col("user_id") % 2 == 0).select(
         F.col("user_id").alias("ua"),
         F.col("session_id").alias("sa"),

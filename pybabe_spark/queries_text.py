@@ -888,6 +888,7 @@ def q_quality_classifier_eval(spark, sf_dir):
     """Train on the ¾ split, score the held-out ¼, certify held-out
     ranking quality (AUC ≥ 0.6) as a boolean — the driver's check that
     the classifier generalizes to documents it never saw."""
+    from pybabe_spark.operators._util import lazy_persist
     from pybabe_spark.operators.classifier import (
         score_quality,
         train_quality_classifier,
@@ -895,11 +896,12 @@ def q_quality_classifier_eval(spark, sf_dir):
     from pybabe_spark.operators.dsir import doc_feature_profile
     from pybabe_spark.operators.sampling import hash_bucket
 
-    docs = read_table(spark, sf_dir, "documents").withColumn(
+    # train/test splits + scoring would otherwise each re-read and
+    # re-label the corpus (15 scans measured)
+    docs = lazy_persist(read_table(spark, sf_dir, "documents").withColumn(
         "__lbl",
         F.array_contains(F.split("text", " "), "spark").cast("int"),
-    ).persist()  # train/test splits + scoring would otherwise each
-    # re-read and re-label the corpus (15 scans measured)
+    ))
     held = hash_bucket("doc_id") % 4 == 0
     train, test = docs.filter(~held), docs.filter(held)
     prof = doc_feature_profile(train, buckets=4096).localCheckpoint(eager=True)

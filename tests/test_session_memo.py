@@ -1,15 +1,19 @@
 """The session memo primitive (queries.session_memo), the registry's
-use of it, and the cache release of the eager VALUES-literal finishes
-and of the iterative graph operators."""
+use of it, and the cache release of the eager VALUES-literal finishes,
+of the iterative graph operators and of the lazy caches that
+``unpersist_tracked`` releases."""
 
+import ast
 import gc
 import inspect
 import os
 import re
+from pathlib import Path
 
 import pytest
 
-from pybabe_spark.operators._util import _TRACKED_PERSISTS
+import pybabe_spark
+from pybabe_spark.operators._util import _TRACKED_PERSISTS, unpersist_tracked
 from pybabe_spark.queries import (
     REGISTRY,
     SESSION_MEMOS,
@@ -132,9 +136,53 @@ def test_iterative_graph_key_releases_its_edge_cache(
     assert {i for i, local in left.items() if not local} == set()
 
 
-def _persists_left(spark, sf_dir, key, tmp_path):
+@pytest.mark.parametrize(
+    "key",
+    [
+        "fk_check_orders_customer",
+        "pareto_suppliers_revenue",
+        "pagerank_trade_network",
+    ],
+)
+def test_lazy_cache_is_released_by_unpersist_tracked(
+    spark, sf_dir, key, tmp_path
+):
+    """A cache the returned plan reads goes through lazy_persist, so
+    ``unpersist_tracked()`` after the action leaves none of it."""
+    assert _persists_left(spark, sf_dir, key, tmp_path, release=True) == {}
+
+
+def test_no_cache_call_outside_the_cache_helpers():
+    """Operators and query builders cache only through ``_util``'s
+    ``lazy_persist`` / ``pinned``; the two user-facing ``tee``s are the
+    only other ``.persist()`` / ``.cache()`` calls."""
+    root = Path(pybabe_spark.__file__).parent
+    allowed = {("plans/facade.py", "tee"), ("operators/infra.py", "tee")}
+    found = []
+
+    def visit(node, path, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache")
+            and (path, fn) not in allowed
+        ):
+            found.append(f"{path}:{node.lineno} ({fn})")
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, fn)
+
+    for f in sorted(root.rglob("*.py")):
+        path = f.relative_to(root).as_posix()
+        if path != "operators/_util.py":
+            visit(ast.parse(f.read_text()), path, None)
+    assert not found, f"raw .persist()/.cache() calls: {found}"
+
+
+def _persists_left(spark, sf_dir, key, tmp_path, release=False):
     """The persistent RDDs that one ``count()`` of ``key`` adds and
-    leaves behind, as ``{rdd id: is locally checkpointed}``."""
+    leaves behind, as ``{rdd id: is locally checkpointed}``; with
+    ``release``, counted after ``unpersist_tracked()``."""
     # a fresh path to the same data: a session memo misses (the build
     # runs), and no cache an earlier test left can absorb a new persist
     data = tmp_path / "data"
@@ -145,6 +193,8 @@ def _persists_left(spark, sf_dir, key, tmp_path):
     # earlier tests left while this action runs
     before = set(rdds().keySet())
     all_queries()[key](spark, str(data)).count()
+    if release:
+        unpersist_tracked()
     live = rdds()
     return {
         i: live.get(i).rdd().isLocallyCheckpointed()

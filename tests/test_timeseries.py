@@ -170,6 +170,40 @@ def test_gap_fill_linear_edges_flat(spark):
     assert by == {0: 4.0, 1: 4.0, 2: 6.0, 3: 8.0, 4: 8.0}
 
 
+def test_gap_fill_linear_tie_is_exact_on_both_engines(spark):
+    """71 → 73.6225 over 8 buckets: the first step lands on the 6 dp
+    tie 71.3278125. The IEEE quotient cast to DECIMAL(18,6) gave
+    71.327813 on Spark and 71.327812 on DuckDB 1.0; the exact
+    micro-unit fill rounds it half up on both."""
+    import duckdb
+
+    from pybabe_spark.operators.timeseries import gap_fill_sql
+
+    rows = [(1, dt.datetime(2024, 1, 1, 0, 0, 0), 71.0),
+            (1, dt.datetime(2024, 1, 1, 0, 8, 0), 73.6225)]
+    df = spark.createDataFrame(rows, "user_id bigint, ts timestamp, value double")
+    got = [
+        r["value"] for r in gap_fill(
+            df, 60, "user_id", "ts", {"value": "sum"}, fill="linear"
+        ).orderBy("bucket").collect()
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE ev AS SELECT * FROM (VALUES"
+        " (1::BIGINT, TIMESTAMP '2024-01-01 00:00:00', 71.0::DOUBLE),"
+        " (1::BIGINT, TIMESTAMP '2024-01-01 00:08:00', 73.6225::DOUBLE))"
+        " t(user_id, ts, value)"
+    )
+    sql = gap_fill_sql("ev", 60, "user_id", "ts", {"value": "sum"}, fill="linear")
+    oracle = [r[0] for r in con.execute(
+        f"SELECT value FROM ({sql}) ORDER BY bucket"
+    ).fetchall()]
+    # step k of 8: 71 + 2.6225·k/8, half up in micro-units
+    hand = [71.0, 71.327813, 71.655625, 71.983438, 72.31125,
+            72.639063, 72.966875, 73.294688, 73.6225]
+    assert got == oracle == hand
+
+
 def test_gap_fill_count_agg(spark):
     df = spark.createDataFrame(
         [
@@ -631,6 +665,34 @@ def test_interarrival_single_gap_and_singletons(spark):
     assert got[1].n_gaps == 1
     assert got[1].mean_gap_s == 60.0
     assert got[1].cv is None and got[1].burstiness is None
+
+
+def test_interarrival_mean_tie_is_exact_on_both_engines(spark):
+    """Two gaps summing to 553561760661 µs: the mean 276780880330.5 µs
+    is a 6 dp tie in seconds, which the IEEE mean cast to DECIMAL(18,6)
+    rounded to .880331 on Spark and .880330 on DuckDB 1.0. The
+    integral mean ``(2s + n) div 2n`` rounds it half up on both."""
+    import duckdb
+
+    from pybabe_spark.operators.timeseries import (
+        interarrival_stats,
+        interarrival_stats_sql,
+    )
+
+    ts = ["2024-01-01 00:00:00", "2024-01-01 00:00:01",
+          "2024-01-07 09:46:01.760661"]
+    got = interarrival_stats(
+        _ev(spark, [(1, t) for t in ts]), "k", "t"
+    ).collect()[0]["mean_gap_s"]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE ev AS SELECT 1 AS k, CAST(t AS TIMESTAMP) AS t"
+        f" FROM (VALUES {', '.join(f'({t!r})' for t in ts)}) v(t)"
+    )
+    oracle = con.execute(
+        f"SELECT mean_gap_s FROM ({interarrival_stats_sql('ev', 'k', 't')})"
+    ).fetchone()[0]
+    assert got == oracle == 276780.880331
 
 
 # -- cohort_values (operators/timeseries.py) -------------------------------------
